@@ -1,34 +1,42 @@
-"""polars_text_spark benchmark: one workload, one seed, one Spark session.
+"""polars_text_spark benchmark: one workload, one seed, one Spark JVM.
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload near_dup --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload near_dup --seed 1 --seconds 8 --trace 0
 
 A workload (perfbench/workloads.json) is a fixed list of registry
 queries (``__spark_entry__.queries()``), plus, for ``near_dup`` and
-``store_lifecycle``, one ``stream_into_minhash_store(available_now=True)``
-drain of seeded shards. Each step is timed from outside in two parts: ``build``, the
+``store_lifecycle``, a ``stream_into_minhash_store(available_now=True)``
+drain. Each step is timed from outside in two parts: ``build``, the
 call that returns the DataFrame (eager store writes, meta reads, probe
 collects), and ``run``, its materialisation to the ``noop`` sink.
 
-A run is: start a ``local[nproc]`` session, generate the inputs from
-the seed, make one untimed warm-up pass that also collects every
-output, add untimed passes until the warm-up has lasted 30 s, then
-repeat timed passes until ``--seconds`` have elapsed.
-Outputs of the warm-up pass are hash-matched against the DuckDB
-oracles after the timed region.
+The stream is an incremental ingest: before every pass (untimed) one
+new seeded shard lands in the watched directory, and the pass's drain
+appends it to the session's MinHash store. A session's first pass
+lands two shards, bootstrapping the store and appending once.
 
-Every job carries a ``<pass>|<step>|<build|run>`` job group, which is
-how jobs are counted. ``--trace 0`` prints the end-to-end metrics.
-``--trace 1`` spends half of ``--seconds`` on untraced passes, then
-restarts the session with the Spark event log on and spends the other
-half on traced passes, after one untimed pass; it prints the per-layer metrics parsed from
-that log, the tracing overhead (traced minus untraced ``wall_s``) and
+A set-up is: start a fresh ``local[nproc]`` session, generate the
+inputs from the seed into a fresh directory (perfbench/gen_inputs.py),
+and run one pass that also collects every output. A run makes SETUPS
+set-ups one after another in one JVM and reports their median time as
+``setup_s``; the first also pays for starting the JVM, and the later
+ones are the warm-up of the timed passes. ``--trace 0`` then repeats
+timed passes in the last set-up's session until ``--seconds`` have
+elapsed and reports the median CPU seconds of a pass (``cpu_s``).
+``--trace 1`` does the same untraced, then starts one more session with
+the Spark event log on, makes one untimed pass and repeats traced
+passes for ``--seconds``; it prints the per-layer metrics parsed from
+the log, the tracing overhead (traced minus untraced ``wall_s``) and
 writes the spans to ``.perfbench/spans-<workload>-<seed>.json``.
+
+After the timed region, the outputs of the last set-up are hash-matched
+against the DuckDB oracles, and each session's stream store must hold
+every document of the shards it drained.
 
 Human-readable lines go to stdout first; the last stdout line is one
 JSON object ``{"correct", "attempted", "failed", "metrics"}``.
-Everything the run writes (inputs, warehouse, checkpoints, Spark local
+Everything the run writes (inputs, warehouses, checkpoints, Spark local
 dirs, temp files) lives under ``.perfbench/`` in the checkout and the
 per-run part is removed at exit.
 """
@@ -48,15 +56,54 @@ from eventlog import STREAM
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 SPEC_PATH = os.path.join(HERE, "workloads.json")
-WARMUP_S = 30.0
+# Set-ups per run. Besides giving setup_s a median, the later set-ups
+# warm the JVM: on the first two passes after a cold one, wall and CPU
+# time are still 10-50% above those of later passes.
+SETUPS = 3
 
 
 def _median(xs):
     return statistics.median(xs) if xs else 0.0
 
 
+def _tree_cpu_s(root_pid: int) -> float:
+    """CPU seconds (user + system, reaped children included) of this
+    process plus ``root_pid`` and its descendants: the driver, the
+    Spark JVM and its Python workers. Steal time is not charged to a
+    process, so neighbours that take the host's CPUs away move this
+    less than they move wall time."""
+    tick = os.sysconf("SC_CLK_TCK")
+    stats = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue  # exited while listing
+        stats[int(entry)] = (int(fields[1]), sum(map(int, fields[11:15])))
+    children: dict = {}
+    for pid, (ppid, _) in stats.items():
+        children.setdefault(ppid, []).append(pid)
+    total, todo = 0, [root_pid]
+    while todo:
+        pid = todo.pop()
+        total += stats.get(pid, (0, 0))[1]
+        todo.extend(children.get(pid, ()))
+    own = os.times()
+    return total / tick + own.user + own.system
+
+
+def _dir_bytes(path: str) -> int:
+    total = 0
+    for dirpath, _, files in os.walk(path):
+        total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
+    return total
+
+
 class Run:
-    """One benchmark process: directories, inputs, session, steps."""
+    """One benchmark process: directories, inputs, sessions, steps."""
 
     def __init__(self, root: str, workload: str, seed: int, spec: dict):
         self.root = root
@@ -66,13 +113,10 @@ class Run:
         self.stream = spec["stream"]
         self.base = os.path.join(root, ".perfbench")
         self.dir = os.path.join(self.base, f"run-{workload}-{seed}-{os.getpid()}")
-        self.input_dir = os.path.join(self.dir, "input")
-        self.warehouse = os.path.join(self.dir, "warehouse")
-        self.checkpoints = os.path.join(self.dir, "checkpoints")
         self.eventlog = os.path.join(self.dir, "eventlog")
         self.tmp = os.path.join(self.dir, "tmp")
         local = os.path.join(self.dir, "local")
-        for d in (self.warehouse, self.checkpoints, self.eventlog, self.tmp, local):
+        for d in (self.eventlog, self.tmp, local):
             os.makedirs(d, exist_ok=True)
         # Isolation: every file Spark, the JVM and Python workers write
         # lands under this run's directory; the package is importable
@@ -90,15 +134,31 @@ class Run:
             del os.environ[k]
         self.cores = int(os.environ["SPARK_GRAFT_CPUS"])
         self.spark = None
+        self.sessions = 0
         self.inputs: dict = {}
         self.errors: list[str] = []
-        self.last_progress: list = []
-        self._stream_n = 0
+        self.store_checks: list[tuple] = []
 
     # -- session --------------------------------------------------------
     def start_session(self, traced: bool) -> None:
+        """A fresh SparkSession with its own warehouse (the catalog is
+        in-memory, so stores do not outlive their session), its own
+        stream (store name, checkpoint, watched shard directory) and
+        its own copy of the seeded inputs (the engine memoises scans
+        by path)."""
+        from gen_inputs import generate
         from polars_text_spark.session import get_spark
 
+        self.sessions += 1
+        sdir = os.path.join(self.dir, f"session{self.sessions}")
+        self.input_dir = os.path.join(sdir, "input")
+        self.warehouse = os.path.join(sdir, "warehouse")
+        self.stream_name = f"pbstream{self.sessions}"
+        self.checkpoint = os.path.join(sdir, "checkpoint")
+        self.shard_dir = os.path.join(sdir, "shards")
+        self.shards = 0
+        self.shard_bytes = 0  # the last landed shard's
+        self.drained_bytes = 0  # every landed shard's
         conf = {
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
@@ -115,6 +175,7 @@ class Run:
             )
         self.spark = get_spark(f"perfbench-{self.workload}", extra_conf=conf)
         self.spark.sparkContext.setLogLevel("ERROR")
+        self.inputs = generate(self.input_dir, self.seed)
 
     def stop_session(self) -> None:
         if self.spark is not None:
@@ -166,46 +227,49 @@ class Run:
 
             out.append((name, build, run))
         if self.stream:
-            out.append((STREAM, self._stream_drain, self._stream_check))
+            out.append((STREAM, self._stream_drain, lambda _query, _collect: None))
         return out
 
+    def _land_shard(self) -> None:
+        from gen_inputs import write_shard
+
+        self.shard_bytes = write_shard(
+            self.shard_dir, self.seed, self.shards, self.inputs["n_docs"]
+        )
+        self.drained_bytes += self.shard_bytes
+        self.shards += 1
+
     def _stream_drain(self):
-        """Start the stream and wait until it has drained every shard:
-        the micro-batches are driver-side store writes, so the whole
-        drain is the step's build; its run is empty."""
+        """Start the stream on the session's checkpoint and wait until it
+        has drained the newly landed shard: the micro-batch is a
+        driver-side store write, so the whole drain is the step's
+        build; its run is empty. Returns the query."""
         from polars_text_spark.streaming.ingest import stream_into_minhash_store
 
-        self._stream_n += 1
-        name = f"pbstream{self._stream_n}"
         docs = (
             self.spark.readStream.schema("doc_id BIGINT, text STRING")
             .option("maxFilesPerTrigger", 1)
-            .parquet(self.inputs["shard_dir"])
+            .parquet(self.shard_dir)
         )
         query = stream_into_minhash_store(
-            docs,
-            name,
-            checkpoint_dir=os.path.join(self.checkpoints, name),
-            available_now=True,
+            docs, self.stream_name, checkpoint_dir=self.checkpoint, available_now=True
         )
         query.awaitTermination()
         if query.exception() is not None:
             raise RuntimeError(f"stream failed: {query.exception()}")
-        self.last_progress = [p for p in query.recentProgress if p["numInputRows"] > 0]
-        return name
+        return query
 
-    def _stream_check(self, name, collect):
-        if not collect:
-            return None
+    def check_store(self) -> None:
+        """Untimed: the session's store must hold every drained document
+        once. Records (session, rows, distinct ids, expected)."""
+        if not self.stream or self.shards == 0:
+            return
+        from gen_inputs import PARAMS
         from polars_text_spark.operators.dedup_store import _phys
 
-        ids = self.spark.table(_phys(self.spark, name, "shingles")).select("id")
-        return [(ids.count(), ids.distinct().count())]
-
-    def _drop_stream_stores(self) -> None:
-        for t in self.spark.catalog.listTables():
-            if t.name.startswith("pbstream"):
-                self.spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
+        ids = self.spark.table(_phys(self.spark, self.stream_name, "shingles")).select("id")
+        expected = self.shards * PARAMS["stream_docs_per_shard"]
+        self.store_checks.append((self.sessions, ids.count(), ids.distinct().count(), expected))
 
     # -- passes ---------------------------------------------------------
     def one_pass(self, tag: str, *, collect: bool = False):
@@ -216,12 +280,16 @@ class Run:
         sc = self.spark.sparkContext
         tracker = sc.statusTracker()
         timings, outputs, failed, jobs = {}, {}, 0, 0
-        self.last_progress = []
-        spans = []
+        progress, spans = [], []
         if self.stream:
-            # untimed: the previous pass's stream store goes before this
-            # pass drains into a fresh one
-            self._drop_stream_stores()
+            # untimed. A session's first drain takes two shards: one
+            # bootstraps the store and one is appended, so the append
+            # path has run before any timed pass (its first run is
+            # ~30% slower in CPU time).
+            for _ in range(1 if self.shards else 2):
+                self._land_shard()
+        jvm = sc._gateway.proc.pid
+        cpu0 = _tree_cpu_s(jvm)
         for name, build, run in self.steps():
             groups = [f"{tag}|{name}|build", f"{tag}|{name}|run"]
             try:
@@ -234,7 +302,9 @@ class Run:
                 t2, e2 = time.perf_counter(), time.time()
                 timings[name] = (t1 - t0, t2 - t1)
                 spans.append((name, e0, e1, e2))
-                if collect:
+                if name == STREAM:
+                    progress = [p for p in obj.recentProgress if p["numInputRows"] > 0]
+                elif collect:
                     outputs[name] = rows
             except Exception as exc:  # noqa: BLE001 - one failing step must not end the run
                 failed += 1
@@ -245,18 +315,21 @@ class Run:
                 sc.setJobGroup("perfbench-idle", "perfbench-idle")
                 release_tracked()
             jobs += sum(len(tracker.getJobIdsForGroup(g)) for g in groups)
-        if self.last_progress:
+        cpu_s = _tree_cpu_s(jvm) - cpu0
+        if progress:
             # micro-batch jobs run under the stream's own job group
-            jobs += len(tracker.getJobIdsForGroup(self.last_progress[0]["runId"]))
+            jobs += len(tracker.getJobIdsForGroup(progress[0]["runId"]))
         return {
+            "cpu_s": cpu_s,
             "tag": tag,
-            "attempted": len(timings) + failed + max(0, len(self.last_progress) - 1),
+            "attempted": len(timings) + failed + max(0, len(progress) - 1),
             "timings": timings,
             "outputs": outputs,
             "failed": failed,
             "jobs": jobs,
             "spans": spans,
-            "progress": self.last_progress,
+            "progress": progress,
+            "input_bytes": self.inputs["input_bytes"] + (self.shard_bytes if self.stream else 0),
         }
 
     def measure(self, seconds: float, prefix: str):
@@ -265,12 +338,6 @@ class Run:
         while not passes or time.perf_counter() - start < seconds:
             passes.append(self.one_pass(f"{prefix}{len(passes)}"))
         return passes
-
-    def store_bytes(self) -> int:
-        total = 0
-        for dirpath, _, files in os.walk(self.warehouse):
-            total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
-        return total
 
 
 def wall_s(passes) -> float:
@@ -283,6 +350,10 @@ def wall_s(passes) -> float:
     )
 
 
+def pass_totals(passes) -> list[float]:
+    return [sum(map(sum, p["timings"].values())) for p in passes]
+
+
 def attempted_failed(passes):
     """Query calls and stream micro-batches attempted, and those that
     raised, over the timed passes."""
@@ -290,9 +361,10 @@ def attempted_failed(passes):
 
 
 # -- correctness -----------------------------------------------------------
-def check_outputs(run: Run, outputs: dict) -> tuple[int, list[str]]:
+def check_outputs(run: Run, outputs: dict, input_dir: str) -> tuple[int, list[str]]:
     """Hash-match every oracle-backed output against its DuckDB oracle;
-    rows-only outputs must be non-empty. Returns (mismatches, report)."""
+    rows-only outputs must be non-empty; every stream store must hold
+    each drained document once. Returns (mismatches, report)."""
     import duckdb
 
     import __spark_entry__
@@ -306,18 +378,12 @@ def check_outputs(run: Run, outputs: dict) -> tuple[int, list[str]]:
     sys.path[:] = saved
     oracles = __spark_entry__.oracle_sql()
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{run.input_dir}/documents.parquet'")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{input_dir}/documents.parquet'")
     mismatches, report = 0, []
     for name, rows in outputs.items():
         if isinstance(rows, Exception):
             mismatches += 1
             report.append(f"{name}: FAILED {type(rows).__name__}")
-            continue
-        if name == STREAM:
-            expected = run.inputs["stream_docs"]
-            ok = rows == [(expected, expected)]
-            mismatches += not ok
-            report.append(f"{name}: {'OK' if ok else 'MISMATCH'} store ids {rows} expected {expected}")
             continue
         if name not in oracles:
             ok = len(rows) > 0
@@ -333,47 +399,59 @@ def check_outputs(run: Run, outputs: dict) -> tuple[int, list[str]]:
         mismatches += not ok
         report.append(f"{name}: {'OK' if ok else 'MISMATCH'} ({len(a)} rows)")
     con.close()
+    for session, count, distinct, expected in run.store_checks:
+        ok = count == distinct == expected
+        mismatches += not ok
+        report.append(
+            f"{STREAM} session {session}: {'OK' if ok else 'MISMATCH'} "
+            f"store rows {count}, distinct ids {distinct}, drained {expected}"
+        )
+    if run.stream and not run.store_checks:
+        mismatches += 1
+        report.append(f"{STREAM}: no store was checked")
     return mismatches, report
 
 
 # -- one run -----------------------------------------------------------------
-def setup(run: Run, traced: bool):
-    """Session start + input generation + the untimed warm-up pass that
-    collects the outputs; its time is ``setup_s``. Then more untimed
-    passes until the warm-up has lasted WARMUP_S: the first few warm
-    passes still speed up (JIT), and a slow host would otherwise fit
-    fewer, less warm passes into the timed region."""
-    from gen_inputs import generate
+def setups(run: Run):
+    """SETUPS set-ups, each in a fresh session: session start + input
+    generation + a pass that collects the outputs. Returns their times
+    and the last set-up's pass; its session stays open."""
+    times = []
+    for i in range(SETUPS):
+        if i:
+            run.check_store()
+            run.stop_session()
+        t0 = time.perf_counter()
+        run.start_session(traced=False)
+        first = run.one_pass(f"setup{i}", collect=True)
+        times.append(time.perf_counter() - t0)
+    first["input_dir"] = run.input_dir
+    print(f"set-ups {[round(t, 2) for t in times]} s")
+    return times, first
 
+
+def verdict(run: Run, first: dict, passes: list) -> dict:
+    """Check the collected outputs and the stores, count failures;
+    print the human-readable summary; return the result without
+    metrics."""
     t0 = time.perf_counter()
-    run.start_session(traced)
-    run.inputs = generate(run.input_dir, run.seed, with_shards=run.stream)
-    warm = run.one_pass("warmup", collect=True)
-    setup_s = time.perf_counter() - t0
-    # every pass rewrites the same stores, so the warm-up's are the live set
-    run.inputs["store_bytes"] = run.store_bytes()
-    extra = 0
-    while time.perf_counter() - t0 < WARMUP_S:
-        extra += 1
-        run.one_pass(f"warmup{extra}")
-    print(f"warm-up: {extra} untimed passes after the collecting one")
-    return setup_s, warm
-
-
-def verdict(run: Run, warm: dict, passes: list) -> dict:
-    """Check the warm-up outputs and count failures; print the
-    human-readable summary; return the result without metrics."""
-    t0 = time.perf_counter()
-    mismatches, lines = check_outputs(run, warm["outputs"])
+    mismatches, lines = check_outputs(run, first["outputs"], first["input_dir"])
     print(f"oracle check took {time.perf_counter() - t0:.1f} s")
     attempted, failed = attempted_failed(passes)
     for line in lines:
         print("oracle", line)
+    inp = run.inputs
     print(
-        f"summary workload={run.workload} seed={run.seed} passes={len(passes)} "
-        f"near_dup_share={run.inputs['near_dup_share']:.4f} "
+        f"inputs seed={run.seed} near_dup_share={inp['near_dup_share']:.4f} "
+        f"copies={inp['copies']} block_pairs={inp['block_pairs']} "
+        f"block_dup_pairs={inp['block_dup_pairs']}"
+    )
+    print(
+        f"summary workload={run.workload} passes={len(passes)} "
         f"jobs_per_pass={[p['jobs'] for p in passes]} "
-        f"pass_s={[round(sum(map(sum, p['timings'].values())), 2) for p in passes]} "
+        f"pass_s={[round(t, 2) for t in pass_totals(passes)]} "
+        f"cpu_s={[round(p['cpu_s'], 2) for p in passes]} "
         f"error_rate={failed / attempted:.4f} oracle_mismatches={mismatches}"
     )
     return {
@@ -384,57 +462,82 @@ def verdict(run: Run, warm: dict, passes: list) -> dict:
 
 
 def end_to_end(run: Run, seconds: float) -> dict:
-    setup_s, warm = setup(run, traced=False)
+    times, first = setups(run)
+    t0 = time.perf_counter()
     passes = run.measure(seconds, "pass")
+    t1 = time.perf_counter()
+    run.check_store()
     run.stop_session()
-    result = verdict(run, warm, passes)
+    result = verdict(run, first, passes)
+    print(f"phases set-ups {sum(times):.1f} s, timed {t1 - t0:.1f} s, checks {time.perf_counter() - t1:.1f} s")
     for name in passes[0]["timings"]:
         b = _median([p["timings"][name][0] for p in passes if name in p["timings"]])
         r = _median([p["timings"][name][1] for p in passes if name in p["timings"]])
-        wb, wr = warm["timings"].get(name, (0.0, 0.0))
+        fb, fr = first["timings"].get(name, (0.0, 0.0))
         print(
             f"step {name:<28} build_s {b:8.3f} run_s {r:8.3f} "
-            f"(warm-up build_s {wb:8.3f} run_s {wr:8.3f})"
+            f"(set-up pass build_s {fb:8.3f} run_s {fr:8.3f})"
         )
+    print(f"wall_s {wall_s(passes):.3f} (per-layer metric, see BENCHMARK.json)")
     result["metrics"] = {
-        "wall_s": (wall_s(passes), "s"),
-        "setup_s": (setup_s, "s"),
+        "cpu_s": (_median([p["cpu_s"] for p in passes]), "s"),
+        "setup_s": (_median(times), "s"),
         "spark_jobs": (_median([p["jobs"] for p in passes]), "count"),
     }
     return result
 
 
 def per_layer(run: Run, seconds: float) -> dict:
+    """The set-ups and untraced passes of ``end_to_end``, then a traced
+    session warmed like the last set-up's (one untimed pass), timed for
+    ``seconds``; the per-layer metrics come from its event log."""
     from eventlog import layer_metrics, write_spans
 
-    _, warm = setup(run, traced=False)
-    untraced = run.measure(seconds / 2, "pass")
+    _, first = setups(run)
+    untraced = run.measure(seconds, "pass")
+    run.check_store()
     run.stop_session()
     run.start_session(traced=True)
-    run.one_pass("rewarm")  # the restarted session spawns fresh Python workers
-    passes = run.measure(seconds / 2, "trace")
+    run.one_pass("tracewarm")
+    passes = run.measure(seconds, "trace")
+    run.check_store()
     peak = run.jvm_peak_rss_mb()
+    store = _dir_bytes(run.warehouse)
+    drained = run.drained_bytes
     run.stop_session()
-    result = verdict(run, warm, untraced + passes)
+    result = verdict(run, first, untraced + passes)
     metrics, spans, per_step = layer_metrics(run.eventlog, passes, run.cores)
-    store = run.inputs["store_bytes"]
-    trig = [p["durationMs"]["triggerExecution"] / 1e3 for p in passes[-1]["progress"]]
+    trig = [p["durationMs"]["triggerExecution"] / 1e3 for q in passes for p in q["progress"]]
+    overhead = wall_s(passes) - wall_s(untraced)
     metrics.update(
         {
-            "trace_overhead_s": (wall_s(passes) - wall_s(untraced), "s"),
+            "wall_s": (wall_s(untraced), "s"),
+            "trace_overhead_s": (overhead, "s"),
             "peak_rss_mb": (peak, "MB"),
             "store_bytes": (store, "B"),
-            "store_bytes_per_input_byte": (store / run.inputs["input_bytes"], "ratio"),
-            "scan_amplification": (metrics["input_bytes"][0] / run.inputs["input_bytes"], "ratio"),
+            "store_bytes_per_input_byte": (store / drained if drained else 0.0, "ratio"),
+            "scan_amplification": (
+                metrics["input_bytes"][0] / _median([p["input_bytes"] for p in passes]),
+                "ratio",
+            ),
             "trigger_s.p50": (_median(trig), "s"),
             "trigger_s.max": (max(trig, default=0.0), "s"),
-            "stream_batches": (len(trig), "count"),
+            "stream_batches": (_median([len(p["progress"]) for p in passes]), "count"),
         }
     )
     for name, (b, r, jobs, stages) in per_step.items():
         print(f"step {name:<28} build_s {b:8.3f} run_s {r:8.3f} jobs {jobs:4d} stages {stages:4d}")
-    for p in passes[-1]["progress"]:
-        print(f"stream batch {p['batchId']} durationMs {p['durationMs']}")
+    for q in passes:
+        for p in q["progress"]:
+            print(f"stream {q['tag']} batch {p['batchId']} durationMs {p['durationMs']}")
+    # a difference of medians means something only when every pass of
+    # one side is slower than every pass of the other
+    u, t = pass_totals(untraced), pass_totals(passes)
+    state = "resolved" if max(u) < min(t) or max(t) < min(u) else "unresolved (the sides' passes overlap)"
+    print(
+        f"trace_overhead_s {overhead:.3f} over {len(u)} untraced and {len(t)} "
+        f"traced passes: {state}"
+    )
     path = write_spans(run.base, run.workload, run.seed, spans)
     print(f"spans written to {os.path.relpath(path, run.root)}")
     result["metrics"] = metrics
