@@ -414,14 +414,13 @@ def append_ann_shard(
     with duplicate candidates on every later query.
     """
     spark = shard.sparkSession
-    dim, num_planes, bands, buckets, gen_at_start = _store_meta(spark, name)
     # dimensionality is guarded IN-PLAN by sha_band_keys (round 16):
     # the former pre-flight scan was a full extra pass over the shard
-    bands_tbl = phys_table(name, "bands", gen_at_start)
-    vectors_tbl = phys_table(name, "vectors", gen_at_start)
+    meta = _store_meta(spark, name)
     clash = probe_id_clash(
         shard,
-        spark.table(vectors_tbl),
+        # the meta tuple ends with the generation the append writes to
+        spark.table(phys_table(name, "vectors", meta[-1])),
         _tombstones(spark, name),
         id_col=id_col,
     )
@@ -432,8 +431,33 @@ def append_ann_shard(
             "the bands/vectors tables and corrupt later top-k results "
             "(the incremental-ingest contract requires disjoint ids)"
         )
+    _append_rows(shard, name, meta, id_col=id_col, vec_col=vec_col)
+
+
+def _append_rows(
+    rows: DataFrame,
+    name: str,
+    meta: tuple[int, int, int, int, int],
+    *,
+    id_col: str,
+    vec_col: str,
+) -> None:
+    """Append ``rows`` (ids already proven new to the store) under
+    ``meta`` from :func:`_store_meta` — the one append body behind
+    :func:`append_ann_shard` and the streaming sink
+    (``streaming.ingest.ann_ingest_batch``).
+
+    Write order is BANDS FIRST, vectors last, and both callers decide
+    an id's presence on the VECTORS table. A crash between the two
+    writes leaves band rows whose ids still read as new, so the retry
+    re-appends them: duplicate band collisions are dropDuplicates'd by
+    every read path, while a duplicate unit-vector row would duplicate
+    (query, neighbor) rows in the exact re-rank. The post-write
+    generation check fails the append loudly when a maintenance
+    cutover raced it."""
+    dim, num_planes, bands, buckets, gen_at_start = meta
     banded, unit = _shard_projections(
-        shard,
+        rows,
         id_col=id_col,
         vec_col=vec_col,
         dim=dim,
@@ -442,7 +466,7 @@ def append_ann_shard(
     )
     write_bucketed(
         banded,
-        bands_tbl,
+        phys_table(name, "bands", gen_at_start),
         bucket_by="band_key",
         buckets=buckets,
         sort_by="band_key",
@@ -450,13 +474,13 @@ def append_ann_shard(
     )
     write_bucketed(
         unit,
-        vectors_tbl,
+        phys_table(name, "vectors", gen_at_start),
         bucket_by="id",
         buckets=buckets,
         sort_by="id",
         mode="append",
     )
-    _check_generation_unchanged(spark, name, gen_at_start)
+    _check_generation_unchanged(rows.sparkSession, name, gen_at_start)
 
 
 def topk_against_shard(

@@ -1635,7 +1635,6 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     strategy: str = "auto",
-    max_pairwise_block: int = 2_000,
     allow_unblocked_pairwise: bool = False,
 ) -> DataFrame:
     """Exact token-shingle Jaccard pairs — two physical strategies with
@@ -1659,8 +1658,8 @@ def ngram_jaccard_pairs(
       fires until the result is acted on). Setjoin's candidate join
       includes the block columns, so blocked inputs are handled; pass
       ``strategy="pairwise"`` explicitly when you KNOW every block is
-      tiny (<= ``max_pairwise_block`` or so) and want to skip the
-      prefix machinery.
+      tiny (a few thousand rows) and want to skip the prefix
+      machinery.
 
     Requires ``threshold > 0``: at t <= 0 every strategy except the
     block cross join silently drops zero-overlap pairs, and "all pairs

@@ -197,26 +197,6 @@ def write_minhash_store(
     )
 
 
-def _minhash_meta(
-    spark: SparkSession, name: str
-) -> tuple[int, int, int, int, int] | None:
-    """(num_perm, bands, shingle_n, buckets, gen) recorded at write
-    time, or None for a store written before the meta table existed.
-    One meta-log collect resolves params AND the generation (round 16
-    — the streaming ingest paid a second collect per trigger)."""
-    m = read_meta(spark, name)
-    if m is None:
-        return None
-    d = m.asDict()
-    return (
-        int(m["num_perm"]),
-        int(m["bands"]),
-        int(m["shingle_n"]),
-        int(m["buckets"]),
-        int(d["gen"]) if d.get("gen") is not None else 0,
-    )
-
-
 def _assert_hash_family(spark: SparkSession, name: str, meta_row=None) -> None:
     """Refuse to band NEW text against a store written under a
     different shingle hash FAMILY: the new rows' band keys could
@@ -289,25 +269,11 @@ def append_minhash_shard(
     a tombstoned id would be silently swallowed by the read-time
     anti-join until purge."""
     spark = shard.sparkSession
-    m = read_meta(spark, name)  # ONE meta read: params + hashv + gen
-    if m is None:
-        raise ValueError(
-            f"minhash store '{name}' predates incremental ingest (no "
-            "meta table); rewrite it with write_minhash_store before "
-            "appending shards"
-        )
-    d = m.asDict()
-    num_perm, bands, shingle_n, buckets = (
-        int(d["num_perm"]), int(d["bands"]),
-        int(d["shingle_n"]), int(d["buckets"]),
-    )
-    _assert_hash_family(spark, name, meta_row=m)
-    gen_at_start = int(d["gen"]) if d.get("gen") is not None else 0
-    bands_tbl = phys_table(name, "bands", gen_at_start)
-    shingles_tbl = phys_table(name, "shingles", gen_at_start)
+    meta = _append_meta(spark, name)
     clash = probe_id_clash(
         shard,
-        spark.table(shingles_tbl),
+        # the meta tuple ends with the generation the append writes to
+        spark.table(phys_table(name, "shingles", meta[-1])),
         _tombstones(spark, name),
         id_col=id_col,
     )
@@ -318,25 +284,77 @@ def append_minhash_shard(
             "appending would duplicate its rows and corrupt later "
             "pair results"
         )
-    # ONE tokenize pass over the shard (round 15): the staged
-    # (id, shingles) frame is pinned and feeds BOTH table appends —
-    # shards are the small side by contract, so the pin is bounded.
-    # Write order stays BANDS FIRST (the crash-recovery contract: a
-    # bands-only orphan re-appends cleanly because the id-clash probe
-    # reads the shingles table and candidate pairs dedup; flipping the
-    # order would make a crashed append refuse retry with shingle rows
-    # whose band keys never landed — silent recall loss).
-    from polars_text_spark.persist import track_persist
+    _append_rows(shard, name, meta, text_col=text_col, id_col=id_col)
 
-    staged = track_persist(
-        shard.select(
-            F.col(id_col).alias("id"),
-            token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
-        ).persist()
+
+def _append_meta(
+    spark: SparkSession, name: str
+) -> tuple[int, int, int, int, int]:
+    """(num_perm, bands, shingle_n, buckets, gen) an append bands
+    under, from ONE meta read; raises for a store without meta or
+    written under another shingle hash family (whose band keys would
+    never collide with the new rows)."""
+    m = read_meta(spark, name)
+    if m is None:
+        raise ValueError(
+            f"minhash store '{name}' predates incremental ingest (no "
+            "meta table); rewrite it with write_minhash_store before "
+            "appending shards"
+        )
+    _assert_hash_family(spark, name, meta_row=m)
+    d = m.asDict()
+    return (
+        int(d["num_perm"]),
+        int(d["bands"]),
+        int(d["shingle_n"]),
+        int(d["buckets"]),
+        int(d["gen"]) if d.get("gen") is not None else 0,
     )
+
+
+def _append_rows(
+    rows: DataFrame,
+    name: str,
+    meta: tuple[int, int, int, int, int],
+    *,
+    text_col: str,
+    id_col: str,
+) -> None:
+    """Append ``rows`` (ids already proven new to the store) under
+    ``meta`` from :func:`_append_meta` — the one append body behind
+    :func:`append_minhash_shard` and the streaming sink
+    (``streaming.ingest.minhash_ingest_batch``).
+
+    Write order is BANDS FIRST, shingles last, and both callers decide
+    an id's presence on the SHINGLES table. A crash between the two
+    writes leaves band rows whose ids still read as new, so the retry
+    re-appends them: duplicate band rows are harmless (candidate pairs
+    are deduplicated and compaction rewrites the files), while a
+    duplicate shingle row would double-count every verified pair.
+    Flipping the order would make a crashed append refuse its retry
+    with shingle rows whose band keys never landed — silent recall
+    loss. The post-write generation check fails the append loudly when
+    a maintenance cutover raced it."""
+    num_perm, bands, shingle_n, buckets, gen_at_start = meta
+    spark = rows.sparkSession
+    bands_tbl = phys_table(name, "bands", gen_at_start)
+    shingles_tbl = phys_table(name, "shingles", gen_at_start)
+    # ONE tokenize pass (round 15): the staged (id, shingles) frame is
+    # pinned and feeds BOTH table appends — appended rows are the
+    # small side by contract, so the pin is bounded. A LAZY local
+    # checkpoint fills during the bands write's own job; persist()
+    # would cost AQE a separate cache-building job per append. A lost
+    # block fails the shingles write loudly, and the bands-first order
+    # keeps that retryable.
+    staged = rows.select(
+        F.col(id_col).alias("id"),
+        token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
+    ).localCheckpoint(eager=False)
     shard_cols = ["id", F.col("bk.band").alias("band"),
                   F.col("bk.bucket").alias("bucket")]
     if "sig" in spark.table(bands_tbl).columns:
+        # the hot-band guard's signature-group key; stores written
+        # before it existed keep their narrower schema
         shard_cols.append(F.col("__sig").alias("sig"))
     banded = _banded_signatures(
         staged, text_col, "id", "id",
@@ -359,7 +377,6 @@ def append_minhash_shard(
         sort_by="id",
         mode="append",
     )
-    staged.unpersist()
     _check_generation_unchanged(spark, name, gen_at_start)
 
 

@@ -45,7 +45,9 @@ def get_spark(
         # false) — tiny frames coalesce to one task locally, and at
         # 100 TB reduce partitions land at the advisory size
         # regardless of cluster width. Both knobs are env-overridable
-        # for cluster tuning; defaults match Spark's shipped values.
+        # for cluster tuning. Only the 64m advisory size is Spark's
+        # shipped default; parallelismFirst=false deliberately flips
+        # Spark's default of true.
         .config(
             "spark.sql.adaptive.coalescePartitions.parallelismFirst",
             os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),

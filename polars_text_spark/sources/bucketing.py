@@ -233,6 +233,40 @@ def probe_id_clash(
     return clash[0]["id"] if clash else None
 
 
+def novel_rows(
+    batch: DataFrame,
+    standing: DataFrame,
+    ts: DataFrame | None,
+    *,
+    id_col: str,
+) -> DataFrame | None:
+    """The rows of ``batch`` whose ids are in neither ``standing`` (a
+    bucketed store's id column) nor the tombstone set ``ts``,
+    checkpointed; None when no row is novel. The at-least-once twin of
+    :func:`probe_id_clash` for the streaming sinks: where a batch
+    append raises on a clash, a redelivered micro-batch drops its
+    already-stored ids instead. A tombstoned id is not novel until
+    purged: the read-time anti-join would swallow it. Same join
+    directions: the batch probes the id-bucketed store shuffle-free,
+    the tombstones are broadcast.
+
+    The checkpoint makes the result independent of the store it was
+    filtered against: the append that follows writes into the table
+    this plan anti-joined, and must not re-evaluate the filter after
+    its own rows landed."""
+    novel = batch.join(
+        standing.select(F.col("id").alias(id_col)), id_col, "left_anti"
+    )
+    if ts is not None:
+        novel = novel.join(
+            F.broadcast(ts.select(F.col("id").alias(id_col))),
+            id_col,
+            "left_anti",
+        )
+    novel = novel.localCheckpoint(eager=True)
+    return novel if novel.take(1) else None
+
+
 def tombstone_ids(ids: DataFrame, name: str, *, id_col: str) -> None:
     """Append a batch of ids to the store's ``<name>_tombstones``
     table (single ``id`` column) — the logical half of the deletion

@@ -43,28 +43,42 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
 # driver-side fixed cost per read, measured sf0.1 — paid once per query
 # per bench rep). Memoizing the SCHEMA (metadata only — every scan
 # still reads the data files; results are never cached) gives path
-# reads the catalog-table property. Inputs are immutable test fixtures
-# within a process; a changed file is a new process.
-_SCHEMA_CACHE: dict[str, object] = {}
+# reads the catalog-table property. Each entry is stamped with the
+# path's size and mtime (:func:`_stamp`) and only served while they
+# match, so a path rewritten in-process is re-inferred, never read
+# under its old schema.
+_SCHEMA_CACHE: dict[str, tuple[tuple[int, int], object]] = {}
+
+
+def _stamp(path: str) -> tuple[int, int] | None:
+    """(size, mtime_ns) of a local path — for a directory, of the
+    directory entry, which a rewrite or an added file changes — or
+    None when the driver cannot stat it (memoization is then off)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_size, st.st_mtime_ns
 
 
 def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Path-based parquet read with the footer schema memoized per
     path (first read infers and records; later reads supply the schema
     explicitly, skipping footer inference)."""
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    stamp = _stamp(path)
+    hit = _SCHEMA_CACHE.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp is not None:
+        _SCHEMA_CACHE[path] = (stamp, df.schema)
+    return df
 
 
 def spread_scan(
     df: DataFrame,
     target: int | None = None,
     *,
-    min_bytes: int | None = None,
     memo_key: str | None = None,
 ) -> DataFrame:
     """Widen an under-partitioned scan so map-side work parallelizes.
@@ -81,55 +95,30 @@ def spread_scan(
     partitions (any real multi-file/multi-row-group table — the
     100 TB case), this is the identity and costs nothing. Round-robin
     repartition sorts within partitions first (SPARK-23207), so the
-    redistribution is retry-deterministic.
+    redistribution is retry-deterministic. Callers with cheap per-row
+    work skip widening at the call site.
 
-    ``min_bytes``: metadata-cheap opt-out for scans too small to
-    amortize the exchange + task-scheduling fixed cost (~0.3-0.5 s
-    measured): when the summed input-file size is known and below the
-    threshold, the scan is left alone. Note the threshold is a BYTES
-    dial; whether widening pays is really a map-work-DENSITY question
-    (a 500 KB corpus of documents still wins big when every row feeds
-    an O(tokens) sha pipeline) — callers with cheap per-row work
-    should skip widening at the call site instead.
-
-    ``memo_key``: when the caller scans an immutable path repeatedly
-    (the testdata tables — one probe per query per bench rep), the
-    raw-partition probe (a ``df.rdd`` plan conversion, ~30-50 ms of
-    driver work, no job) is memoized under ``(memo_key, target)``;
-    metadata only, same stance as the schema memo above.
+    ``memo_key``: the path of the scan, when the caller scans it
+    repeatedly (the testdata tables — one probe per query per bench
+    rep): the raw-partition probe (a ``df.rdd`` plan conversion,
+    ~30-50 ms of driver work, no job) is memoized under
+    ``(memo_key, target)`` and stamped like the schema memo above.
     """
     tgt = target or df.sparkSession.sparkContext.defaultParallelism
-    if memo_key is not None:
-        key = (memo_key, tgt)
-        parts = _SPREAD_PROBE_CACHE.get(key)
-        if parts is None:
-            parts = df.rdd.getNumPartitions()
-            _SPREAD_PROBE_CACHE[key] = parts
+    stamp = _stamp(memo_key) if memo_key is not None else None
+    hit = _SPREAD_PROBE_CACHE.get((memo_key, tgt))
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        parts = hit[1]
     else:
         parts = df.rdd.getNumPartitions()
+        if stamp is not None:
+            _SPREAD_PROBE_CACHE[(memo_key, tgt)] = (stamp, parts)
     if parts >= tgt:
         return df
-    if min_bytes is not None:
-        total = _input_bytes(df)
-        if total is not None and total < min_bytes:
-            return df
     return df.repartition(tgt)
 
 
-_SPREAD_PROBE_CACHE: dict[tuple[str, int], int] = {}
-
-
-def _input_bytes(df: DataFrame) -> int | None:
-    """Summed size of the frame's input files, or None when any file
-    is not stat-able from the driver (non-local FS etc.)."""
-    try:
-        total = 0
-        for uri in df.inputFiles():
-            path = uri[len("file:"):] if uri.startswith("file:") else uri
-            total += os.path.getsize(path)
-        return total
-    except OSError:
-        return None
+_SPREAD_PROBE_CACHE: dict[tuple[str, int], tuple[tuple[int, int], int]] = {}
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,14 +17,13 @@ therefore wrong here; instead every batch is filtered to its NOVEL
 ids (anti-join against the store) and only the remainder appends —
 redelivery becomes a no-op, not a poison pill.
 
-Crash-window ordering: bands are appended FIRST, shingles LAST, and
-novelty is decided on the SHINGLES table. A failure between the two
-writes leaves band rows whose ids are still "novel"; the redelivered
-batch re-appends them — duplicate BAND rows are harmless
-(``pairs_from_store`` dropDuplicates the candidate pairs and
-compaction rewrites files), while duplicate SHINGLE rows would
-double-count every verified pair, which this ordering makes
-impossible.
+Each sink then hands its novel rows to the SAME private append body
+its store's batch ``append_*_shard`` uses, so the write order that
+makes a crash between the two table writes safe to redeliver is
+defined once, in ``operators/dedup_store.py`` and
+``operators/ann_store.py``. A store whose tables exist without a meta
+table (a crashed bootstrap, or a pre-meta store) is refused like the
+batch append refuses it, never re-bootstrapped over its standing rows.
 """
 
 from __future__ import annotations
@@ -48,6 +47,33 @@ __all__ = [
 ]
 
 
+def _store_absent(spark: SparkSession, name: str, suffixes) -> bool:
+    """True when store ``name`` has neither a meta table nor any of
+    its data tables: the one state an id-keyed sink bootstraps. Data
+    tables without meta are generation 0 (a crashed bootstrap sweeps
+    every generation first, and generations postdate the meta table),
+    and the append gate refuses them; re-bootstrapping would sweep
+    their standing rows."""
+    return not any(
+        spark.catalog.tableExists(f"{name}_{s}") for s in ("meta", *suffixes)
+    )
+
+
+def _start(frame: DataFrame, sink, checkpoint_dir: str, available_now: bool):
+    """Attach ``sink`` as the ``foreachBatch`` function of the
+    streaming ``frame`` and start it. ``available_now=True`` drains
+    everything currently in the source and stops; otherwise the query
+    runs continuously. Returns the StreamingQuery."""
+    writer = (
+        frame.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(sink)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def minhash_ingest_batch(
     name: str,
     *,
@@ -61,24 +87,24 @@ def minhash_ingest_batch(
     """A ``foreachBatch`` function ``(batch_df, batch_id) -> None``
     that grows the MinHash store ``name`` by the batch's novel ids.
 
-    First batch ever bootstraps the store with the given signature
-    parameters; every later batch reads the recorded meta (parameters
-    can never drift mid-stream). Ids already in the store — from a
+    A batch into an absent store bootstraps it with the given
+    signature parameters; every later batch passes the batch append's
+    gate — the recorded meta (parameters can never drift mid-stream)
+    and its shingle hash family. Ids already in the store — from a
     previous batch, a redelivered batch, or a duplicate document in
     the crawl — are dropped, so the sink is idempotent under
     at-least-once delivery.
     """
-    from polars_text_spark.operators.dedup import _banded_signatures
-    from polars_text_spark.operators.dedup import token_shingles
     from polars_text_spark.operators.dedup_store import (
-        _minhash_meta,
+        _SUFFIXES,
+        _append_meta,
+        _append_rows,
         write_minhash_store,
     )
     from polars_text_spark.sources.bucketing import (
-        check_generation_unchanged,
+        novel_rows,
         phys_table,
         read_tombstones,
-        write_bucketed,
     )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -92,12 +118,7 @@ def minhash_ingest_batch(
             # overwrites standing rows)
             .dropDuplicates([id_col])
         )
-        # bootstrap gate = the META table, which write_minhash_store
-        # writes LAST: a crash mid-bootstrap leaves no meta, so the
-        # redelivered first batch re-bootstraps over the partial
-        # tables instead of trusting them
-        meta = _minhash_meta(spark, name)
-        if meta is None:
+        if _store_absent(spark, name, _SUFFIXES):
             write_minhash_store(
                 batch,
                 name,
@@ -109,72 +130,16 @@ def minhash_ingest_batch(
                 buckets=buckets,
             )
             return
-        # params AND the current generation come from the ONE meta
-        # read above (round 16); a maintenance cutover racing this
-        # batch is detected by the post-write generation check below
-        m_perm, m_bands, m_shingle, m_buckets, gen_at_start = meta
-        bands_tbl = phys_table(name, "bands", gen_at_start)
-        shingles_tbl = phys_table(name, "shingles", gen_at_start)
-        # novelty: the shard probes the id-bucketed shingles table
-        # (shuffle-free on the store side, nothing store-sized
-        # broadcast) plus the pending-tombstone set — a tombstoned id
-        # would be silently swallowed by the read-time anti-join, so
-        # it is NOT novel until purged
-        standing = spark.table(shingles_tbl).select("id")
-        novel = batch.join(
-            standing.withColumnRenamed("id", id_col), id_col, "left_anti"
+        meta = _append_meta(spark, name)
+        novel = novel_rows(
+            batch,
+            # the meta tuple ends with the generation to append to
+            spark.table(phys_table(name, "shingles", meta[-1])),
+            read_tombstones(spark, name),
+            id_col=id_col,
         )
-        ts = read_tombstones(spark, name)
-        if ts is not None:
-            novel = novel.join(
-                F.broadcast(ts.withColumnRenamed("id", id_col)),
-                id_col,
-                "left_anti",
-            )
-        # materialize: (a) one pass over the batch text for both
-        # projections, (b) the shingles append below must not re-read
-        # the shingles table its own plan anti-joined against
-        novel = novel.localCheckpoint(eager=True)
-        if not novel.take(1):
-            return
-        band_cols = [
-            "id",
-            F.col("bk.band").alias("band"),
-            F.col("bk.bucket").alias("bucket"),
-        ]
-        if "sig" in spark.table(bands_tbl).columns:
-            # the hot-band guard's signature-group key; stores written
-            # before it existed keep their narrower schema
-            band_cols.append(F.col("__sig").alias("sig"))
-        banded = _banded_signatures(
-            novel, text_col, id_col, "id",
-            num_perm=m_perm, bands=m_bands, shingle_n=m_shingle,
-        ).select(*band_cols)
-        write_bucketed(
-            banded,
-            bands_tbl,
-            bucket_by=["band", "bucket"],
-            buckets=m_buckets,
-            sort_by=["band", "bucket"],
-            mode="append",
-        )
-        shingles = novel.select(
-            F.col(id_col).alias("id"),
-            token_shingles(text_col, m_shingle, hashed=True).alias("sh"),
-        )
-        write_bucketed(
-            shingles,
-            shingles_tbl,
-            bucket_by="id",
-            buckets=m_buckets,
-            sort_by="id",
-            mode="append",
-        )
-        # a cutover racing this trigger dropped the generation these
-        # rows landed in: fail the batch LOUDLY so the stream retries
-        # it against the new generation (novelty anti-join makes the
-        # redelivery exact)
-        check_generation_unchanged(spark, name, gen_at_start)
+        if novel is not None:
+            _append_rows(novel, name, meta, text_col=text_col, id_col=id_col)
 
     return ingest
 
@@ -196,24 +161,20 @@ def stream_into_minhash_store(
     it. ``available_now=True`` drains everything currently in the
     source and stops — the catch-up / backfill mode; the default runs
     continuously as new shards land. Returns the StreamingQuery."""
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            minhash_ingest_batch(
-                name,
-                text_col=text_col,
-                id_col=id_col,
-                num_perm=num_perm,
-                bands=bands,
-                shingle_n=shingle_n,
-                buckets=buckets,
-            )
-        )
+    return _start(
+        docs,
+        minhash_ingest_batch(
+            name,
+            text_col=text_col,
+            id_col=id_col,
+            num_perm=num_perm,
+            bands=bands,
+            shingle_n=shingle_n,
+            buckets=buckets,
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ann_ingest_batch(
@@ -229,25 +190,19 @@ def ann_ingest_batch(
     """``foreachBatch`` sink growing the ANN store ``name`` by each
     batch's novel ids — the vector twin of
     :func:`minhash_ingest_batch`, same at-least-once contract.
-
-    Crash-window ordering here: BANDS first, VECTORS last, novelty
-    decided on the vectors table — candidate band collisions are
-    dropDuplicates'd by every read path, but a duplicated row in the
-    unit-vector table would duplicate (query, neighbor) rows in the
-    exact re-rank, so the harmful table is the one whose append
-    commits the batch. Dimensionality is validated per batch (a
-    wrong-dim drop would null-pad into degenerate band keys: silent
+    Dimensionality is validated per batch, in-plan by the append body
+    (a wrong-dim drop would null-pad into degenerate band keys: silent
     recall 0)."""
     from polars_text_spark.operators.ann_store import (
-        _shard_projections,
+        _SUFFIXES,
+        _append_rows,
         _store_meta,
         write_ann_store,
     )
     from polars_text_spark.sources.bucketing import (
-        check_generation_unchanged,
+        novel_rows,
         phys_table,
         read_tombstones,
-        write_bucketed,
     )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
@@ -256,7 +211,7 @@ def ann_ingest_batch(
             batch_df.filter(F.col(vec_col).isNotNull())
             .dropDuplicates([id_col])
         )
-        if not spark.catalog.tableExists(f"{name}_meta"):
+        if _store_absent(spark, name, _SUFFIXES):
             write_ann_store(
                 batch,
                 name,
@@ -268,58 +223,16 @@ def ann_ingest_batch(
                 buckets=buckets,
             )
             return
-        # ONE meta read resolves params AND the current generation
-        # (round 16); the post-write check below catches a racing
-        # maintenance cutover. Dimensionality is guarded in-plan by
-        # sha_band_keys — a wrong-dim batch aborts its own write job
-        # instead of paying a pre-flight scan per trigger.
-        m_dim, m_planes, m_bands, m_buckets, gen_at_start = _store_meta(
-            spark, name
-        )
-        bands_tbl = phys_table(name, "bands", gen_at_start)
-        vectors_tbl = phys_table(name, "vectors", gen_at_start)
-        standing = spark.table(vectors_tbl).select("id")
-        novel = batch.join(
-            standing.withColumnRenamed("id", id_col), id_col, "left_anti"
-        )
-        ts = read_tombstones(spark, name)
-        if ts is not None:
-            novel = novel.join(
-                F.broadcast(ts.withColumnRenamed("id", id_col)),
-                id_col,
-                "left_anti",
-            )
-        novel = novel.localCheckpoint(eager=True)
-        if not novel.take(1):
-            return
-        banded, unit = _shard_projections(
-            novel,
+        meta = _store_meta(spark, name)
+        novel = novel_rows(
+            batch,
+            # the meta tuple ends with the generation to append to
+            spark.table(phys_table(name, "vectors", meta[-1])),
+            read_tombstones(spark, name),
             id_col=id_col,
-            vec_col=vec_col,
-            dim=m_dim,
-            num_planes=m_planes,
-            bands=m_bands,
         )
-        write_bucketed(
-            banded,
-            bands_tbl,
-            bucket_by="band_key",
-            buckets=m_buckets,
-            sort_by="band_key",
-            mode="append",
-        )
-        write_bucketed(
-            unit,
-            vectors_tbl,
-            bucket_by="id",
-            buckets=m_buckets,
-            sort_by="id",
-            mode="append",
-        )
-        # fail the batch LOUDLY if a maintenance cutover dropped the
-        # generation these rows landed in; the stream's retry is exact
-        # (novelty anti-join) against the new generation
-        check_generation_unchanged(spark, name, gen_at_start)
+        if novel is not None:
+            _append_rows(novel, name, meta, id_col=id_col, vec_col=vec_col)
 
     return ingest
 
@@ -339,24 +252,20 @@ def stream_into_ann_store(
 ):
     """Attach the ANN ingest sink to a streaming vector frame and
     start it (see :func:`stream_into_minhash_store`)."""
-    writer = (
-        vectors.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            ann_ingest_batch(
-                name,
-                vec_col=vec_col,
-                id_col=id_col,
-                dim=dim,
-                num_planes=num_planes,
-                bands=bands,
-                buckets=buckets,
-            )
-        )
+    return _start(
+        vectors,
+        ann_ingest_batch(
+            name,
+            vec_col=vec_col,
+            id_col=id_col,
+            dim=dim,
+            num_planes=num_planes,
+            bands=bands,
+            buckets=buckets,
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def topk_serve_batch(
@@ -434,26 +343,22 @@ def stream_topk_against_store(
     """Attach the ANN serving sink to a streaming query-vector frame
     and start it (see :func:`topk_serve_batch`). Returns the
     StreamingQuery."""
-    writer = (
-        queries.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            topk_serve_batch(
-                name,
-                out_path,
-                k=k,
-                id_col=id_col,
-                vec_col=vec_col,
-                dim=dim,
-                num_planes=num_planes,
-                bands=bands,
-                exclude_self=exclude_self,
-            )
-        )
+    return _start(
+        queries,
+        topk_serve_batch(
+            name,
+            out_path,
+            k=k,
+            id_col=id_col,
+            vec_col=vec_col,
+            dim=dim,
+            num_planes=num_planes,
+            bands=bands,
+            exclude_self=exclude_self,
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def web_gate_batch(
@@ -534,18 +439,14 @@ def stream_web_gated_corpus(
     (e.g. ``streaming.warc.read_warc_stream`` ->
     ``sources.warc.warc_text_documents``, both stateless and therefore
     stream-composable) and start it. Returns the StreamingQuery."""
-    writer = (
-        pages.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            web_gate_batch(
-                rules, blocklist, out_path, agent=agent, url_col=url_col
-            )
-        )
+    return _start(
+        pages,
+        web_gate_batch(
+            rules, blocklist, out_path, agent=agent, url_col=url_col
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def decontam_gate_batch(
@@ -617,24 +518,20 @@ def stream_decontaminated_corpus(
 ):
     """Attach the decontamination gate sink to a streaming document
     frame and start it (see :func:`decontam_gate_batch`)."""
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            decontam_gate_batch(
-                benchmark,
-                out_path,
-                text_col=text_col,
-                id_col=id_col,
-                n=n,
-                max_shared_shingles=max_shared_shingles,
-                keep_flags=keep_flags,
-            )
-        )
+    return _start(
+        docs,
+        decontam_gate_batch(
+            benchmark,
+            out_path,
+            text_col=text_col,
+            id_col=id_col,
+            n=n,
+            max_shared_shingles=max_shared_shingles,
+            keep_flags=keep_flags,
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def bloom_ingest_batch(
@@ -705,19 +602,15 @@ def stream_into_bloom_store(
     it. Size ``m_bits`` for the EVENTUAL key count (a Bloom cannot
     grow; over-filling raises the realized fpp, never breaks
     correctness — no false negatives regardless)."""
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            bloom_ingest_batch(
-                name,
-                key_col=key_col,
-                m_bits=m_bits,
-                n_hashes=n_hashes,
-                seed=seed,
-            )
-        )
+    return _start(
+        docs,
+        bloom_ingest_batch(
+            name,
+            key_col=key_col,
+            m_bits=m_bits,
+            n_hashes=n_hashes,
+            seed=seed,
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -215,23 +215,6 @@ def test_bottomk_no_max_df_unchanged(spark):
 
 
 # ---------------------------------------------------------------------------
-# spread_scan min_bytes opt-out (VERDICT r6 #5)
-# ---------------------------------------------------------------------------
-
-
-def test_spread_scan_min_bytes_skips_tiny_scan(spark, sf_dir):
-    from polars_text_spark.sources.catalog import spread_scan
-
-    scan = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n0 = scan.rdd.getNumPartitions()
-    # far above the file's size: scan left alone
-    assert spread_scan(scan, min_bytes=1 << 40) is scan
-    # below: widened as before
-    widened = spread_scan(scan, min_bytes=1)
-    assert widened.rdd.getNumPartitions() > n0
-
-
-# ---------------------------------------------------------------------------
 # apply_filter_rules collision reporting (ADVICE r6, low)
 # ---------------------------------------------------------------------------
 

@@ -50,3 +50,23 @@ def test_spread_scan_memo_same_decision(spark, sf_dir):
         == memod_first.rdd.getNumPartitions()
         == memod_second.rdd.getNumPartitions()
     )
+
+
+def test_memos_follow_an_in_process_rewrite(spark, tmp_path):
+    """A path rewritten in-process with a different schema is read
+    under its NEW schema: both memos are stamped with the path's size
+    and mtime and re-probe once they change."""
+    path = str(tmp_path / "rewritten.parquet")
+    spark.range(3).write.parquet(path)
+    assert scan_parquet(spark, path).columns == ["id"]
+    spread_scan(scan_parquet(spark, path), 8, memo_key=path)
+    stamp = _SPREAD_PROBE_CACHE[(path, 8)][0]
+
+    spark.range(4).selectExpr("id", "id * 2 AS twice").repartition(
+        2
+    ).write.mode("overwrite").parquet(path)
+    again = scan_parquet(spark, path)
+    assert again.columns == ["id", "twice"]
+    assert sorted(r["twice"] for r in again.collect()) == [0, 2, 4, 6]
+    spread_scan(again, 8, memo_key=path)
+    assert _SPREAD_PROBE_CACHE[(path, 8)][0] != stamp

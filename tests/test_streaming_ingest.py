@@ -251,3 +251,79 @@ def test_stream_ingest_across_rebucket_generations(spark, corpus, tmp_path):
     got = _pairs(spark, "mh_genstream")
     assert got == _pairs(spark, "mh_genstream_ref")
     assert got, "parity on an empty pair set is vacuous"
+
+
+def test_stream_refuses_foreign_hash_family(spark, corpus, tmp_path):
+    """The sink passes the batch append's gate: a store whose meta
+    records another shingle hash family is refused (its band keys can
+    never collide with new rows), not silently appended to."""
+    name = "mh_hashv_stream"
+    rows = corpus.select("doc_id", "text")
+    write_minhash_store(rows.filter(F.col("doc_id") % 2 == 0), name, buckets=4)
+    # a v1-era store: the meta rewritten with hashv=1
+    old = spark.table(f"{name}_meta").collect()[0]
+    spark.createDataFrame(
+        [(old["num_perm"], old["bands"], old["shingle_n"],
+          old["buckets"], 1)],
+        "num_perm int, bands int, shingle_n int, buckets int, hashv int",
+    ).write.format("parquet").mode("overwrite").saveAsTable(f"{name}_meta")
+    src = str(tmp_path / "drops")
+    rows.filter(F.col("doc_id") % 2 == 1).repartition(1).write.parquet(src)
+    with pytest.raises(Exception, match="hash family"):
+        _drain(spark, src, str(tmp_path / "ck"), name)
+    assert spark.table(f"{name}_shingles").count() == rows.filter(
+        F.col("doc_id") % 2 == 0
+    ).count()
+
+
+@pytest.mark.parametrize("store", ["minhash", "ann"])
+def test_stream_refuses_store_without_meta(
+    spark, corpus, sf_dir, tmp_path, store
+):
+    """Data tables without a meta table (a crashed bootstrap, a
+    pre-meta store) are refused like the batch append refuses them;
+    bootstrapping over them would sweep the standing rows."""
+    from polars_text_spark.operators.ann_store import write_ann_store
+    from polars_text_spark.streaming.ingest import stream_into_ann_store
+
+    name = f"{store}_nometa_stream"
+    if store == "minhash":
+        rows = corpus.select("doc_id", "text")
+        key, tables = "doc_id", ("bands", "shingles")
+        write_minhash_store(rows.filter(F.col(key) % 2 == 0), name, buckets=4)
+
+        def start(frame, ckpt):
+            return stream_into_minhash_store(
+                frame, name, checkpoint_dir=ckpt, buckets=4,
+                available_now=True,
+            )
+    else:
+        rows = (
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            .filter(F.col("embedding").isNotNull())
+            .select("vec_id", "embedding")
+            .limit(60)
+        )
+        key, tables = "vec_id", ("bands", "vectors")
+        write_ann_store(
+            rows.filter(F.col(key) % 2 == 0), name, dim=64, buckets=4
+        )
+
+        def start(frame, ckpt):
+            return stream_into_ann_store(
+                frame, name, checkpoint_dir=ckpt, dim=64, buckets=4,
+                available_now=True,
+            )
+
+    spark.sql(f"DROP TABLE {name}_meta")
+    before = {t: spark.table(f"{name}_{t}").count() for t in tables}
+    assert all(before.values())
+    src = str(tmp_path / "drops")
+    rows.filter(F.col(key) % 2 == 1).repartition(1).write.parquet(src)
+    q = start(
+        spark.readStream.schema(rows.schema).parquet(src),
+        str(tmp_path / "ck"),
+    )
+    with pytest.raises(Exception, match="no meta table"):
+        q.awaitTermination(600)
+    assert {t: spark.table(f"{name}_{t}").count() for t in tables} == before
