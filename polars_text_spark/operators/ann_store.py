@@ -21,7 +21,7 @@ Signature parameters are embedded at write time; pass the same ones at
 query time. Since round 14 the PHYSICAL table names are generational
 (``<name>_bands_g1`` after the first maintenance rewrite) and
 ``<name>_meta`` is the atomic pointer — resolve through
-``sources.bucketing.phys_table``/``store_generation`` instead of
+``sources.bucketing.live_table`` (``_phys`` here) instead of
 hardcoding names (see :mod:`polars_text_spark.operators.dedup_store`).
 """
 
@@ -39,13 +39,16 @@ from polars_text_spark.operators.similarity import (
 from polars_text_spark.sources.bucketing import (
     check_generation_unchanged as _check_generation_unchanged,
     clear_table,
+    live_table as _phys,
+    meta_gen,
     minus_tombstones as _minus_tombstones,
     phys_table,
+    pooled_writes,
     read_meta,
     probe_id_clash,
     read_tombstones as _tombstones,
     rewrite_generation,
-    store_generation,
+    snapshot_rewrite,
     sweep_stale_generations,
     tombstone_ids,
     write_bucketed,
@@ -66,37 +69,6 @@ __all__ = [
 _SUFFIXES = ("bands", "vectors")
 
 
-def _phys(spark: SparkSession, name: str, suffix: str) -> str:
-    """Current physical catalog name of a store table, resolved
-    through the meta generation pointer (round 14 — see
-    :mod:`polars_text_spark.operators.dedup_store`)."""
-    return phys_table(name, suffix, store_generation(spark, name))
-
-
-def _read_store(spark: SparkSession, name: str, suffix: str) -> DataFrame:
-    return spark.table(_phys(spark, name, suffix))
-
-
-def _write_meta(
-    spark: SparkSession,
-    name: str,
-    *,
-    dim: int,
-    num_planes: int,
-    bands: int,
-    buckets: int,
-    gen: int,
-    reset: bool = False,
-) -> None:
-    meta = spark.createDataFrame(
-        [(int(dim), int(num_planes), int(bands), int(buckets), int(gen))],
-        "dim int, num_planes int, bands int, buckets int, gen int",
-    )
-    # reset=True starts a fresh meta log (generation 0); cutovers
-    # APPEND the next-gen row — the atomic flip (see write_meta_row)
-    write_meta_row(spark, meta, f"{name}_meta", reset=reset)
-
-
 def write_ann_store(
     vectors: DataFrame,
     name: str,
@@ -113,69 +85,47 @@ def write_ann_store(
     write is generation 0 (unsuffixed physical names); physical tables
     a previous store of the same name left behind — including suffixed
     maintenance generations — are swept first."""
-    sweep_stale_generations(
-        vectors.sparkSession, name, _SUFFIXES, -1
-    )  # current_gen=-1 matches no table: drop ALL generations
-    base = vectors.where(F.col(vec_col).isNotNull())
-    banded = base.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            sha_band_keys(
-                F.col(vec_col), dim=dim, num_planes=num_planes, bands=bands
-            )
-        ).alias("band_key"),
+    spark = vectors.sparkSession
+    # current_gen=-1 matches no table: drop ALL generations
+    sweep_stale_generations(spark, name, _SUFFIXES, -1)
+    banded, unit = _shard_projections(
+        vectors,
+        id_col=id_col,
+        vec_col=vec_col,
+        dim=dim,
+        num_planes=num_planes,
+        bands=bands,
     )
-    unit = with_l2_normalized(
-        base.select(F.col(id_col).alias("id"), vec_col), vec_col, "u"
-    ).select("id", "u")
     # The two table writes are independent projections of the same
-    # input — overlap them from a small thread pool (guide §2.6) so
-    # the second write's tasks back-fill the first's job tail. A fresh
-    # write is generation 0 and nothing reads the store mid-write, so
-    # commit order between the two tables carries no crash contract
-    # (unlike append, which stays bands-first).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_bands() -> None:
-        write_bucketed(
-            banded,
-            f"{name}_bands",
-            bucket_by="band_key",
-            buckets=buckets,
-            sort_by="band_key",
-        )
-
-    def _write_vectors() -> None:
-        write_bucketed(
-            unit,
-            f"{name}_vectors",
-            bucket_by="id",
-            buckets=buckets,
-            sort_by="id",
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_bands), pool.submit(_write_vectors)]:
-            fut.result()
+    # input, so they overlap (pooled_writes). A fresh write is
+    # generation 0 and nothing reads the store mid-write, so commit
+    # order between the two tables carries no crash contract (unlike
+    # append, which stays bands-first).
+    pooled_writes(spark, [
+        lambda: write_bucketed(
+            banded, f"{name}_bands", bucket_by="band_key",
+            buckets=buckets, sort_by="band_key",
+        ),
+        lambda: write_bucketed(
+            unit, f"{name}_vectors", bucket_by="id",
+            buckets=buckets, sort_by="id",
+        ),
+    ])
     # a rebuild starts a NEW store generation: tombstones from the
     # previous generation would silently delete rows from the fresh
     # store at read time and block re-appending their ids
-    clear_table(vectors.sparkSession, f"{name}_tombstones")
+    clear_table(spark, f"{name}_tombstones")
     # signature parameters ride with the store so a query-time mismatch
     # (whose band keys could NEVER collide -> silent recall-0) fails
     # loudly; buckets rides too so incremental appends reuse the
     # write-time bucket spec (a mismatched append would break the
-    # shuffle-free co-location guarantee)
-    _write_meta(
-        vectors.sparkSession,
-        name,
-        dim=dim,
-        num_planes=num_planes,
-        bands=bands,
-        buckets=buckets,
-        gen=0,
-        reset=True,  # a fresh store starts a new meta log
+    # shuffle-free co-location guarantee). A fresh store starts a new
+    # meta log at generation 0.
+    meta = spark.createDataFrame(
+        [(int(dim), int(num_planes), int(bands), int(buckets), 0)],
+        "dim int, num_planes int, bands int, buckets int, gen int",
     )
+    write_meta_row(spark, meta, f"{name}_meta", reset=True)
 
 
 def _shard_projections(
@@ -187,8 +137,8 @@ def _shard_projections(
     num_planes: int,
     bands: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """(banded, unit) frames of a shard under the store's signature —
-    the same two projections :func:`write_ann_store` materializes."""
+    """(banded, unit) frames of vectors under the store's signature —
+    the two tables :func:`write_ann_store` and every append write."""
     base = shard.where(F.col(vec_col).isNotNull())
     banded = base.select(
         F.col(id_col).alias("id"),
@@ -217,8 +167,7 @@ def _store_meta(
             f"ann store '{name}' has no meta table; (re)create it "
             "with write_ann_store"
         )
-    d = m.asDict()
-    has_buckets = "buckets" in d
+    has_buckets = "buckets" in m.asDict()
     if require_buckets and not has_buckets:
         raise ValueError(
             f"ann store '{name}' predates incremental ingest (its meta "
@@ -230,7 +179,7 @@ def _store_meta(
         int(m["num_planes"]),
         int(m["bands"]),
         int(m["buckets"]) if has_buckets else None,
-        int(d["gen"]) if d.get("gen") is not None else 0,
+        meta_gen(m),
     )
 
 
@@ -252,7 +201,7 @@ def band_stats_from_ann_store(
     from polars_text_spark.operators.dedup import band_bucket_stats
 
     banded = _minus_tombstones(
-        _read_store(spark, name, "bands"), _tombstones(spark, name)
+        spark.table(_phys(spark, name, "bands")), _tombstones(spark, name)
     )
     return band_bucket_stats(banded, ["band_key"], band_cap=band_cap)
 
@@ -279,42 +228,21 @@ def rebucket_store(spark: SparkSession, name: str, new_buckets: int) -> None:
     until the next maintenance window — re-bucketing is one shuffle,
     under-bucketing taxes every read until the next one.
 
-    Atomic since round 14 (VERDICT r13 #2): both tables are written as
-    a complete NEXT generation beside the live store, the meta row —
-    which every reader/appender resolves physical names through —
-    flips in ONE overwrite, and only then is the old generation
-    dropped. A crash at any point leaves the store fully on one
-    generation or the other (orphans/stale tables swept on the next
-    maintenance run); an append racing the rewrite aborts the rewrite
-    loudly (file-snapshot check) or raises on its own post-write
-    generation check, instead of silently writing at a stale bucket
-    count. See :func:`polars_text_spark.sources.bucketing.
-    rewrite_generation` for the failure-mode table."""
+    Atomic and race-checked: see
+    :func:`polars_text_spark.sources.bucketing.rewrite_generation`."""
     m = read_meta(spark, name)
     if m is None:
         raise ValueError(
             f"ann store '{name}' has no meta table; (re)create it "
             "with write_ann_store"
         )
-    d = m.asDict()
-    dim, num_planes, bands = (
-        int(d["dim"]), int(d["num_planes"]), int(d["bands"])
-    )
     rewrite_generation(
         spark,
         name,
         _SUFFIXES,
-        new_buckets=new_buckets,
-        gen=int(d["gen"]) if d.get("gen") is not None else 0,
-        write_meta=lambda gen: _write_meta(
-            spark,
-            name,
-            dim=dim,
-            num_planes=num_planes,
-            bands=bands,
-            buckets=new_buckets,
-            gen=gen,
-        ),
+        m,
+        snapshot_rewrite(spark, buckets=new_buckets),
+        changes={"buckets": int(new_buckets)},
     )
 
 
@@ -340,48 +268,24 @@ def purge_deleted(spark: SparkSession, name: str) -> None:
     the tombstone table. After this the store is byte-equivalent to
     one rebuilt from the filtered corpus (parity-tested) and
     re-appending previously-deleted ids becomes legal again. Atomic
-    via the generational protocol (round 14) — see
-    :func:`rebucket_store`; the tombstone clear happens AFTER the
-    cutover, so a crash between the two leaves reads correct (the
-    anti-join of already-purged ids is a no-op)."""
+    and race-checked: see
+    :func:`polars_text_spark.sources.bucketing.rewrite_generation`;
+    the tombstone clear happens AFTER the cutover, so a crash between
+    the two leaves reads correct (the anti-join of already-purged ids
+    is a no-op). A store without a meta table is refused, tombstones
+    and rows left in place."""
     ts = _tombstones(spark, name)
     if ts is None:
         return
-    ts = ts.localCheckpoint(eager=True)  # survives the table drops below
     m = read_meta(spark, name)
-    if m is None or m.asDict().get("buckets") is None:
-        # meta-less store (delete_ids never required meta — ADVICE
-        # r14) or pre-bucket-meta store: no complete meta row to flip
-        # — fall back to the in-place compaction swap (documented
-        # non-atomic; such stores predate incremental ingest anyway)
-        from polars_text_spark.sources.bucketing import compact_table
-
-        compact_table(spark, f"{name}_bands", anti=ts, anti_on="id")
-        compact_table(spark, f"{name}_vectors", anti=ts, anti_on="id")
-        clear_table(spark, f"{name}_tombstones")
-        return
-    d = m.asDict()
-    dim, num_planes, bands, buckets = (
-        int(d["dim"]), int(d["num_planes"]),
-        int(d["bands"]), int(d["buckets"]),
-    )
-    rewrite_generation(
-        spark,
-        name,
-        _SUFFIXES,
-        anti=ts,
-        anti_on="id",
-        gen=int(d["gen"]) if d.get("gen") is not None else 0,
-        write_meta=lambda gen: _write_meta(
-            spark,
-            name,
-            dim=dim,
-            num_planes=num_planes,
-            bands=bands,
-            buckets=buckets,
-            gen=gen,
-        ),
-    )
+    if m is None:
+        raise ValueError(
+            f"ann store '{name}' has no meta table; rewrite it with "
+            "write_ann_store from its live rows instead of purging in "
+            "place"
+        )
+    ts = ts.localCheckpoint(eager=True)  # survives the table drops below
+    rewrite_generation(spark, name, _SUFFIXES, m, snapshot_rewrite(spark, anti=ts))
     clear_table(spark, f"{name}_tombstones")
 
 
@@ -617,8 +521,7 @@ def topk_from_store(
             "collide with the store"
         )
     # generation from the SAME meta row — no second meta-log collect
-    __d = m.asDict()
-    __gen = int(__d["gen"]) if __d.get("gen") is not None else 0
+    __gen = meta_gen(m)
     # wrong-dim queries fail loudly inside sha_band_keys (in-plan
     # guard, round 16) when the banding projection first runs
     base = queries.where(F.col(vec_col).isNotNull()).select(
@@ -653,7 +556,7 @@ def topk_from_store(
     cands = store_bands.join(q_bands, "band_key").select(
         "query_id", "neighbor_id"
     )
-    __buckets = __d.get("buckets")
+    __buckets = m.asDict().get("buckets")
     if __buckets:
         cands = cands.repartition(int(__buckets), F.col("neighbor_id"))
     else:

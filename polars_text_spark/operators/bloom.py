@@ -315,23 +315,15 @@ def write_bloom_store(
     the probe exact, so the table stays trivially small relative to
     any corpus."""
     from polars_text_spark.sources.bucketing import (
-        clear_table,
         sweep_stale_generations,
         write_meta_row,
     )
 
     spark = df.sparkSession
     # a fresh write starts a NEW store: drop EVERY physical generation
-    # a previous store of this name left behind (gen -1 matches none);
-    # clear_table additionally removes a stale warehouse DIRECTORY a
-    # previous SESSION's drop left behind, which the catalog sweep
-    # cannot see and which would block the saveAsTable
+    # a previous store of this name left behind (gen -1 matches none)
     sweep_stale_generations(spark, name, ("words",), -1)
-    words = _word_frame(df, col, m_bits, n_hashes, seed)
-    clear_table(spark, f"{name}_words")
-    words.write.format("parquet").mode("overwrite").saveAsTable(
-        f"{name}_words"
-    )
+    _save_words(_word_frame(df, col, m_bits, n_hashes, seed), f"{name}_words")
     meta = spark.createDataFrame(
         [(int(m_bits), int(n_hashes), int(seed), 0)],
         "m_bits bigint, n_hashes int, seed bigint, gen int",
@@ -339,10 +331,19 @@ def write_bloom_store(
     write_meta_row(spark, meta, f"{name}_meta", reset=True)
 
 
-def _bloom_meta(spark, name: str) -> tuple[int, int, int, int]:
-    """(m_bits, n_hashes, seed, generation) from the store meta —
-    resolved through the max-gen row (metas predating the ``gen``
-    column read as generation 0)."""
+def _save_words(words: DataFrame, table: str) -> None:
+    """Write a word set as a fresh table. clear_table also removes a
+    stale warehouse DIRECTORY a previous session's drop left behind
+    (invisible to the catalog sweep), which would otherwise block the
+    saveAsTable with LOCATION_ALREADY_EXISTS."""
+    from polars_text_spark.sources.bucketing import clear_table
+
+    clear_table(words.sparkSession, table)
+    words.write.format("parquet").mode("overwrite").saveAsTable(table)
+
+
+def _bloom_row(spark, name: str):
+    """The store's current (max-gen) meta row; raises without one."""
     from polars_text_spark.sources.bucketing import read_meta
 
     m = read_meta(spark, name)
@@ -351,9 +352,17 @@ def _bloom_meta(spark, name: str) -> tuple[int, int, int, int]:
             f"bloom store '{name}' has no meta table; (re)create it "
             "with write_bloom_store"
         )
-    d = m.asDict()
-    gen = int(d["gen"]) if d.get("gen") is not None else 0
-    return int(m["m_bits"]), int(m["n_hashes"]), int(m["seed"]), gen
+    return m
+
+
+def _bloom_meta(spark, name: str) -> tuple[int, int, int, int]:
+    """(m_bits, n_hashes, seed, generation) from the store meta —
+    resolved through the max-gen row (metas predating the ``gen``
+    column read as generation 0)."""
+    from polars_text_spark.sources.bucketing import meta_gen
+
+    m = _bloom_row(spark, name)
+    return int(m["m_bits"]), int(m["n_hashes"]), int(m["seed"]), meta_gen(m)
 
 
 def _words_table(name: str, gen: int) -> str:
@@ -373,16 +382,9 @@ def append_bloom_shard(df: DataFrame, col: str, name: str) -> None:
     write and raises conservatively, and re-running it is always safe
     (re-ORing bits is idempotent in both worlds).
 
-    Race coverage (round 16): an append that starts AND completes
-    entirely inside the sub-second gap between the rebuild's final
-    file re-list and its meta flip passes both this check and the
-    rebuild's snapshot check — the rebuild's POST-flip audit
-    (:func:`polars_text_spark.sources.bucketing.postflip_append_audit`)
-    then sees its files under the old generation and raises with the
-    old generation preserved, so every interleaving is loud on at
-    least one side. Re-running a raced append is always safe
-    (re-ORing bits is idempotent in both worlds); a writer-free
-    rebuild window stays the operationally clean choice."""
+    Every other interleaving is caught by the rebuild itself: see the
+    race table of
+    :func:`polars_text_spark.sources.bucketing.rewrite_generation`."""
     from polars_text_spark.sources.bucketing import (
         check_generation_unchanged,
     )
@@ -423,29 +425,15 @@ def rebuild_bloom_store(
 ) -> None:
     """Re-derive the store from its AUTHORITY key set — the deletion
     verb a Bloom filter's no-unset physics forces (docstring of
-    :func:`write_bloom_store`), now on the generational cutover
-    protocol (VERDICT r14 #5): the new word set is written as
-    ``<name>_words_g<gen+1>`` beside the live table, the live table's
-    file set is re-listed against a start-of-rebuild snapshot — a
+    :func:`write_bloom_store`), on the generational cutover of the
+    MinHash/ANN stores (VERDICT r14 #5): the new word set is written
+    as ``<name>_words_g<gen+1>`` beside the live table, and a
     :func:`stream_into_bloom_store` trigger or ``append_bloom_shard``
     that OR'd bits in during the rebuild aborts it LOUDLY instead of
-    losing those keys at the flip — then the meta row flips in one
-    append and the old generation is dropped. Readers see the old
-    filter or the new one, never a missing or half-written word set.
-
-    Race coverage (round 16 — the formerly-documented residual window
-    is CLOSED by detection): an append that starts and completes
-    entirely between this function's final file re-list and its meta
-    flip is visible to neither of the checks above — so a POST-flip
-    audit re-lists the old generation's files once more after the
-    cutover commits and raises if any appeared, with the old
-    generation preserved for recovery
-    (:func:`polars_text_spark.sources.bucketing.postflip_append_audit`).
-    Every interleaving now raises on at least one side; the post-flip
-    raise means the new generation is live WITHOUT the raced keys, so
-    re-run those appends (idempotent re-OR). Pausing streaming
-    triggers and shard appends for the rebuild remains the
-    operationally clean choice.
+    losing those keys at the flip. Readers see the old filter or the
+    new one, never a missing or half-written word set. Atomic and
+    race-checked: see
+    :func:`polars_text_spark.sources.bucketing.rewrite_generation`.
 
     Parameters default to the store's recorded ones; pass new values
     to resize while rebuilding (the one chance to grow ``m_bits``,
@@ -453,53 +441,34 @@ def rebuild_bloom_store(
     ``authority`` must include every key appended up to the rebuild's
     start — keys appended DURING the rebuild are what the snapshot
     check catches."""
-    from polars_text_spark.sources.bucketing import (
-        _list_files,
-        clear_table,
-        snapshot_files,
-        sweep_stale_generations,
-        write_meta_row,
-    )
+    from polars_text_spark.sources.bucketing import rewrite_generation
 
-    old_m, old_k, old_seed, gen = _bloom_meta(spark, name)
-    m_bits = int(m_bits) if m_bits is not None else old_m
-    n_hashes = int(n_hashes) if n_hashes is not None else old_k
-    seed = int(seed) if seed is not None else old_seed
-    sweep_stale_generations(spark, name, ("words",), gen)
-    nxt = gen + 1
-    live = _words_table(name, gen)
-    loc, schema, before = snapshot_files(spark, live)
-    dst = _words_table(name, nxt)
-    # clear_table also removes a stale warehouse DIRECTORY a previous
-    # session left behind (invisible to the catalog sweep), which
-    # would otherwise block the saveAsTable with LOCATION_ALREADY_EXISTS
-    clear_table(spark, dst)
-    try:
-        _word_frame(authority, col, m_bits, n_hashes, seed).write.format(
-            "parquet"
-        ).mode("overwrite").saveAsTable(dst)
-        if _list_files(spark, loc, schema) != before:
-            raise RuntimeError(
-                f"bloom store '{name}': the live word table changed "
-                "under the rebuild — a streaming trigger or shard "
-                "append OR'd bits in during the window, and the flip "
-                "would silently lose those keys. The store is "
-                "untouched; re-run the rebuild with an authority set "
-                "that includes them, in a writer-free window"
-            )
-    except BaseException:
-        clear_table(spark, dst)
-        raise
-    meta = spark.createDataFrame(
-        [(int(m_bits), int(n_hashes), int(seed), int(nxt))],
-        "m_bits bigint, n_hashes int, seed bigint, gen int",
+    m = _bloom_row(spark, name)
+    changes = {
+        k: int(v)
+        for k, v in (("m_bits", m_bits), ("n_hashes", n_hashes), ("seed", seed))
+        if v is not None
+    }
+    params = {**m.asDict(), **changes}
+    rewrite_generation(
+        spark,
+        name,
+        ("words",),
+        m,
+        lambda dst, _: _save_words(
+            _word_frame(
+                authority, col, int(params["m_bits"]),
+                int(params["n_hashes"]), int(params["seed"]),
+            ),
+            dst["words"],
+        ),
+        changes=changes,
+        raced=(
+            "bloom store '{name}': the live word table changed under "
+            "the rebuild — a streaming trigger or shard append OR'd "
+            "bits in during the window, and the flip would silently "
+            "lose those keys. The store is untouched; re-run the "
+            "rebuild with an authority set that includes them, in a "
+            "writer-free window"
+        ),
     )
-    write_meta_row(spark, meta, f"{name}_meta")  # THE atomic cutover
-    # post-flip audit (round 16): an append/trigger that OR'd bits in
-    # entirely between the re-list above and the meta flip evaded
-    # both checks — catch it here, preserving the old generation
-    # (see bucketing.postflip_append_audit for the recovery contract)
-    from polars_text_spark.sources.bucketing import postflip_append_audit
-
-    postflip_append_audit(spark, name, [(live, loc, schema, before)], nxt)
-    clear_table(spark, live)

@@ -25,10 +25,10 @@ bucketed+sorted by ``id``. Signature parameters are embedded at write
 time; pass the same ones when pairing a new shard. Since round 14 the
 PHYSICAL table names are generational (``<name>_bands_g1`` after the
 first maintenance rewrite) and ``<name>_meta`` is the atomic pointer:
-resolve through :func:`_phys` (or ``sources.bucketing.phys_table`` +
-``store_generation``) instead of hardcoding names — the unsuffixed
-names are only guaranteed for a store that has never had
-rebucket/purge run.
+resolve through :func:`_phys` (``sources.bucketing.live_table``, or
+``phys_table`` + ``store_generation``) instead of hardcoding names —
+the unsuffixed names are only guaranteed for a store that has never
+had rebucket/purge run.
 """
 
 from __future__ import annotations
@@ -45,12 +45,16 @@ from polars_text_spark.operators.dedup import (
 )
 from polars_text_spark.sources.bucketing import (
     check_generation_unchanged as _check_generation_unchanged,
+    clear_table,
+    live_table as _phys,
+    meta_gen,
     minus_tombstones as _minus_tombstones,
     phys_table,
     probe_id_clash,
     read_meta,
     read_tombstones as _tombstones,
     rewrite_generation,
+    snapshot_rewrite,
     store_generation,
     sweep_stale_generations,
     tombstone_ids,
@@ -73,18 +77,6 @@ __all__ = [
 _SUFFIXES = ("bands", "shingles")
 
 
-def _phys(spark: SparkSession, name: str, suffix: str) -> str:
-    """Current physical catalog name of a store table, resolved
-    through the meta generation pointer (round 14: maintenance writes
-    a complete next generation and flips the meta row atomically, so
-    every read/append resolves HERE instead of hardcoding names)."""
-    return phys_table(name, suffix, store_generation(spark, name))
-
-
-def _read_store(spark: SparkSession, name: str, suffix: str) -> DataFrame:
-    return spark.table(_phys(spark, name, suffix))
-
-
 def _write_meta(
     spark: SparkSession,
     name: str,
@@ -94,24 +86,62 @@ def _write_meta(
     shingle_n: int,
     buckets: int,
     hashv: int,
-    gen: int,
-    reset: bool = False,
 ) -> None:
+    """Start a fresh meta log at generation 0 (cutovers append their
+    rows in :func:`~polars_text_spark.sources.bucketing.rewrite_generation`)."""
     meta = spark.createDataFrame(
-        [(
-            int(num_perm),
-            int(bands),
-            int(shingle_n),
-            int(buckets),
-            int(hashv),
-            int(gen),
-        )],
+        [(int(num_perm), int(bands), int(shingle_n), int(buckets), int(hashv), 0)],
         "num_perm int, bands int, shingle_n int, buckets int, "
         "hashv int, gen int",
     )
-    # reset=True starts a fresh meta log (generation 0); cutovers
-    # APPEND the next-gen row — the atomic flip (see write_meta_row)
-    write_meta_row(spark, meta, f"{name}_meta", reset=reset)
+    write_meta_row(spark, meta, f"{name}_meta", reset=True)
+
+
+def _write_tables(
+    rows: DataFrame,
+    shingles_tbl: str,
+    bands_tbl: str,
+    *,
+    text_col: str,
+    id_col: str,
+    num_perm: int,
+    bands: int,
+    shingle_n: int,
+    buckets: int,
+) -> None:
+    """Write a whole store's shingle and band tables from ``rows`` in
+    ONE pass over the text (round 15): the shingle table is written
+    first, then the band signatures are derived from READING IT BACK —
+    a columnar scan of hashed-shingle longs instead of a second
+    tokenize pass, and since the table is bucketed by id, the minhash
+    groupBy(id) aggregation runs with no Exchange. The body of
+    :func:`write_minhash_store` and :func:`rebuild_minhash_store`."""
+    shingles = rows.select(
+        F.col(id_col).alias("id"),
+        token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
+    )
+    write_bucketed(
+        shingles, shingles_tbl, bucket_by="id", buckets=buckets, sort_by="id"
+    )
+    banded = _banded_signatures(
+        rows.sparkSession.table(shingles_tbl), text_col, "id", "id",
+        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
+        shingles_col="sh",
+    ).select(
+        "id",
+        F.col("bk.band").alias("band"),
+        F.col("bk.bucket").alias("bucket"),
+        # full-signature key: the hot-band guard stars saturated
+        # buckets per signature group (see dedup._guarded_self_pairs)
+        F.col("__sig").alias("sig"),
+    )
+    write_bucketed(
+        banded,
+        bands_tbl,
+        bucket_by=["band", "bucket"],
+        buckets=buckets,
+        sort_by=["band", "bucket"],
+    )
 
 
 def write_minhash_store(
@@ -126,51 +156,19 @@ def write_minhash_store(
     buckets: int = 8,
 ) -> None:
     """Materialize ``<name>_shingles`` and ``<name>_bands`` bucketed
-    tables for ``df``. ONE pass over the text (round 15): the shingle
-    table is written first, then the band signatures are derived from
-    READING IT BACK — a columnar scan of hashed-shingle longs instead
-    of a second tokenize pass over the corpus, and since the table is
-    bucketed by id, the minhash groupBy(id) aggregation runs with no
-    Exchange. A fresh write is generation 0 (unsuffixed physical
-    names); any physical tables a previous store of the same name left
-    behind — including suffixed maintenance generations — are swept
-    first."""
+    tables for ``df`` in one pass over the text (:func:`_write_tables`).
+    A fresh write is generation 0 (unsuffixed physical names); any
+    physical tables a previous store of the same name left behind —
+    including suffixed maintenance generations — are swept first."""
     spark = df.sparkSession
-    from polars_text_spark.sources.bucketing import clear_table
-
     # a rebuild starts a NEW store: sweep EVERY physical generation of
     # the old one (current_gen=-1 matches no table, so all are
     # dropped), then write fresh at generation 0
     sweep_stale_generations(spark, name, _SUFFIXES, -1)
-    shingles = df.select(
-        F.col(id_col).alias("id"),
-        token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
-    )
-    write_bucketed(
-        shingles,
-        f"{name}_shingles",
-        bucket_by="id",
-        buckets=buckets,
-        sort_by="id",
-    )
-    banded = _banded_signatures(
-        spark.table(f"{name}_shingles"), text_col, "id", "id",
-        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-        shingles_col="sh",
-    ).select(
-        "id",
-        F.col("bk.band").alias("band"),
-        F.col("bk.bucket").alias("bucket"),
-        # full-signature key: the hot-band guard stars saturated
-        # buckets per signature group (see dedup._guarded_self_pairs)
-        F.col("__sig").alias("sig"),
-    )
-    write_bucketed(
-        banded,
-        f"{name}_bands",
-        bucket_by=["band", "bucket"],
-        buckets=buckets,
-        sort_by=["band", "bucket"],
+    _write_tables(
+        df, f"{name}_shingles", f"{name}_bands",
+        text_col=text_col, id_col=id_col, num_perm=num_perm,
+        bands=bands, shingle_n=shingle_n, buckets=buckets,
     )
     # a rebuild starts a NEW store generation: tombstones from the
     # previous generation would silently delete rows from the fresh
@@ -192,8 +190,6 @@ def write_minhash_store(
         shingle_n=shingle_n,
         buckets=buckets,
         hashv=SHINGLE_HASH_VERSION,
-        gen=0,
-        reset=True,  # a fresh store starts a new meta log
     )
 
 
@@ -258,9 +254,9 @@ def append_minhash_shard(
     are never rewritten — ingest writes O(shard) data (the
     disjointness probe does read the store's id column, shuffle-free,
     to prove no clash). After the append, :func:`pairs_from_store` answers over the
-    grown corpus; compact with
-    :func:`polars_text_spark.sources.bucketing.compact_table` once
-    append fragments accumulate.
+    grown corpus; once append fragments accumulate,
+    :func:`rebucket_minhash_store` at the current bucket count merges
+    them to one file per bucket.
 
     Contract: shard ids must be DISJOINT from store ids AND from any
     pending tombstones (enforced with a semi-join probe — the shard
@@ -302,13 +298,12 @@ def _append_meta(
             "appending shards"
         )
     _assert_hash_family(spark, name, meta_row=m)
-    d = m.asDict()
     return (
-        int(d["num_perm"]),
-        int(d["bands"]),
-        int(d["shingle_n"]),
-        int(d["buckets"]),
-        int(d["gen"]) if d.get("gen") is not None else 0,
+        int(m["num_perm"]),
+        int(m["bands"]),
+        int(m["shingle_n"]),
+        int(m["buckets"]),
+        meta_gen(m),
     )
 
 
@@ -414,53 +409,27 @@ def rebucket_minhash_store(
     :func:`polars_text_spark.operators.ann_store.rebucket_store`
     (same rationale and sizing guidance: the bucket count frozen at
     write time makes a 100x-grown store read corpus/buckets rows per
-    co-located task until this one rewrite shuffle per table).
-    Signature parameters, contents, and pending tombstones are
+    co-located task until this one rewrite shuffle per table; at the
+    CURRENT count it is the compaction pass that merges append
+    fragments to one file per bucket). Signature parameters, the
+    recorded hash family, contents, and pending tombstones are
     preserved; :func:`pairs_from_store` answers are identical before
-    and after (parity-tested).
-
-    Atomic since round 14 (VERDICT r13 #2): both tables are written
-    as a complete NEXT generation beside the live store, the meta row
-    — which every reader/appender resolves physical names through —
-    flips in ONE overwrite, and only then is the old generation
-    dropped. A crash at any point leaves the store fully on one
-    generation or the other (orphans/stale tables are swept on the
-    next maintenance run); an append racing the rewrite aborts the
-    rewrite loudly instead of silently corrupting co-location. See
-    :func:`polars_text_spark.sources.bucketing.rewrite_generation`
-    for the full failure-mode table."""
-    old = read_meta(spark, name)
-    if old is None:
+    and after (parity-tested). Atomic and race-checked: see
+    :func:`polars_text_spark.sources.bucketing.rewrite_generation`."""
+    m = read_meta(spark, name)
+    if m is None:
         raise ValueError(
             f"minhash store '{name}' predates the meta table; rewrite "
             "it with write_minhash_store (which also records the "
             "bucket count) instead of re-bucketing in place"
         )
-    d = old.asDict()
-    num_perm, bands, shingle_n = (
-        int(d["num_perm"]), int(d["bands"]), int(d["shingle_n"])
-    )
-    # preserve the recorded shingle hash FAMILY — re-bucketing moves
-    # rows, it does not re-derive them, so stamping the current
-    # version onto an older store would let appends corrupt it
-    hashv = int(d["hashv"]) if d.get("hashv") is not None else 1
-
     rewrite_generation(
         spark,
         name,
         _SUFFIXES,
-        new_buckets=new_buckets,
-        gen=int(d["gen"]) if d.get("gen") is not None else 0,
-        write_meta=lambda gen: _write_meta(
-            spark,
-            name,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_n=shingle_n,
-            buckets=new_buckets,
-            hashv=hashv,
-            gen=gen,
-        ),
+        m,
+        snapshot_rewrite(spark, buckets=new_buckets),
+        changes={"buckets": int(new_buckets)},
     )
 
 
@@ -485,26 +454,19 @@ def rebuild_minhash_store(
 
     ``corpus_df`` must be the store's authority corpus (the same rows
     the store was built and appended from; tombstoned rows may be
-    included — reads keep anti-joining them). The cutover is the
-    atomic generational protocol: both new tables are written beside
-    the live ones from the corpus, the live tables' file sets are
-    re-listed against a start-of-rebuild snapshot — an append that
-    completed during the (long) re-derivation window aborts the
-    rebuild loudly, since its rows are not in ``corpus_df`` and the
-    flip would silently drop them (ADVICE r14) — then the meta row
-    flips in one append (recording the current
-    :data:`~polars_text_spark.operators.dedup.SHINGLE_HASH_VERSION`),
-    then the old generation is dropped — readers never see a
-    mixed-family store. After this, :func:`append_minhash_shard` and
+    included — reads keep anti-joining them). An append that completes
+    during the (long) re-derivation is not in ``corpus_df``, so the
+    cutover aborts loudly instead of dropping it (ADVICE r14). The
+    next meta row records the current
+    :data:`~polars_text_spark.operators.dedup.SHINGLE_HASH_VERSION`;
+    readers never see a mixed-family store. Atomic and race-checked:
+    see :func:`polars_text_spark.sources.bucketing.rewrite_generation`.
+    After this, :func:`append_minhash_shard` and
     :func:`incremental_pairs_from_store` accept the store again, and
     :func:`pairs_from_store` is value-identical to a fresh
     :func:`write_minhash_store` of the same corpus (parity-tested;
     the ``minhash_store_migrate`` driver query pins the lifecycle)."""
     from polars_text_spark.operators.dedup import SHINGLE_HASH_VERSION
-    from polars_text_spark.sources.bucketing import (
-        _list_files,
-        snapshot_files,
-    )
 
     m = read_meta(spark, name)
     if m is None:
@@ -514,111 +476,25 @@ def rebuild_minhash_store(
             "tombstones, which a pre-meta store cannot have recorded "
             "reliably"
         )
-    d = m.asDict()
-    num_perm, bands, shingle_n, buckets = (
-        int(d["num_perm"]), int(d["bands"]),
-        int(d["shingle_n"]), int(d["buckets"]),
-    )
-    gen = int(d["gen"]) if d.get("gen") is not None else 0
-    sweep_stale_generations(spark, name, _SUFFIXES, gen)
-    nxt = gen + 1
-
-    # Point-in-time snapshot of the LIVE tables' file sets (ADVICE
-    # r14): the rebuild derives the next generation from corpus_df,
-    # not from these files, so an append completing during the long
-    # re-derivation window would land rows in the old tables that are
-    # NOT in corpus_df — silently dropped at the flip. The re-list
-    # before the flip turns that into the same loud abort
-    # rewrite_generation gives rebucket/purge.
-    snapshots = {
-        s: snapshot_files(spark, phys_table(name, s, gen))
-        for s in _SUFFIXES
-    }
-
-    shingles = corpus_df.select(
-        F.col(id_col).alias("id"),
-        token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
-    )
-    new_tables = [
-        phys_table(name, "shingles", nxt),
-        phys_table(name, "bands", nxt),
-    ]
-    try:
-        # ONE tokenize pass over the corpus (round 15): the next-gen
-        # shingle table is written first and the band signatures are
-        # derived from reading it back — columnar longs, and the
-        # id-bucketed scan makes the minhash groupBy(id) exchange-free.
-        # Write order inside a NEXT generation is crash-irrelevant
-        # (orphans are swept; the store flips only at the meta append).
-        write_bucketed(
-            shingles,
-            new_tables[0],
-            bucket_by="id",
-            buckets=buckets,
-            sort_by="id",
-        )
-        banded = _banded_signatures(
-            spark.table(new_tables[0]), text_col, "id", "id",
-            num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-            shingles_col="sh",
-        ).select(
-            "id",
-            F.col("bk.band").alias("band"),
-            F.col("bk.bucket").alias("bucket"),
-            F.col("__sig").alias("sig"),
-        )
-        write_bucketed(
-            banded,
-            new_tables[1],
-            bucket_by=["band", "bucket"],
-            buckets=buckets,
-            sort_by=["band", "bucket"],
-        )
-        for s in _SUFFIXES:
-            loc, schema, before = snapshots[s]
-            if _list_files(spark, loc, schema) != before:
-                raise RuntimeError(
-                    f"store '{name}': table files changed under the "
-                    f"rebuild ({phys_table(name, s, gen)}) — an append "
-                    "raced the rebuild and its rows are not in the "
-                    "supplied corpus_df. The store is untouched (the "
-                    "appended rows are live); re-run the rebuild with "
-                    "a corpus that includes them, in a writer-free "
-                    "window"
-                )
-    except BaseException:
-        from polars_text_spark.sources.bucketing import clear_table
-
-        for t in new_tables:
-            clear_table(spark, t)
-        raise
-    _write_meta(
+    params = {k: int(m[k]) for k in ("num_perm", "bands", "shingle_n", "buckets")}
+    rewrite_generation(
         spark,
         name,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
-        buckets=buckets,
-        hashv=SHINGLE_HASH_VERSION,
-        gen=nxt,
-    )  # THE atomic cutover — tombstones untouched
-    from polars_text_spark.sources.bucketing import (
-        clear_table,
-        postflip_append_audit,
+        _SUFFIXES,
+        m,
+        lambda dst, _: _write_tables(
+            corpus_df, dst["shingles"], dst["bands"],
+            text_col=text_col, id_col=id_col, **params,
+        ),
+        changes={"hashv": SHINGLE_HASH_VERSION},
+        raced=(
+            "store '{name}': table files changed under the rebuild "
+            "({table}) — an append raced the rebuild and its rows are "
+            "not in the supplied corpus_df. The store is untouched (the "
+            "appended rows are live); re-run the rebuild with a corpus "
+            "that includes them, in a writer-free window"
+        ),
     )
-
-    # post-flip audit (round 16): an append that landed entirely in
-    # the re-list -> flip gap is invisible to both checks above —
-    # catch it here, preserving the old generation (see
-    # postflip_append_audit for the recovery contract)
-    postflip_append_audit(
-        spark,
-        name,
-        [(phys_table(name, s, gen), *snapshots[s]) for s in _SUFFIXES],
-        nxt,
-    )
-    for s in _SUFFIXES:  # old generation's names are known exactly
-        clear_table(spark, phys_table(name, s, gen))
 
 
 def delete_ids(ids: DataFrame, name: str, *, id_col: str = "doc_id") -> None:
@@ -636,57 +512,25 @@ def purge_deleted(spark: SparkSession, name: str) -> None:
     """Fold the tombstone set into the store files: rewrite both
     bucketed tables with the tombstones anti-joined away, then clear
     the tombstone table. After this the store is equivalent to one
-    rebuilt from the filtered corpus (parity-tested). Atomic via the
-    generational protocol (round 14) — see
-    :func:`rebucket_minhash_store`; the tombstone clear happens AFTER
-    the cutover, so a crash between the two leaves reads correct
-    (the anti-join of already-purged ids is a no-op)."""
-    from polars_text_spark.sources.bucketing import clear_table
-
+    rebuilt from the filtered corpus (parity-tested). Atomic and
+    race-checked: see
+    :func:`polars_text_spark.sources.bucketing.rewrite_generation`;
+    the tombstone clear happens AFTER the cutover, so a crash between
+    the two leaves reads correct (the anti-join of already-purged ids
+    is a no-op). A store without a meta table is refused, tombstones
+    and rows left in place."""
     ts = _tombstones(spark, name)
     if ts is None:
         return
-    ts = ts.localCheckpoint(eager=True)  # survives the table drops below
-    from polars_text_spark.sources.bucketing import compact_table
-
     m = read_meta(spark, name)
-    old_meta = m.asDict() if m is not None else None
-
-    if old_meta is None:
-        # pre-meta store: no pointer to flip — fall back to the
-        # in-place compaction swap (documented non-atomic; such
-        # stores should be rebuilt anyway — see _assert_hash_family)
-        compact_table(spark, f"{name}_bands", anti=ts, anti_on="id")
-        compact_table(spark, f"{name}_shingles", anti=ts, anti_on="id")
-        clear_table(spark, f"{name}_tombstones")
-        return
-    num_perm, bands, shingle_n, buckets = (
-        int(old_meta["num_perm"]), int(old_meta["bands"]),
-        int(old_meta["shingle_n"]), int(old_meta["buckets"]),
-    )
-    hashv = (
-        int(old_meta["hashv"]) if old_meta.get("hashv") is not None else 1
-    )
-    rewrite_generation(
-        spark,
-        name,
-        _SUFFIXES,
-        anti=ts,
-        anti_on="id",
-        gen=(
-            int(old_meta["gen"]) if old_meta.get("gen") is not None else 0
-        ),
-        write_meta=lambda gen: _write_meta(
-            spark,
-            name,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_n=shingle_n,
-            buckets=buckets,
-            hashv=hashv,
-            gen=gen,
-        ),
-    )
+    if m is None:
+        raise ValueError(
+            f"minhash store '{name}' has no meta table; rewrite it with "
+            "write_minhash_store from its live rows instead of purging "
+            "in place"
+        )
+    ts = ts.localCheckpoint(eager=True)  # survives the table drops below
+    rewrite_generation(spark, name, _SUFFIXES, m, snapshot_rewrite(spark, anti=ts))
     clear_table(spark, f"{name}_tombstones")
 
 
@@ -706,7 +550,7 @@ def band_stats_from_store(
     from polars_text_spark.operators.dedup import band_bucket_stats
 
     banded = _minus_tombstones(
-        _read_store(spark, name, "bands"), _tombstones(spark, name)
+        spark.table(_phys(spark, name, "bands")), _tombstones(spark, name)
     )
     sig_col = "sig" if "sig" in banded.columns else None
     return band_bucket_stats(
@@ -720,7 +564,7 @@ def candidate_self_join(spark: SparkSession, name: str) -> DataFrame:
     (both sides read the same bucketing; a pending tombstone set adds
     only a broadcast anti-join above each scan)."""
     banded = _minus_tombstones(
-        _read_store(spark, name, "bands"), _tombstones(spark, name)
+        spark.table(_phys(spark, name, "bands")), _tombstones(spark, name)
     )
     left = banded.select(F.col("id").alias("id_a"), "band", "bucket")
     right = banded.select(F.col("id").alias("id_b"), "band", "bucket")
@@ -859,11 +703,7 @@ def incremental_pairs_from_store(
         F.col("bk.bucket").alias("bucket"),
     )
     __ts = _tombstones(spark, name)
-    __gen = (
-        int(m["gen"])
-        if m is not None and m.asDict().get("gen") is not None
-        else 0
-    )
+    __gen = meta_gen(m)
     standing = _minus_tombstones(
         spark.table(phys_table(name, "bands", __gen)), __ts
     )

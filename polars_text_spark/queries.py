@@ -8624,11 +8624,10 @@ def q_minhash_store_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         name,
     )
-    # simulate the legacy store: stamp the v1 family into the meta
-    # (reset: replace the fresh store's meta log, not append to it)
+    # simulate the legacy store: stamp the v1 family into a fresh
+    # meta log (replacing the store's, not appending to it)
     _write_meta(
-        spark, name, num_perm=64, bands=16, shingle_n=3, buckets=4,
-        hashv=1, gen=0, reset=True,
+        spark, name, num_perm=64, bands=16, shingle_n=3, buckets=4, hashv=1,
     )
     try:
         append_minhash_shard(shard, name)

@@ -198,36 +198,34 @@ def test_topk_against_shard_store_side_shuffle_free(spark, vectors, no_broadcast
 
 
 def test_compact_store_merges_append_fragments(spark, vectors, no_broadcast):
-    """Three appends fragment the bucket files; compaction merges them
-    to one file per bucket, preserves every row, and keeps the
-    co-located (Bucketed: true) scan."""
+    """Three appends fragment the bucket files; a rebucket at the
+    CURRENT count (the store's compaction pass) merges them to one
+    file per bucket, preserves every row, and keeps the co-located
+    (Bucketed: true) scan."""
     import pyspark.sql.functions as F  # noqa: F811
 
-    from polars_text_spark.sources.bucketing import compact_table
+    from polars_text_spark.operators.ann_store import _phys, rebucket_store
 
     base = vectors.filter(F.col("vec_id") % 4 == 1)
     write_ann_store(base, "ann_store_c", dim=64, buckets=4)
     for rem in (2, 3, 0):
         append_ann_shard(vectors.filter(F.col("vec_id") % 4 == rem), "ann_store_c")
-    before = {
-        (r.id, tuple(r.u))
-        for r in read_bucketed(spark, "ann_store_c_vectors").collect()
-    }
-    import glob
-    import os
 
-    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    loc = os.path.join(warehouse, "ann_store_c_vectors")
-    n_before = len(glob.glob(f"{loc}/*.parquet"))
-    n_after = compact_table(spark, "ann_store_c_vectors")
-    assert n_after < n_before
-    assert n_after <= 4  # one file per bucket
-    after = {
-        (r.id, tuple(r.u))
-        for r in read_bucketed(spark, "ann_store_c_vectors").collect()
-    }
-    assert after == before
-    compact_table(spark, "ann_store_c_bands")
+    def rows(suffix):
+        return {
+            tuple(r) for r in spark.table(_phys(spark, "ann_store_c", suffix))
+            .selectExpr("id", "to_json(struct(*))").collect()
+        }
+
+    def n_files(suffix):
+        return len(spark.table(_phys(spark, "ann_store_c", suffix)).inputFiles())
+
+    before = {s: (rows(s), n_files(s)) for s in ("bands", "vectors")}
+    rebucket_store(spark, "ann_store_c", 4)
+    for s, (content, n_before) in before.items():
+        assert rows(s) == content, s
+        assert n_files(s) < n_before, s
+        assert n_files(s) <= 4, s  # one file per bucket
     # compacted store still answers shuffle-free on the store side
     qs = vectors.filter(F.col("vec_id") < 3)
     plan = explain_str(
@@ -237,15 +235,25 @@ def test_compact_store_merges_append_fragments(spark, vectors, no_broadcast):
     assert plan.count("Exchange") == 4, plan
 
 
-def test_compact_rejects_unbucketed_table(spark):
+def test_compact_rejects_unbucketed_table(spark, vectors):
+    """The rebucket/purge rewrite (the store's compaction pass) refuses
+    a store table that is not bucketed, leaving the store untouched."""
     import pytest as _pytest
 
-    from polars_text_spark.sources.bucketing import clear_table, compact_table
+    from polars_text_spark.operators.ann_store import rebucket_store
+    from polars_text_spark.sources.bucketing import (
+        clear_table,
+        store_generation,
+    )
 
-    clear_table(spark, "plain_tbl")
-    spark.range(10).write.format("parquet").saveAsTable("plain_tbl")
+    write_ann_store(vectors.limit(20), "ann_plain", dim=64, buckets=4)
+    clear_table(spark, "ann_plain_vectors")
+    spark.range(10).write.format("parquet").saveAsTable("ann_plain_vectors")
     with _pytest.raises(ValueError, match="not bucketed"):
-        compact_table(spark, "plain_tbl")
+        rebucket_store(spark, "ann_plain", 4)
+    assert store_generation(spark, "ann_plain") == 0
+    assert not spark.catalog.tableExists("ann_plain_bands_g1")
+    assert spark.table("ann_plain_vectors").count() == 10
 
 
 def test_append_rejects_dim_mismatch(spark, vectors):

@@ -57,29 +57,6 @@ def test_mismatched_buckets_reshuffle(spark, sf_dir):
     assert "Exchange" in plan or "BroadcastHashJoin" in plan
 
 
-def test_compact_refuses_cached_table(spark, sf_dir):
-    """compact_table's DROP+RENAME swap is not atomic; compacting a
-    table a live reader has cached would invalidate its blocks
-    mid-query — the guard refuses instead."""
-    import pytest
-
-    from polars_text_spark.sources.bucketing import compact_table
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    write_bucketed(
-        docs.select("doc_id", "lang"), "b_cached", bucket_by="doc_id", buckets=4
-    )
-    spark.catalog.cacheTable("b_cached")
-    try:
-        with pytest.raises(ValueError, match="currently cached"):
-            compact_table(spark, "b_cached")
-    finally:
-        spark.catalog.uncacheTable("b_cached")
-    # uncached: compaction proceeds
-    n = compact_table(spark, "b_cached")
-    assert n >= 1
-
-
 def test_write_bucketed_one_file_per_bucket(spark, sf_dir):
     """Round-16 write defrag: write_bucketed hash-repartitions onto
     the bucket columns, so a many-partition input commits ONE data

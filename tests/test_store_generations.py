@@ -281,8 +281,8 @@ def test_append_racing_a_rebuild_aborts_loudly(spark, corpus, monkeypatch):
     from corpus_df, NOT from the live files — an append completing
     during the (long) re-derivation window is in the old tables but
     not in the corpus, so a silent flip would drop it. The round-15
-    file-snapshot re-list turns that into the same loud abort
-    rewrite_generation gives rebucket/purge: store untouched, appended
+    file-snapshot re-list turns that into the same loud abort the
+    cutover gives rebucket/purge: store untouched, appended
     rows live, retry with a corpus that includes them succeeds."""
     import polars_text_spark.operators.dedup_store as ds
 
@@ -453,29 +453,27 @@ def test_postflip_audit_catches_gap_append(spark, corpus, monkeypatch):
     must catch it: raise loudly, leave the cutover committed at the
     new generation, PRESERVE the old generation, and allow the raced
     append to be safely re-run against the new generation."""
-    import polars_text_spark.operators.dedup_store as ds
-
     base = corpus.filter(F.col("doc_id") % 4 != 0)
     shard = corpus.filter(F.col("doc_id") % 4 == 0).limit(15)
     write_minhash_store(base, "mh_gap", buckets=4)
     before = _pairs(spark, "mh_gap")
 
-    real_write_meta_row = ds.write_meta_row
+    real_write_meta_row = bucketing.write_meta_row
     state = {"fired": False}
 
     def gap_append_then_flip(spark_, df, table, **kw):
-        # fires as the rewrite's write_meta callback runs — i.e.
-        # AFTER the pre-flip re-list passed; the append completes
-        # before the flip, so its own generation check passes too
+        # fires as the cutover's meta flip runs — i.e. AFTER the
+        # pre-flip re-list passed; the append completes before the
+        # flip, so its own generation check passes too
         if table == "mh_gap_meta" and not state["fired"]:
             state["fired"] = True
             append_minhash_shard(shard, "mh_gap")
         return real_write_meta_row(spark_, df, table, **kw)
 
-    monkeypatch.setattr(ds, "write_meta_row", gap_append_then_flip)
+    monkeypatch.setattr(bucketing, "write_meta_row", gap_append_then_flip)
     with pytest.raises(RuntimeError, match="COMMITTED"):
         rebucket_minhash_store(spark, "mh_gap", 8)
-    monkeypatch.setattr(ds, "write_meta_row", real_write_meta_row)
+    monkeypatch.setattr(bucketing, "write_meta_row", real_write_meta_row)
 
     assert state["fired"]
     # the cutover COMMITTED: live at gen 1 / 8 buckets; old gen kept
@@ -499,3 +497,68 @@ def test_postflip_audit_catches_gap_append(spark, corpus, monkeypatch):
         ).collect()
     }
     assert _pairs(spark, "mh_gap") == direct
+
+
+@pytest.mark.parametrize("store", ["minhash", "ann"])
+def test_purge_refuses_store_without_meta(spark, corpus, sf_dir, store):
+    """Data tables without a meta table (a crashed bootstrap, a
+    pre-meta store) have no generation pointer to flip: purge refuses
+    them like append, rebucket and rebuild do, pointing at the fresh
+    write, and leaves the rows AND the tombstones in place."""
+    from polars_text_spark.operators import ann_store
+
+    name = f"{store}_nometa_purge"
+    if store == "minhash":
+        write_minhash_store(corpus.limit(40), name, buckets=2)
+        delete_ids(corpus.limit(40).select("doc_id").limit(5), name)
+        purge, tables = purge_deleted, ("bands", "shingles")
+    else:
+        vecs = (
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            .filter(F.col("embedding").isNotNull())
+            .select("vec_id", "embedding")
+            .limit(40)
+        )
+        ann_store.write_ann_store(vecs, name, dim=64, buckets=2)
+        ann_store.delete_ids(vecs.limit(5), name)
+        purge, tables = ann_store.purge_deleted, ("bands", "vectors")
+    spark.sql(f"DROP TABLE {name}_meta")
+    tables = (*tables, "tombstones")
+    before = {t: spark.table(f"{name}_{t}").count() for t in tables}
+    assert all(before.values())
+    with pytest.raises(ValueError, match=f"no meta table.*write_{store}_store"):
+        purge(spark, name)
+    assert {t: spark.table(f"{name}_{t}").count() for t in tables} == before
+
+
+def test_failed_write_cancels_its_sibling(spark, corpus, monkeypatch):
+    """The cutover writes a store's next-generation tables from a
+    thread pool. When one write fails, the sibling's Spark jobs are
+    cancelled instead of waited out; the next-generation tables are
+    cleared once both writes have returned; the store is untouched."""
+    import time
+
+    write_minhash_store(corpus.limit(40), "mh_pool", buckets=2)
+    before = _pairs(spark, "mh_pool")
+    real_write = bucketing.write_bucketed
+
+    def failing_or_slow(df, table, **kw):
+        if table.startswith("mh_pool_bands"):
+            time.sleep(2)  # the sibling's long job is running by now
+            raise RuntimeError("bands write failed")
+        spark.sparkContext.parallelize([0], 1).map(
+            lambda x: __import__("time").sleep(120) or x
+        ).count()
+        real_write(df, table, **kw)
+
+    monkeypatch.setattr(bucketing, "write_bucketed", failing_or_slow)
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match="bands write failed"):
+        rebucket_minhash_store(spark, "mh_pool", 4)
+    assert time.monotonic() - t0 < 60
+    monkeypatch.setattr(bucketing, "write_bucketed", real_write)
+
+    assert store_generation(spark, "mh_pool") == 0
+    assert not spark.catalog.tableExists("mh_pool_bands_g1")
+    assert not spark.catalog.tableExists("mh_pool_shingles_g1")
+    assert _pairs(spark, "mh_pool") == before
