@@ -412,7 +412,10 @@ def topk_against_shard(
 
     Contract: shard ids must be DISJOINT from store ids (the
     incremental-ingest invariant — same stance as
-    ``incremental_pairs_from_store``). Call this before
+    ``incremental_pairs_from_store``). Shard rows are deduplicated on
+    ``id_col`` (as queries and as neighbors), so a repeated row does
+    not repeat a neighbor across ranks; rows sharing an id must carry
+    the same vector (one of them is kept). Call this before
     :func:`append_ann_shard`; after the append, :func:`topk_from_store`
     answers over the grown store directly.
     """
@@ -430,6 +433,7 @@ def topk_against_shard(
         num_planes=num_planes,
         bands=bands,
     )
+    unit = unit.dropDuplicates(["id"])
     q_bands = banded.select(F.col("id").alias("query_id"), "band_key")
     qunit = unit.select(
         F.col("id").alias("query_id"), F.col("u").alias("__qvec")
@@ -494,7 +498,10 @@ def topk_from_store(
     ``(query_id, neighbor_id, cosine, rank)`` — value-identical to
     :func:`polars_text_spark.operators.similarity.cosine_topk_lsh_sha`
     over the same corpus (tested). Raises if (dim, num_planes, bands)
-    differ from the store's write-time parameters.
+    differ from the store's write-time parameters. Query rows are
+    deduplicated on ``id_col``, so a repeated query row does not repeat
+    a neighbor across ranks; rows sharing an id must carry the same
+    vector (one of them is kept).
 
     Re-rank routing note: the store path always uses the expression
     re-rank. The Arrow route (``rerank="arrow"`` on the in-flight
@@ -529,7 +536,7 @@ def topk_from_store(
     )
     qunit = with_l2_normalized(base, vec_col, "__qvec").select(
         "query_id", "__qvec"
-    )
+    ).dropDuplicates(["query_id"])
     q_bands = base.select(
         "query_id",
         F.explode(

@@ -43,10 +43,11 @@ Scale design (the part that must survive 100 TB):
   constant exactly at the fixpoint — one aggregate job per round that
   doubles as the checkpoint materialization, instead of the former
   separate changed-count job. The sum probe is gated on the vertex id
-  being an integral/decimal type (round 17, ADVICE r16): string ids
-  would cast to null (ANSI-off) or raise (ANSI-on), and numeric
-  strings order lexicographically, so non-numeric ids use the exact
-  changed-count probe instead.
+  being an integral type or a scale-0 decimal (round 17, ADVICE r16):
+  string ids would cast to null (ANSI-off) or raise (ANSI-on),
+  numeric strings order lexicographically, and fractional decimals
+  round in the sum, so those ids use the exact changed-count probe
+  instead.
 
 The O(log² n)-round alternating large-star/small-star algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond") is
@@ -112,19 +113,21 @@ def connected_components(
     labels = labels.localCheckpoint(eager=False)
     sym = sym.localCheckpoint(eager=False)
 
-    # The cheap sum probe is only SOUND for integral/decimal vertex
-    # ids (ADVICE r16): casting string ids to decimal yields nulls
-    # under ANSI-off (the all-null sums then compare equal and the
-    # loop exits half-merged) or raises under ANSI-on, and for
-    # numeric STRINGS min() is lexicographic, so the sum is not
-    # monotone. Non-numeric ids fall back to the exact changed-count
-    # probe (one extra self-join per round — the pre-round-16 shape).
+    # The cheap sum probe is only SOUND for integral vertex ids
+    # (ADVICE r16). String ids cast to null under ANSI-off (the
+    # all-null sums compare equal and the loop exits half-merged) or
+    # raise under ANSI-on; numeric STRINGS take a lexicographic min,
+    # so their sum is not monotone; a fractional decimal rounds in the
+    # decimal(38,0) sum, so a decrease below the rounding step
+    # (1.4 -> 1.2) ends the loop half-merged. Those ids fall back to
+    # the exact changed-count probe (one extra self-join per round —
+    # the pre-round-16 shape).
     from pyspark.sql import types as T
 
     _vt = labels.schema["vertex"].dataType
     _sum_probe = isinstance(
-        _vt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.DecimalType)
-    )
+        _vt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    ) or (isinstance(_vt, T.DecimalType) and _vt.scale == 0)
 
     def _label_sum(frame: DataFrame):
         # Convergence probe: labels only ever move DOWN (both steps

@@ -28,6 +28,18 @@ the key is) — the banded strategies therefore carry a ``band_cap``
 guard that routes saturated buckets to hub-star candidates, linear in
 the bucket (:func:`_guarded_self_pairs`), and :func:`lsh_band_stats`
 audits the bucket-size distribution before a run.
+
+Two faces, one pair tail: MinHash self- and cross-pairs come from an
+in-flight frame (:func:`minhash_lsh_pairs`,
+:func:`minhash_lsh_cross_pairs`, :func:`near_dup_source_matrix`) or
+from the bucketed store (``dedup_store.pairs_from_store`` /
+``incremental_pairs_from_store``: the live generation's band and
+shingle tables minus tombstones). A face only says where bands and
+shingle sets come from. :func:`_self_pairs` and :func:`_cross_pairs`
+own the rest, once: the ``band_cap`` spec (:func:`_resolve_cap`), the
+hot-band guard, exact Jaccard (:func:`_verify_jaccard`) and, for
+cross pairs, ``collapse_left`` (:func:`_collapse_left_groups`,
+:func:`_fan_back_left`); the semantics live on those functions.
 """
 
 from __future__ import annotations
@@ -275,8 +287,8 @@ def bottomk_sketch_pairs(
     shuffle. ``max_df`` drops sketch elements present in more than that
     many docs before pairing (the viral-shingle hot-key guard, same
     dial as winnowing's). The estimate is the OUTPUT — feed survivors
-    to :func:`set_similarity_jaccard_pairs`/``_verify_pairs`` when the
-    exact value matters.
+    to :func:`set_similarity_jaccard_pairs` when the exact value
+    matters.
     """
     if threshold <= 0:
         raise ValueError("bottomk_sketch_pairs requires threshold > 0")
@@ -1179,14 +1191,10 @@ def _band_stats_agg(
     )
 
 
-def _verify_jaccard(
-    cand: DataFrame,
-    a: DataFrame,
-    b: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate ``(id_a, id_b)`` pairs
-    against hashed shingle sets ``a=(id_a, sh_a)`` / ``b=(id_b, sh_b)``.
+def _jaccard_filter(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The one exact-Jaccard filter: ``pairs(id_a, id_b, sh_a, sh_b)``
+    -> ``(id_a, id_b, jaccard)`` with ``jaccard >= threshold``, over
+    hashed shingle sets.
 
     Materialize the intersection size once per pair — array_intersect
     is expensive and Catalyst won't re-inline a non-cheap alias used
@@ -1197,9 +1205,7 @@ def _verify_jaccard(
     t*|b| from excluding an exact-boundary pair (the filter only
     prunes; the exact jaccard test downstream decides)."""
     return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .filter(
+        pairs.filter(
             F.least(F.size("sh_a"), F.size("sh_b"))
             >= threshold * F.greatest(F.size("sh_a"), F.size("sh_b")) - 1e-9
         )
@@ -1212,6 +1218,82 @@ def _verify_jaccard(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    a: DataFrame,
+    b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate ``(id_a, id_b)`` pairs:
+    join ``id_a`` to the hashed shingle sets ``a(id, sh)`` and ``id_b``
+    to ``b(id, sh)``, then :func:`_jaccard_filter`."""
+    return _jaccard_filter(
+        cand.join(
+            a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")),
+            "id_a",
+        ).join(
+            b.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")),
+            "id_b",
+        ),
+        threshold,
+    )
+
+
+def _shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int
+) -> DataFrame:
+    """``(id, sh)``: the hashed shingle set of every doc."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
+    )
+
+
+def _resolve_cap(
+    banded: DataFrame,
+    keys: list[str],
+    band_cap,
+    star_by: tuple[str, ...],
+    *,
+    pin: bool,
+) -> tuple[DataFrame, int | None]:
+    """``(banded, cap)`` for a ``band_cap`` spec: the one route to
+    :func:`resolve_band_cap`, auditing with ``star_by``'s column as
+    the signature group. ``pin`` persists ``banded`` before an
+    ``"auto"`` audit so an in-flight pipeline computes once for the
+    audit and the pair join; store scans and already-persisted frames
+    pass ``False``."""
+    if band_cap is None or isinstance(band_cap, int):
+        return banded, band_cap
+    if pin:
+        banded = track_persist(banded.persist())
+    return banded, resolve_band_cap(
+        banded, keys, band_cap, sig_col=star_by[0] if star_by else None
+    )
+
+
+def _self_pairs(
+    banded: DataFrame,
+    sh: DataFrame,
+    keys: list[str],
+    star_by: tuple[str, ...],
+    band_cap,
+    threshold: float,
+    *,
+    pin: bool = True,
+) -> DataFrame:
+    """The MinHash self-pair tail (module docs): ``band_cap`` spec ->
+    guarded within-bucket candidates (:func:`_guarded_self_pairs`,
+    starring by ``star_by``) -> exact Jaccard against ``sh(id, sh)``.
+    ``banded(id, *keys, *star_by)`` has one row per (doc, band);
+    ``pin`` is :func:`_resolve_cap`'s and also the guard's ``cache``."""
+    banded, band_cap = _resolve_cap(banded, keys, band_cap, star_by, pin=pin)
+    cand = _guarded_self_pairs(
+        banded, keys, band_cap, cache=pin, star_by=star_by
+    )
+    return _verify_jaccard(cand, sh, sh, threshold)
 
 
 def minhash_lsh_pairs(
@@ -1241,23 +1323,10 @@ def minhash_lsh_pairs(
         df, text_col, id_col, "id",
         num_perm=num_perm, bands=bands, shingle_n=shingle_n,
     )
-    if not (band_cap is None or isinstance(band_cap, int)):
-        # auto: the audit pass re-reads the band frame — pin it so the
-        # signature aggregation runs once for audit + pair path
-        banded = track_persist(banded.persist())
-        band_cap = resolve_band_cap(
-            banded, ["bk"], band_cap, sig_col="__sig"
-        )
-    cand = _guarded_self_pairs(
-        banded, ["bk"], band_cap, star_by=("__sig",)
+    return _self_pairs(
+        banded, _shingle_sets(df, text_col, id_col, shingle_n),
+        ["bk"], ("__sig",), band_cap, jaccard_threshold,
     )
-    sh = df.select(
-        F.col(id_col).alias("__id"),
-        token_shingles(text_col, shingle_n, hashed=True).alias("__sh"),
-    )
-    a = sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a"))
-    b = sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b"))
-    return _verify_jaccard(cand, a, b, jaccard_threshold)
 
 
 def _collapse_left_groups(
@@ -1280,9 +1349,9 @@ def _collapse_left_groups(
     starred — every member needs its own verdict — but set-identical
     members share one; ADVICE r12).
 
-    Returns ``(reps, members)`` — ``reps(id_a, __text, sh_a, __g)``,
-    the min-id representative row per group (banding reads ``__text``,
-    verification reads ``sh_a``), and ``members(id_a, __g)`` for the
+    Returns ``(reps, members)`` — ``reps(id_a, sh_a, __g)``, the
+    min-id representative row per group (banding and verification
+    read ``sh_a``), and ``members(id_a, __g)`` for the
     fan-back join — or **None when ``probe=True`` and the left side
     has NO duplicate groups**: the probe (one EAGER pass computing the
     map-side group key into a count-distinct — a driver action inside
@@ -1352,7 +1421,7 @@ def _collapse_left_groups(
         .withColumn(
             "sh_a", token_shingles("__text", shingle_n, hashed=True)
         )
-        .select("id_a", "__text", "sh_a", "__g")
+        .select("id_a", "sh_a", "__g")
     )
     return reps, members
 
@@ -1371,6 +1440,66 @@ def _fan_back_left(
         .join(rep_groups, "__rep")
         .select(F.col("__member").alias("id_a"), "id_b", "jaccard")
     )
+
+
+def _cross_pairs(
+    left: DataFrame,
+    band_left,
+    right_bands: DataFrame,
+    b: DataFrame,
+    keys: list[str],
+    star_by: tuple[str, ...],
+    band_cap,
+    collapse_left,
+    threshold: float,
+    *,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    pin: bool = True,
+) -> DataFrame:
+    """The MinHash cross-pair tail (module docs): ``collapse_left``
+    mode -> the left stage -> ``band_cap`` spec -> guarded cross
+    candidates (:func:`_guarded_cross_candidates`) -> exact Jaccard ->
+    fan-back of collapsed left groups.
+
+    ``left(id_col, text_col)`` is the new shard. Its stage
+    ``(id, sh)`` holds the hashed shingle sets of the shard itself or,
+    when ``collapse_left`` engages, of its group representatives
+    (:func:`_collapse_left_groups`), and is the verification side;
+    ``band_left(stage)`` returns the left bands ``(id_a, *keys)``.
+    ``right_bands(id_b, *keys, *star_by)`` and ``b(id, sh)`` are the
+    standing side; ``pin`` is :func:`_resolve_cap`'s for
+    ``right_bands``."""
+    if collapse_left not in (False, True, "auto"):
+        raise ValueError(
+            f"collapse_left must be False, True or 'auto', got "
+            f"{collapse_left!r}"
+        )
+    collapsed = None
+    if collapse_left:
+        # None: the probe found nothing to collapse
+        collapsed = _collapse_left_groups(
+            left, text_col, id_col, shingle_n,
+            probe=(collapse_left == "auto"),
+        )
+    if collapsed is None:
+        stage = _shingle_sets(left, text_col, id_col, shingle_n)
+    else:
+        stage = collapsed[0].select(
+            F.col("id_a").alias("id"), F.col("sh_a").alias("sh")
+        )
+    left_bands = band_left(stage)
+    right_bands, band_cap = _resolve_cap(
+        right_bands, keys, band_cap, star_by, pin=pin
+    )
+    cand = _guarded_cross_candidates(
+        left_bands, right_bands, keys, band_cap, star_by=star_by
+    )
+    pairs = _verify_jaccard(cand, stage, b, threshold)
+    if collapsed is not None:
+        pairs = _fan_back_left(pairs, *collapsed)
+    return pairs
 
 
 def minhash_lsh_cross_pairs(
@@ -1435,53 +1564,17 @@ def minhash_lsh_cross_pairs(
 
     Near-identical-but-distinct left docs still fan out — that
     residual is the documented trade."""
-    if collapse_left not in (False, True, "auto"):
-        raise ValueError(
-            f"collapse_left must be False, True or 'auto', got "
-            f"{collapse_left!r}"
-        )
-    a = None
-    members = None
-    id_left = id_col
-    if collapse_left:
-        collapsed = _collapse_left_groups(
-            left, text_col, id_col, shingle_n,
-            probe=(collapse_left == "auto"),
-        )
-        if collapsed is not None:  # None: probe found nothing to collapse
-            reps, members = collapsed
-            left = reps.select("id_a", F.col("__text").alias(text_col))
-            a = reps.select("id_a", F.col("sh_a"))
-            id_left = "id_a"
-    bl = _banded_signatures(
-        left, text_col, id_left, "id_a",
-        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
+    band = dict(num_perm=num_perm, bands=bands, shingle_n=shingle_n)
+    return _cross_pairs(
+        left,
+        lambda stage: _banded_signatures(
+            stage, text_col, "id", "id_a", shingles_col="sh", **band
+        ),
+        _banded_signatures(right, text_col, id_col, "id_b", **band),
+        _shingle_sets(right, text_col, id_col, shingle_n),
+        ["bk"], ("__sig",), band_cap, collapse_left, jaccard_threshold,
+        text_col=text_col, id_col=id_col, shingle_n=shingle_n,
     )
-    br = _banded_signatures(
-        right, text_col, id_col, "id_b",
-        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-    )
-    if not (band_cap is None or isinstance(band_cap, int)):
-        # auto (round 15): audit the STANDING side — the guard reduces
-        # only it. Pin so its signature aggregation runs once.
-        br = track_persist(br.persist())
-        band_cap = resolve_band_cap(br, ["bk"], band_cap, sig_col="__sig")
-    cand = _guarded_cross_candidates(
-        bl, br, ["bk"], band_cap, star_by=("__sig",)
-    )
-    if a is None:
-        a = left.select(
-            F.col(id_col).alias("id_a"),
-            token_shingles(text_col, shingle_n, hashed=True).alias("sh_a"),
-        )
-    b = right.select(
-        F.col(id_col).alias("id_b"),
-        token_shingles(text_col, shingle_n, hashed=True).alias("sh_b"),
-    )
-    pairs = _verify_jaccard(cand, a, b, jaccard_threshold)
-    if members is not None:
-        pairs = _fan_back_left(pairs, reps, members)
-    return pairs
 
 
 def simhash(text_col, *, bits: int = 64, token_hash=None):
@@ -1586,9 +1679,9 @@ def simhash_pairs(
     # star only with signature-identical docs (hamming 0 — verified by
     # construction), never against an arbitrary block hub that the
     # <= max_hamming verify would reject
-    if not (band_cap is None or isinstance(band_cap, int)):
-        blocked = track_persist(blocked.persist())
-        band_cap = resolve_band_cap(blocked, ["ck"], band_cap, sig_col="sh")
+    blocked, band_cap = _resolve_cap(
+        blocked, ["ck"], band_cap, ("sh",), pin=True
+    )
     pairs = _guarded_self_pairs(
         blocked, ["ck"], band_cap, payload=("sh",), star_by=("sh",)
     )
@@ -1597,32 +1690,6 @@ def simhash_pairs(
         pairs.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-
-
-def _verify_pairs(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
-    """Exact Jaccard verification of candidate ``(id_a, id_b)`` pairs
-    against the per-doc shingle sets in ``sh(id, sh)``. The size-ratio
-    prefilter is the lossless PPJoin length bound: jaccard(a,b) >= t
-    implies |a| >= t * |b| (and vice versa); the 1e-9 slack keeps
-    double rounding from excluding an exact-boundary pair."""
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .filter(
-            F.least(F.size("sh_a"), F.size("sh_b"))
-            >= threshold * F.greatest(F.size("sh_a"), F.size("sh_b")) - 1e-9
-        )
-        .withColumn("__inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("__inter")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("__inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -1712,21 +1779,7 @@ def ngram_jaccard_pairs(
     pairs = _blocked_shingle_self_join(
         df, text_col, id_col, block_cols, shingle_n
     )
-    # Lossless PPJoin length bound (see minhash_lsh_pairs).
-    return (
-        pairs.filter(
-            F.least(F.size("sh_a"), F.size("sh_b"))
-            >= threshold * F.greatest(F.size("sh_a"), F.size("sh_b")) - 1e-9
-        )
-        .withColumn("__inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.col("__inter")
-            / (F.size("sh_a") + F.size("sh_b") - F.col("__inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_filter(pairs, threshold)
 
 
 def set_similarity_jaccard_pairs(
@@ -1817,7 +1870,8 @@ def set_similarity_jaccard_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _verify_pairs(cand, sh_full.select("id", "sh"), threshold)
+    sh = sh_full.select("id", "sh")
+    return _verify_jaccard(cand, sh, sh, threshold)
 
 
 def count_join_jaccard_pairs(
@@ -1961,16 +2015,17 @@ def near_dup_source_matrix(
     Pass ``pairs`` (``(id_a, id_b, jaccard)``, e.g. a persisted
     :func:`minhash_lsh_pairs` result shared with other consumers) to
     skip rebuilding the pair DAG; the minhash knobs (including
-    ``band_cap``) are ignored then. Note that under the hot-band guard
-    a saturated family's ``pair_count`` reflects the star topology
-    (m-1 per signature group), not the clique — pass
-    ``band_cap=None`` when the matrix must count every pair of a
-    mega-family and the quadratic cost is acceptable. When the guard
-    is on AND any bucket is actually saturated, the matrix WARNS
-    (ADVICE r12) so star-shaped ``pair_count`` cells are never
-    misread as clique counts — the saturation probe is one cheap agg
-    over the band frame this call persists and reuses for the pair
-    join, not a second corpus pass.
+    ``band_cap``) are ignored then. Otherwise the pairs come from the
+    in-flight face of the shared self-pair tail (module docs), so a
+    saturated family's ``pair_count`` reflects the guard's star
+    topology, not the clique — pass ``band_cap=None`` when the matrix
+    must count every pair of a mega-family and the quadratic cost is
+    acceptable. When the guard is on AND any bucket is actually
+    saturated, the matrix WARNS (ADVICE r12) so star-shaped
+    ``pair_count`` cells are never misread as clique counts — the
+    saturation probe is one cheap agg over the band frame this call
+    persists and reuses for the pair join, not a second corpus
+    pass.
 
     NULL sources are coalesced to the sentinel ``'<null>'`` BEFORE
     canonicalization — ``least``/``greatest`` skip NULL operands, so
@@ -1978,58 +2033,41 @@ def near_dup_source_matrix(
     fold into a same-source ``(src, src)`` cell instead of being
     surfaced as cross-provenance.
     """
-    if pairs is None and band_cap is not None:
-        from pyspark.storagelevel import StorageLevel
-
+    if pairs is None:
         banded = _banded_signatures(
             df, text_col, id_col, "id",
             num_perm=num_perm, bands=bands, shingle_n=shingle_n,
         )
-        # one persist shared by the saturation probe and the guard's
-        # three consumers (cache=False below so it isn't pinned twice)
-        banded = track_persist(banded.persist(StorageLevel.MEMORY_AND_DISK))
-        saturated = (
-            banded.groupBy("bk")
-            .agg(F.count(F.lit(1)).alias("m"))
-            .filter(F.col("m") > band_cap)
-            .limit(1)
-            .count()
-        )
-        if saturated:
-            import warnings
+        if band_cap is not None:
+            from pyspark.storagelevel import StorageLevel
 
-            warnings.warn(
-                "near_dup_source_matrix: at least one band bucket "
-                f"exceeds band_cap={band_cap}, so saturated families "
-                "contribute STAR pair counts (m-1 per signature "
-                "group), not clique counts — compare cells "
-                "accordingly, or pass band_cap=None for exact clique "
-                "counting (quadratic in the hot family)",
-                stacklevel=2,
+            # one persist shared by the saturation probe and the pair
+            # tail (pin=False below so it isn't pinned twice)
+            banded = track_persist(
+                banded.persist(StorageLevel.MEMORY_AND_DISK)
             )
-        cand = _guarded_self_pairs(
-            banded, ["bk"], band_cap, cache=False, star_by=("__sig",)
-        )
-        sh = df.select(
-            F.col(id_col).alias("__id"),
-            token_shingles(text_col, shingle_n, hashed=True).alias("__sh"),
-        )
-        pairs = _verify_jaccard(
-            cand,
-            sh.select(F.col("__id").alias("id_a"), F.col("__sh").alias("sh_a")),
-            sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b")),
-            jaccard_threshold,
-        )
-    elif pairs is None:
-        pairs = minhash_lsh_pairs(
-            df,
-            text_col,
-            id_col,
-            num_perm=num_perm,
-            bands=bands,
-            shingle_n=shingle_n,
-            jaccard_threshold=jaccard_threshold,
-            band_cap=band_cap,
+            saturated = (
+                banded.groupBy("bk")
+                .agg(F.count(F.lit(1)).alias("m"))
+                .filter(F.col("m") > band_cap)
+                .limit(1)
+                .count()
+            )
+            if saturated:
+                import warnings
+
+                warnings.warn(
+                    "near_dup_source_matrix: at least one band bucket "
+                    f"exceeds band_cap={band_cap}, so saturated families "
+                    "contribute STAR pair counts (m-1 per signature "
+                    "group), not clique counts — compare cells "
+                    "accordingly, or pass band_cap=None for exact clique "
+                    "counting (quadratic in the hot family)",
+                    stacklevel=2,
+                )
+        pairs = _self_pairs(
+            banded, _shingle_sets(df, text_col, id_col, shingle_n),
+            ["bk"], ("__sig",), band_cap, jaccard_threshold, pin=False,
         )
     src = df.select(
         F.col(id_col).alias("__sid"),

@@ -38,11 +38,11 @@ from pyspark.sql import functions as F
 
 from polars_text_spark.operators.dedup import (
     _banded_signatures,
-    _guarded_cross_candidates,
-    _guarded_self_pairs,
-    _verify_jaccard,
+    _cross_pairs,
+    _self_pairs,
     token_shingles,
 )
+from polars_text_spark.persist import track_persist
 from polars_text_spark.sources.bucketing import (
     check_generation_unchanged as _check_generation_unchanged,
     clear_table,
@@ -582,38 +582,27 @@ def pairs_from_store(
 ) -> DataFrame:
     """Near-dup pairs over the stored corpus — same output as
     :func:`~polars_text_spark.operators.dedup.minhash_lsh_pairs` on the
-    original frame (same signature parameters AND same ``band_cap``),
-    but the candidate join re-shuffles NOTHING: both sides are the
-    bucketed band table. The hot-band guard's member-count window
-    partitions on (band, bucket) — the table's own bucketing — so it
-    adds no Exchange either (plan-asserted in tests)."""
+    original frame (same signature parameters AND same ``band_cap``):
+    the store face of the shared self-pair tail (the
+    :mod:`~polars_text_spark.operators.dedup` module docs). The
+    candidate join and the guard window re-shuffle NOTHING: both read
+    the band table's own (band, bucket) bucketing (plan-asserted)."""
     __ts = _tombstones(spark, name)
     __gen = store_generation(spark, name)  # one resolution, both reads
     banded = _minus_tombstones(
         spark.table(phys_table(name, "bands", __gen)), __ts
     )
-    # cache=False: the band table IS the materialization — re-scanning
-    # co-located buckets per consumer beats pinning the corpus.
     star_by = ("sig",) if "sig" in banded.columns else ()
-    if not (band_cap is None or isinstance(band_cap, int)):
-        # auto (round 15): the audit re-scans the bucketed store — a
-        # co-located groupBy, no pin needed
-        from polars_text_spark.operators.dedup import resolve_band_cap
-
-        band_cap = resolve_band_cap(
-            banded, ["band", "bucket"], band_cap,
-            sig_col=star_by[0] if star_by else None,
-        )
     _warn_if_legacy_sig_less(name, star_by, band_cap)
-    cand = _guarded_self_pairs(
-        banded, ["band", "bucket"], band_cap, cache=False, star_by=star_by
-    ).select("id_a", "id_b")
     sh = _minus_tombstones(
         spark.table(phys_table(name, "shingles", __gen)), __ts
     )
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return _verify_jaccard(cand, a, b, jaccard_threshold)
+    # pin=False: the band table IS the materialization — re-scanning
+    # co-located buckets per consumer beats pinning the corpus.
+    return _self_pairs(
+        banded, sh, ["band", "bucket"], star_by, band_cap,
+        jaccard_threshold, pin=False,
+    )
 
 
 def incremental_pairs_from_store(
@@ -632,33 +621,17 @@ def incremental_pairs_from_store(
 ) -> DataFrame:
     """Dedup a NEW shard against the standing store (the incremental-
     ingest shape): ``(id_a, id_b, jaccard)`` with ``id_a`` from the
-    shard, ``id_b`` from the store. Only the shard's (small) band and
-    shingle frames shuffle; the store side reads its buckets in place
-    (the hot-band guard's window partitions on the store's own
-    bucketing, so reducing a saturated standing bucket to its hub —
-    see :func:`~polars_text_spark.operators.dedup.
-    _guarded_cross_candidates` — adds no Exchange on the store side).
+    shard, ``id_b`` from the store — the store face of the shared
+    cross-pair tail (the :mod:`~polars_text_spark.operators.dedup`
+    module docs; ``band_cap`` and ``collapse_left`` mean what they
+    mean for
+    :func:`~polars_text_spark.operators.dedup.minhash_lsh_cross_pairs`).
+    Only the shard's (small) band and shingle frames shuffle; the
+    store side reads its buckets in place, guard window included.
     Signature parameters must match the ones used at write time —
     validated against the store meta when the store records one (a
     mismatch would band the shard under planes that can never collide
-    with standing keys: silent recall 0). ``collapse_left``
-    (False / True / ``"auto"``): shingle-set-identical shard docs ride
-    the pipeline as ONE representative, pairs fanned back —
-    output-identical; ``"auto"`` probes first and collapses only when
-    duplicate groups exist, ``True`` collapses unconditionally — see
-    :func:`~polars_text_spark.operators.dedup.minhash_lsh_cross_pairs`
-    for the mode semantics and the deterministic-batch-input
-    contract."""
-    from polars_text_spark.operators.dedup import (
-        _collapse_left_groups,
-        _fan_back_left,
-    )
-
-    if collapse_left not in (False, True, "auto"):
-        raise ValueError(
-            f"collapse_left must be False, True or 'auto', got "
-            f"{collapse_left!r}"
-        )
+    with standing keys: silent recall 0)."""
     m = read_meta(spark, name)  # ONE meta read: params + hashv + gen
     if m is not None:
         md = m.asDict()
@@ -672,61 +645,38 @@ def incremental_pairs_from_store(
                 "keys that can never collide with the store"
             )
     _assert_hash_family(spark, name, meta_row=m)
-    a = None
-    members = None
-    if collapse_left:
-        collapsed = _collapse_left_groups(
-            new_df, text_col, id_col, shingle_n,
-            probe=(collapse_left == "auto"),
-        )
-        if collapsed is not None:  # None: probe found nothing to collapse
-            reps, members = collapsed
-            a = reps.select("id_a", F.col("sh_a"))
-    if a is None:
-        # ONE tokenize pass over the shard (round 15): the staged
-        # (id_a, sh_a) frame feeds both the banding and the exact
-        # verification join below
-        a = new_df.select(
-            F.col(id_col).alias("id_a"),
-            token_shingles(text_col, shingle_n, hashed=True).alias("sh_a"),
-        )
-    from polars_text_spark.persist import track_persist
-
-    a = track_persist(a.persist())
-    new_bands = _banded_signatures(
-        a, text_col, "id_a", "id_a",
-        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-        shingles_col="sh_a",
-    ).select(
-        "id_a",
-        F.col("bk.band").alias("band"),
-        F.col("bk.bucket").alias("bucket"),
-    )
     __ts = _tombstones(spark, name)
     __gen = meta_gen(m)
     standing = _minus_tombstones(
         spark.table(phys_table(name, "bands", __gen)), __ts
     )
     star_by = ("sig",) if "sig" in standing.columns else ()
-    if not (band_cap is None or isinstance(band_cap, int)):
-        from polars_text_spark.operators.dedup import resolve_band_cap
-
-        band_cap = resolve_band_cap(
-            standing, ["band", "bucket"], band_cap,
-            sig_col=star_by[0] if star_by else None,
-        )
     _warn_if_legacy_sig_less(name, star_by, band_cap)
-    standing = standing.select(
-        F.col("id").alias("id_b"), "band", "bucket", *star_by
+
+    def band_shard(stage: DataFrame) -> DataFrame:
+        # ONE tokenize pass over the shard (round 15): the pinned
+        # (id, sh) stage feeds both the banding and the verification
+        track_persist(stage.persist())
+        return _banded_signatures(
+            stage, text_col, "id", "id_a",
+            num_perm=num_perm, bands=bands, shingle_n=shingle_n,
+            shingles_col="sh",
+        ).select(
+            "id_a",
+            F.col("bk.band").alias("band"),
+            F.col("bk.bucket").alias("bucket"),
+        )
+
+    return _cross_pairs(
+        new_df,
+        band_shard,
+        standing.select(
+            F.col("id").alias("id_b"), "band", "bucket", *star_by
+        ),
+        _minus_tombstones(
+            spark.table(phys_table(name, "shingles", __gen)), __ts
+        ),
+        ["band", "bucket"], star_by, band_cap, collapse_left,
+        jaccard_threshold,
+        text_col=text_col, id_col=id_col, shingle_n=shingle_n, pin=False,
     )
-    cand = _guarded_cross_candidates(
-        new_bands, standing, ["band", "bucket"], band_cap, star_by=star_by
-    )
-    sh = _minus_tombstones(
-        spark.table(phys_table(name, "shingles", __gen)), __ts
-    )
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    pairs = _verify_jaccard(cand, a, b, jaccard_threshold)
-    if members is not None:
-        pairs = _fan_back_left(pairs, reps, members)
-    return pairs

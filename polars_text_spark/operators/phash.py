@@ -226,7 +226,10 @@ def chunk_hamming_pairs(
     (their members reconnect through the star); the estimator only
     rises when DISTINCT signatures share a chunk block beyond the
     cap. ``band_cap="auto"`` below automates exactly this audit."""
-    from polars_text_spark.operators.dedup import _guarded_self_pairs
+    from polars_text_spark.operators.dedup import (
+        _guarded_self_pairs,
+        _resolve_cap,
+    )
 
     if not 0 <= max_hamming <= 3:
         raise ValueError(
@@ -247,14 +250,9 @@ def chunk_hamming_pairs(
     # signature-identical media (hamming 0, verified by construction).
     # band_cap="auto"/("auto", base) sizes the cap from the
     # counts-only block audit (dedup.resolve_band_cap, round 15)
-    if not (band_cap is None or isinstance(band_cap, int)):
-        from polars_text_spark.operators.dedup import resolve_band_cap
-        from polars_text_spark.persist import track_persist
-
-        blocked = track_persist(blocked.persist())
-        band_cap = resolve_band_cap(
-            blocked, ["ck"], band_cap, sig_col="sig"
-        )
+    blocked, band_cap = _resolve_cap(
+        blocked, ["ck"], band_cap, ("sig",), pin=True
+    )
     pairs = _guarded_self_pairs(
         blocked, ["ck"], band_cap, payload=("sig",), star_by=("sig",)
     )

@@ -44,18 +44,14 @@ def get_spark(
         # honor the advisory byte target (Spark's own docs recommend
         # false) — tiny frames coalesce to one task locally, and at
         # 100 TB reduce partitions land at the advisory size
-        # regardless of cluster width. Both knobs are env-overridable
-        # for cluster tuning. Only the 64m advisory size is Spark's
-        # shipped default; parallelismFirst=false deliberately flips
-        # Spark's default of true.
+        # regardless of cluster width. Override either through
+        # ``extra_conf`` for cluster tuning. Only the 64m advisory size
+        # is Spark's shipped default; parallelismFirst=false
+        # deliberately flips Spark's default of true.
         .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
         )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY", "64m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", _ARROW_BATCH_ROWS)

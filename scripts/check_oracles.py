@@ -3,6 +3,9 @@ run each __spark_entry__ query on Spark AND its DuckDB oracle, compare
 row count + sorted-column value multiset.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+
+Exits 2 without running anything when a named query is not in the
+registry.
 """
 
 from __future__ import annotations
@@ -46,13 +49,17 @@ def _normalize(rows, columns):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    queries = entrymod.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark("oracle-check", extra_conf={"spark.ui.enabled": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in queries.items():

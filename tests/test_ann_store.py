@@ -183,6 +183,39 @@ def test_topk_against_shard_matches_union_direct(spark, vectors):
     assert direct and stored == direct
 
 
+def test_duplicate_query_rows_rank_distinct_neighbors(spark, vectors):
+    """A repeated query row (or shard row) must not re-multiply after
+    the candidate dedup: every rank holds a distinct neighbor, and the
+    rows equal those of the deduplicated query frame, on both the
+    store and the store+shard paths."""
+    base = vectors.filter(F.col("vec_id") % 4 != 0)
+    shard = vectors.filter(F.col("vec_id") % 4 == 0)
+    write_ann_store(base, "ann_store_dupq", dim=64, buckets=4)
+
+    def rows(df):
+        return sorted(
+            (r.query_id, r.neighbor_id, r.rank, round(r.cosine, 9))
+            for r in df.collect()
+        )
+
+    def distinct_per_query(got):
+        per = {}
+        for q, n, _, _ in got:
+            per.setdefault(q, []).append(n)
+        return all(len(ns) == len(set(ns)) for ns in per.values())
+
+    qs = vectors.filter(F.col("vec_id") < 5)
+    dup_qs = qs.unionByName(qs.filter(F.col("vec_id") == 1))
+    got = rows(topk_from_store(spark, "ann_store_dupq", dup_qs, k=5, dim=64))
+    assert got and distinct_per_query(got)
+    assert got == rows(topk_from_store(spark, "ann_store_dupq", qs, k=5, dim=64))
+
+    dup_shard = shard.unionByName(shard.filter(F.col("vec_id") == 4))
+    got = rows(topk_against_shard(spark, "ann_store_dupq", dup_shard, k=5))
+    assert got and distinct_per_query(got)
+    assert got == rows(topk_against_shard(spark, "ann_store_dupq", shard, k=5))
+
+
 def test_topk_against_shard_store_side_shuffle_free(spark, vectors, no_broadcast):
     """No Exchange above either STORE scan: the standing tables read
     their buckets in place; only shard-side frames shuffle."""

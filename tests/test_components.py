@@ -147,3 +147,19 @@ def test_numeric_string_ids_lexicographic_min(spark):
     )
     got = _comp_map(connected_components(pairs))
     assert got == {"9": "10", "10": "10", "111": "10"}
+
+
+def test_fractional_decimal_ids_changed_count_probe(spark):
+    """Fractional decimal ids must NOT use the decimal(38,0) label-sum
+    probe: every id of the chain 1.4-1.3-1.2-1.1-1.0 rounds to 1, so
+    the first round's label decreases (1.4 -> 1.2 after path halving)
+    leave the rounded sum unchanged and the loop would exit
+    half-merged."""
+    from decimal import Decimal
+
+    ids = [Decimal(f"1.{d}") for d in range(5)]
+    pairs = spark.createDataFrame(
+        list(zip(ids[1:], ids[:-1])), "id_a decimal(3,1), id_b decimal(3,1)"
+    )
+    got = _comp_map(connected_components(pairs))
+    assert got == {i: Decimal("1.0") for i in ids}
