@@ -360,6 +360,12 @@ def _append_rows(
     generation check fails the append loudly when a maintenance
     cutover raced it."""
     dim, num_planes, bands, buckets, gen_at_start = meta
+    # A LAZY local checkpoint, as in the MinHash append body: it fills
+    # during the bands write and feeds the vectors write, so the
+    # streaming sink's lazy novelty filter (bucketing.novel_rows) runs
+    # exactly once, before any vector row lands. Appended rows are the
+    # small side by contract, so the pin is bounded.
+    rows = rows.select(id_col, vec_col).localCheckpoint(eager=False)
     banded, unit = _shard_projections(
         rows,
         id_col=id_col,

@@ -488,14 +488,11 @@ def minhash_signatures(
         F.col(id_col),
         F.explode_outer(src).alias("shingle"),
     ).filter(F.col("shingle").isNotNull())
-    mins = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(k))).alias(f"h{k}")
-        for k in range(num_perm)
-    ]
-    sigs = exploded.groupBy(id_col).agg(*mins)
-    return sigs.select(
-        id_col, F.array(*[f"h{k}" for k in range(num_perm)]).alias("minhash")
-    )
+    # One SQL string, parsed once: as Column calls the 64 seeded mins
+    # were ~2,800 Py4J round-trips per plan build. The seed literal is
+    # INT either way (SQL ``k`` == ``F.lit(k)``), so values are the same.
+    mins = ", ".join(f"min(xxhash64(shingle, {k}))" for k in range(num_perm))
+    return exploded.groupBy(id_col).agg(F.expr(f"array({mins})").alias("minhash"))
 
 
 def _banded_signatures(
@@ -520,23 +517,22 @@ def _banded_signatures(
         df, text_col, id_col,
         num_perm=num_perm, shingle_n=shingle_n, shingles_col=shingles_col,
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col("minhash")[b * rows_per_band + r] for r in range(rows_per_band)]
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
+
+    def items(lo: int, hi: int) -> str:
+        return ", ".join(f"minhash[{i}]" for i in range(lo, hi))
+
+    # SQL strings for the same reason as minhash_signatures: as Column
+    # calls the band structs and the signature hash were ~3,900 Py4J
+    # round-trips per plan build
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', xxhash64("
+        f"{items(b * rows_per_band, (b + 1) * rows_per_band)}))"
+        for b in range(bands)
     )
     return sigs.select(
         F.col(id_col).alias(out_id),
-        F.explode(band_structs).alias("bk"),
-        F.xxhash64(
-            *[F.col("minhash")[i] for i in range(num_perm)]
-        ).alias("__sig"),
+        F.explode(F.expr(f"array({band_structs})")).alias("bk"),
+        F.expr(f"xxhash64({items(0, num_perm)})").alias("__sig"),
     )
 
 

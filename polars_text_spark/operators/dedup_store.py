@@ -340,7 +340,10 @@ def _append_rows(
     # checkpoint fills during the bands write's own job; persist()
     # would cost AQE a separate cache-building job per append. A lost
     # block fails the shingles write loudly, and the bands-first order
-    # keeps that retryable.
+    # keeps that retryable. The pin also makes the streaming sink's
+    # lazy novelty filter (bucketing.novel_rows) run exactly once,
+    # inside the bands write, against the shingles table as it stood
+    # before this append.
     staged = rows.select(
         F.col(id_col).alias("id"),
         token_shingles(text_col, shingle_n, hashed=True).alias("sh"),

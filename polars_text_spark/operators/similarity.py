@@ -1523,7 +1523,13 @@ def sha_band_keys(vec_col, *, dim: int, num_planes: int = 16, bands: int = 4):
     )
     bits = []
     for j in range(num_planes):
-        signs = F.array(*[F.lit(_sha_sign(j, p)) for p in range(dim)])
+        # one parsed DOUBLE array literal per plane, not dim F.lit
+        # calls: those were dim x num_planes Py4J round-trips per build
+        signs = F.expr(
+            "array("
+            + ", ".join("1.0D" if _sha_sign(j, p) > 0 else "-1.0D" for p in range(dim))
+            + ")"
+        )
         dotv = F.aggregate(
             F.zip_with(v, signs, lambda x, y: x * y),
             F.lit(0.0),

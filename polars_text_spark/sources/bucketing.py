@@ -140,10 +140,10 @@ def novel_rows(
     ts: DataFrame | None,
     *,
     id_col: str,
-) -> DataFrame | None:
+) -> DataFrame:
     """The rows of ``batch`` whose ids are in neither ``standing`` (a
-    bucketed store's id column) nor the tombstone set ``ts``,
-    checkpointed; None when no row is novel. The at-least-once twin of
+    bucketed store's id column) nor the tombstone set ``ts``, as a
+    LAZY frame: no job runs here. The at-least-once twin of
     :func:`probe_id_clash` for the streaming sinks: where a batch
     append raises on a clash, a redelivered micro-batch drops its
     already-stored ids instead. A tombstoned id is not novel until
@@ -151,10 +151,14 @@ def novel_rows(
     directions: the batch probes the id-bucketed store shuffle-free,
     the tombstones are broadcast.
 
-    The checkpoint makes the result independent of the store it was
-    filtered against: the append that follows writes into the table
-    this plan anti-joined, and must not re-evaluate the filter after
-    its own rows landed."""
+    The append that follows writes into the table this plan
+    anti-joined, so the filter must run exactly once, before its own
+    rows land. The append bodies (``_append_rows`` in
+    ``operators/dedup_store.py`` and ``operators/ann_store.py``)
+    guarantee it: they pin their input with a lazy local checkpoint
+    that fills during the bands write, before the id-keyed table is
+    touched. A redelivered batch is an append of zero rows, which
+    writes no files."""
     novel = batch.join(
         standing.select(F.col("id").alias(id_col)), id_col, "left_anti"
     )
@@ -164,8 +168,7 @@ def novel_rows(
             id_col,
             "left_anti",
         )
-    novel = novel.localCheckpoint(eager=True)
-    return novel if novel.take(1) else None
+    return novel
 
 
 def tombstone_ids(ids: DataFrame, name: str, *, id_col: str) -> None:

@@ -17,10 +17,14 @@ therefore wrong here; instead every batch is filtered to its NOVEL
 ids (anti-join against the store) and only the remainder appends —
 redelivery becomes a no-op, not a poison pill.
 
-Each sink then hands its novel rows to the SAME private append body
-its store's batch ``append_*_shard`` uses, so the write order that
-makes a crash between the two table writes safe to redeliver is
-defined once, in ``operators/dedup_store.py`` and
+Each sink hands that LAZY anti-joined frame straight to the SAME
+private append body its store's batch ``append_*_shard`` uses: no
+separate novelty job runs. The append body pins its input with a lazy
+local checkpoint that fills during the bands write, so the filter
+runs once, against the store as it stood before the batch; a
+redelivered batch appends zero rows and writes no files. The write
+order that makes a crash between the two table writes safe to
+redeliver is defined once, in ``operators/dedup_store.py`` and
 ``operators/ann_store.py``. A store whose tables exist without a meta
 table (a crashed bootstrap, or a pre-meta store) is refused like the
 batch append refuses it, never re-bootstrapped over its standing rows.
@@ -138,8 +142,7 @@ def minhash_ingest_batch(
             read_tombstones(spark, name),
             id_col=id_col,
         )
-        if novel is not None:
-            _append_rows(novel, name, meta, text_col=text_col, id_col=id_col)
+        _append_rows(novel, name, meta, text_col=text_col, id_col=id_col)
 
     return ingest
 
@@ -231,8 +234,7 @@ def ann_ingest_batch(
             read_tombstones(spark, name),
             id_col=id_col,
         )
-        if novel is not None:
-            _append_rows(novel, name, meta, id_col=id_col, vec_col=vec_col)
+        _append_rows(novel, name, meta, id_col=id_col, vec_col=vec_col)
 
     return ingest
 

@@ -11,11 +11,14 @@ registry.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, never a fixed path: run from
+# another checkout, it must check that checkout's package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from polars_text_spark.session import get_spark  # noqa: E402

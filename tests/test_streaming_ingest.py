@@ -79,6 +79,73 @@ def test_stream_ingest_matches_batch_store(spark, corpus, tmp_path):
     assert n == corpus.count()
 
 
+def _job_count(spark, fn, group: str) -> int:
+    """Spark jobs ``fn()`` submits, counted under a job group (jobs
+    from AQE's helper threads inherit it)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _table_state(spark, tables):
+    return {
+        t: (spark.table(t).count(), len(spark.table(t).inputFiles()))
+        for t in tables
+    }
+
+
+@pytest.mark.parametrize("store", ["minhash", "ann"])
+def test_sink_batch_budget_and_redelivery(spark, corpus, sf_dir, tmp_path, store):
+    """One micro-batch through the sink body itself, on a static
+    batch read from parquet like a file-stream batch. A novel MinHash
+    batch stays on its job budget (the novelty filter is folded into
+    the append, no separate probe job); redelivering the same batch to
+    either store adds no row and no data file to either table."""
+    from polars_text_spark.operators.ann_store import write_ann_store
+    from polars_text_spark.streaming.ingest import (
+        ann_ingest_batch,
+        minhash_ingest_batch,
+    )
+
+    name = f"{store}_sink_budget"
+    if store == "minhash":
+        rows, key = corpus, "doc_id"
+        tables = [f"{name}_bands", f"{name}_shingles"]
+        write_minhash_store(rows.filter(F.col(key) % 2 == 0), name, buckets=4)
+        sink = minhash_ingest_batch(name, buckets=4)
+    else:
+        rows = (
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            .filter(F.col("embedding").isNotNull())
+            .limit(100)
+        )
+        key = "vec_id"
+        tables = [f"{name}_bands", f"{name}_vectors"]
+        write_ann_store(
+            rows.filter(F.col(key) % 2 == 0), name, dim=64, buckets=4
+        )
+        sink = ann_ingest_batch(name, dim=64, buckets=4)
+    src = str(tmp_path / "batch")
+    rows.filter(F.col(key) % 2 == 1).write.parquet(src)
+    batch = spark.read.parquet(src)
+
+    jobs = _job_count(spark, lambda: sink(batch, 0), f"{name}-novel")
+    if store == "minhash":
+        assert jobs <= 9, f"novel micro-batch ran {jobs} jobs"
+    grown = _table_state(spark, tables)
+    assert grown[tables[1]][0] == rows.count()
+
+    sink(batch, 1)  # redelivery
+    assert _table_state(spark, tables) == grown
+
+
 def test_stream_ingest_skips_tombstoned_ids(spark, corpus, tmp_path):
     src = str(tmp_path / "drops")
     base = corpus.filter(F.col("doc_id") % 2 == 0)
