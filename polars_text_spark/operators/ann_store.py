@@ -23,6 +23,14 @@ query time. Since round 14 the PHYSICAL table names are generational
 ``<name>_meta`` is the atomic pointer — resolve through
 ``sources.bucketing.live_table`` (``_phys`` here) instead of
 hardcoding names (see :mod:`polars_text_spark.operators.dedup_store`).
+
+The incremental-store protocol (fresh write, the append gate and
+body, the stream sink body, purge, rebucket and the band audit) is
+shared with the MinHash store and written once, as
+``sources.bucketing.IdKeyedStore``. This module supplies
+:data:`ANN_STORE`: the meta check that an append's bucket count is
+recorded, and the band-key and unit-vector projections
+(:func:`_shard_projections`).
 """
 
 from __future__ import annotations
@@ -37,22 +45,15 @@ from polars_text_spark.operators.similarity import (
     with_l2_normalized,
 )
 from polars_text_spark.sources.bucketing import (
-    check_generation_unchanged as _check_generation_unchanged,
-    clear_table,
-    live_table as _phys,
+    IdKeyedStore,
+    live_table as _phys,  # kept importable: callers resolve live tables here
     meta_gen,
     minus_tombstones as _minus_tombstones,
     phys_table,
     pooled_writes,
-    read_meta,
-    probe_id_clash,
     read_tombstones as _tombstones,
-    rewrite_generation,
-    snapshot_rewrite,
-    sweep_stale_generations,
     tombstone_ids,
     write_bucketed,
-    write_meta_row,
 )
 
 __all__ = [
@@ -65,8 +66,6 @@ __all__ = [
     "topk_from_store",
     "write_ann_store",
 ]
-
-_SUFFIXES = ("bands", "vectors")
 
 
 def write_ann_store(
@@ -81,51 +80,35 @@ def write_ann_store(
     buckets: int = 8,
 ) -> None:
     """Materialize ``<name>_bands`` and ``<name>_vectors`` bucketed
-    tables for ``vectors`` (one pass over the vectors each). A fresh
-    write is generation 0 (unsuffixed physical names); physical tables
-    a previous store of the same name left behind — including suffixed
-    maintenance generations — are swept first."""
+    tables for ``vectors`` (one pass over the vectors each), as a NEW
+    store at generation 0 (:meth:`IdKeyedStore.fresh
+    <polars_text_spark.sources.bucketing.IdKeyedStore.fresh>`)."""
     spark = vectors.sparkSession
-    # current_gen=-1 matches no table: drop ALL generations
-    sweep_stale_generations(spark, name, _SUFFIXES, -1)
-    banded, unit = _shard_projections(
-        vectors,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        num_planes=num_planes,
-        bands=bands,
-    )
-    # The two table writes are independent projections of the same
-    # input, so they overlap (pooled_writes). A fresh write is
-    # generation 0 and nothing reads the store mid-write, so commit
-    # order between the two tables carries no crash contract (unlike
-    # append, which stays bands-first).
-    pooled_writes(spark, [
-        lambda: write_bucketed(
-            banded, f"{name}_bands", bucket_by="band_key",
-            buckets=buckets, sort_by="band_key",
-        ),
-        lambda: write_bucketed(
-            unit, f"{name}_vectors", bucket_by="id",
-            buckets=buckets, sort_by="id",
-        ),
-    ])
-    # a rebuild starts a NEW store generation: tombstones from the
-    # previous generation would silently delete rows from the fresh
-    # store at read time and block re-appending their ids
-    clear_table(spark, f"{name}_tombstones")
-    # signature parameters ride with the store so a query-time mismatch
-    # (whose band keys could NEVER collide -> silent recall-0) fails
-    # loudly; buckets rides too so incremental appends reuse the
-    # write-time bucket spec (a mismatched append would break the
-    # shuffle-free co-location guarantee). A fresh store starts a new
-    # meta log at generation 0.
-    meta = spark.createDataFrame(
-        [(int(dim), int(num_planes), int(bands), int(buckets), 0)],
-        "dim int, num_planes int, bands int, buckets int, gen int",
-    )
-    write_meta_row(spark, meta, f"{name}_meta", reset=True)
+    params = dict(dim=dim, num_planes=num_planes, bands=bands, buckets=buckets)
+    with ANN_STORE.fresh(spark, name, params):
+        banded, unit = _shard_projections(
+            vectors,
+            id_col=id_col,
+            vec_col=vec_col,
+            dim=dim,
+            num_planes=num_planes,
+            bands=bands,
+        )
+        # The two table writes are independent projections of the same
+        # input, so they overlap (pooled_writes). A fresh write is
+        # generation 0 and nothing reads the store mid-write, so commit
+        # order between the two tables carries no crash contract
+        # (unlike append, which stays bands-first).
+        pooled_writes(spark, [
+            lambda: write_bucketed(
+                banded, f"{name}_bands", bucket_by="band_key",
+                buckets=buckets, sort_by="band_key",
+            ),
+            lambda: write_bucketed(
+                unit, f"{name}_vectors", bucket_by="id",
+                buckets=buckets, sort_by="id",
+            ),
+        ])
 
 
 def _shard_projections(
@@ -154,33 +137,37 @@ def _shard_projections(
     return banded, unit
 
 
-def _store_meta(
-    spark: SparkSession, name: str, *, require_buckets: bool = True
-) -> tuple[int, int, int, int | None, int]:
-    """(dim, num_planes, bands, buckets, gen) from ONE meta read —
-    callers that also need the generation must not pay a second
-    meta-log collect (round 16: it was one extra driver job per store
-    read/append)."""
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"ann store '{name}' has no meta table; (re)create it "
-            "with write_ann_store"
-        )
-    has_buckets = "buckets" in m.asDict()
-    if require_buckets and not has_buckets:
+def _check_meta(spark: SparkSession, name: str, meta) -> None:
+    """An append reuses the write-time bucket spec, so a meta row
+    without the bucket count is refused."""
+    if "buckets" not in meta.asDict():
         raise ValueError(
             f"ann store '{name}' predates incremental ingest (its meta "
             "lacks the bucket count); rewrite it with write_ann_store "
             "before appending shards"
         )
-    return (
-        int(m["dim"]),
-        int(m["num_planes"]),
-        int(m["bands"]),
-        int(m["buckets"]) if has_buckets else None,
-        meta_gen(m),
+
+
+def _stage(rows: DataFrame, meta, id_col: str, vec_col: str) -> DataFrame:
+    return rows.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+
+
+def _project(staged: DataFrame, meta, bands_table: str):
+    return _shard_projections(
+        staged,
+        id_col="id",
+        vec_col="vec",
+        dim=int(meta["dim"]),
+        num_planes=int(meta["num_planes"]),
+        bands=int(meta["bands"]),
     )
+
+
+ANN_STORE = IdKeyedStore(
+    kind="ann", suffixes=("bands", "vectors"), band_keys=("band_key",),
+    writer="write_ann_store", check_meta=_check_meta,
+    stage=_stage, project=_project,
+)
 
 
 def band_stats_from_ann_store(
@@ -198,12 +185,7 @@ def band_stats_from_ann_store(
     side), tombstones respected. ANN bands carry no signature-group
     column, so the cross-signature telemetry columns are null — the
     saturation counts are the actionable part here."""
-    from polars_text_spark.operators.dedup import band_bucket_stats
-
-    banded = _minus_tombstones(
-        spark.table(_phys(spark, name, "bands")), _tombstones(spark, name)
-    )
-    return band_bucket_stats(banded, ["band_key"], band_cap=band_cap)
+    return ANN_STORE.band_stats(spark, name, band_cap)
 
 
 def rebucket_store(spark: SparkSession, name: str, new_buckets: int) -> None:
@@ -230,20 +212,7 @@ def rebucket_store(spark: SparkSession, name: str, new_buckets: int) -> None:
 
     Atomic and race-checked: see
     :func:`polars_text_spark.sources.bucketing.rewrite_generation`."""
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"ann store '{name}' has no meta table; (re)create it "
-            "with write_ann_store"
-        )
-    rewrite_generation(
-        spark,
-        name,
-        _SUFFIXES,
-        m,
-        snapshot_rewrite(spark, buckets=new_buckets),
-        changes={"buckets": int(new_buckets)},
-    )
+    ANN_STORE.rebucket(spark, name, new_buckets)
 
 
 def delete_ids(ids: DataFrame, name: str, *, id_col: str = "vec_id") -> None:
@@ -263,30 +232,12 @@ def delete_ids(ids: DataFrame, name: str, *, id_col: str = "vec_id") -> None:
 
 
 def purge_deleted(spark: SparkSession, name: str) -> None:
-    """Fold the tombstone set into the store files: rewrite both
-    bucketed tables with the tombstones anti-joined away, then clear
-    the tombstone table. After this the store is byte-equivalent to
-    one rebuilt from the filtered corpus (parity-tested) and
-    re-appending previously-deleted ids becomes legal again. Atomic
-    and race-checked: see
-    :func:`polars_text_spark.sources.bucketing.rewrite_generation`;
-    the tombstone clear happens AFTER the cutover, so a crash between
-    the two leaves reads correct (the anti-join of already-purged ids
-    is a no-op). A store without a meta table is refused, tombstones
-    and rows left in place."""
-    ts = _tombstones(spark, name)
-    if ts is None:
-        return
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"ann store '{name}' has no meta table; rewrite it with "
-            "write_ann_store from its live rows instead of purging in "
-            "place"
-        )
-    ts = ts.localCheckpoint(eager=True)  # survives the table drops below
-    rewrite_generation(spark, name, _SUFFIXES, m, snapshot_rewrite(spark, anti=ts))
-    clear_table(spark, f"{name}_tombstones")
+    """Fold the tombstone set into the store files (:meth:`IdKeyedStore.purge
+    <polars_text_spark.sources.bucketing.IdKeyedStore.purge>`: atomic
+    and race-checked). After this the store is byte-equivalent to one
+    rebuilt from the filtered corpus (parity-tested) and re-appending
+    previously-deleted ids becomes legal again."""
+    ANN_STORE.purge(spark, name)
 
 
 def append_ann_shard(
@@ -297,100 +248,23 @@ def append_ann_shard(
     vec_col: str = "embedding",
 ) -> None:
     """Incremental ingest: append a NEW shard's band keys and unit
-    vectors into the standing store tables (the ANN twin of
-    :func:`polars_text_spark.operators.dedup_store.incremental_pairs_from_store`'s
-    write half).
+    vectors into the standing store tables under the signature
+    parameters the store meta records (a shard banded under other
+    planes would never collide with standing keys). The append reuses
+    the write-time bucket spec: Spark adds new bucket files, the
+    standing files are untouched, and store-side joins still read
+    every bucket co-located with NO Exchange. Dimensionality is
+    guarded in-plan by ``sha_band_keys`` (round 16: the former
+    pre-flight scan was a full extra pass over the shard).
 
-    Signature parameters are read from the store meta — they CANNOT
-    legitimately differ (a shard banded under different planes would
-    never collide with standing keys), so there is nothing to pass and
-    nothing to get wrong. The append reuses the write-time bucket spec:
-    Spark adds new bucket files per bucket id, the standing files are
-    untouched (no table rewrite), and subsequent store-side joins still
-    read every bucket co-located with NO Exchange. Only the (small)
-    shard shuffles — once, at write time, into its bucket files.
-
-    Contract: shard ids must be DISJOINT from store ids — enforced
-    with a limit-1 semi-join probe (the shard probes the id-bucketed
-    vector table, nothing store-sized is broadcast) before any
-    write, because a duplicated id would
-    silently double its rows in both tables and burn top-k rank slots
-    with duplicate candidates on every later query.
+    Contract: shard ids are non-null and DISJOINT from store ids and
+    pending tombstones, enforced by the shared append gate
+    (:meth:`IdKeyedStore.append
+    <polars_text_spark.sources.bucketing.IdKeyedStore.append>`): a
+    duplicated id would burn top-k rank slots with duplicate
+    candidates on every later query.
     """
-    spark = shard.sparkSession
-    # dimensionality is guarded IN-PLAN by sha_band_keys (round 16):
-    # the former pre-flight scan was a full extra pass over the shard
-    meta = _store_meta(spark, name)
-    clash = probe_id_clash(
-        shard,
-        # the meta tuple ends with the generation the append writes to
-        spark.table(phys_table(name, "vectors", meta[-1])),
-        _tombstones(spark, name),
-        id_col=id_col,
-    )
-    if clash is not None:
-        raise ValueError(
-            f"shard id {clash!r} already exists in ann store "
-            f"'{name}'; appending would silently duplicate its rows in "
-            "the bands/vectors tables and corrupt later top-k results "
-            "(the incremental-ingest contract requires disjoint ids)"
-        )
-    _append_rows(shard, name, meta, id_col=id_col, vec_col=vec_col)
-
-
-def _append_rows(
-    rows: DataFrame,
-    name: str,
-    meta: tuple[int, int, int, int, int],
-    *,
-    id_col: str,
-    vec_col: str,
-) -> None:
-    """Append ``rows`` (ids already proven new to the store) under
-    ``meta`` from :func:`_store_meta` — the one append body behind
-    :func:`append_ann_shard` and the streaming sink
-    (``streaming.ingest.ann_ingest_batch``).
-
-    Write order is BANDS FIRST, vectors last, and both callers decide
-    an id's presence on the VECTORS table. A crash between the two
-    writes leaves band rows whose ids still read as new, so the retry
-    re-appends them: duplicate band collisions are dropDuplicates'd by
-    every read path, while a duplicate unit-vector row would duplicate
-    (query, neighbor) rows in the exact re-rank. The post-write
-    generation check fails the append loudly when a maintenance
-    cutover raced it."""
-    dim, num_planes, bands, buckets, gen_at_start = meta
-    # A LAZY local checkpoint, as in the MinHash append body: it fills
-    # during the bands write and feeds the vectors write, so the
-    # streaming sink's lazy novelty filter (bucketing.novel_rows) runs
-    # exactly once, before any vector row lands. Appended rows are the
-    # small side by contract, so the pin is bounded.
-    rows = rows.select(id_col, vec_col).localCheckpoint(eager=False)
-    banded, unit = _shard_projections(
-        rows,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        num_planes=num_planes,
-        bands=bands,
-    )
-    write_bucketed(
-        banded,
-        phys_table(name, "bands", gen_at_start),
-        bucket_by="band_key",
-        buckets=buckets,
-        sort_by="band_key",
-        mode="append",
-    )
-    write_bucketed(
-        unit,
-        phys_table(name, "vectors", gen_at_start),
-        bucket_by="id",
-        buckets=buckets,
-        sort_by="id",
-        mode="append",
-    )
-    _check_generation_unchanged(rows.sparkSession, name, gen_at_start)
+    ANN_STORE.append(shard, name, id_col=id_col, payload_col=vec_col)
 
 
 def topk_against_shard(
@@ -426,9 +300,9 @@ def topk_against_shard(
     answers over the grown store directly.
     """
     # read-only: works on pre-bucket-meta stores too
-    dim, num_planes, bands, _, __gen = _store_meta(
-        spark, name, require_buckets=False
-    )
+    m = ANN_STORE.require_meta(spark, name, "before querying it")
+    dim, num_planes, bands = (int(m[k]) for k in ("dim", "num_planes", "bands"))
+    __gen = meta_gen(m)
     # wrong-dim shards fail loudly inside sha_band_keys (in-plan
     # guard, round 16) when the banding projection first runs
     banded, unit = _shard_projections(
@@ -519,12 +393,7 @@ def topk_from_store(
     :func:`band_stats_from_ann_store` (detect) plus a rebuild at wider
     ``num_planes`` (re-provision) or :func:`rebucket_store` for read
     parallelism — see SCALING.md round-13."""
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"ann store '{name}' has no meta table; (re)create it "
-            "with write_ann_store"
-        )
+    m = ANN_STORE.require_meta(spark, name, "before querying it")
     if (m["dim"], m["num_planes"], m["bands"]) != (dim, num_planes, bands):
         raise ValueError(
             f"ann store '{name}' was written with dim={m['dim']}, "

@@ -29,6 +29,14 @@ resolve through :func:`_phys` (``sources.bucketing.live_table``, or
 ``phys_table`` + ``store_generation``) instead of hardcoding names —
 the unsuffixed names are only guaranteed for a store that has never
 had rebucket/purge run.
+
+The incremental-store protocol (fresh write, the append gate and
+body, the stream sink body, purge, rebucket and the band audit) is
+shared with the ANN store and written once, as
+``sources.bucketing.IdKeyedStore``. This module supplies
+:data:`MINHASH_STORE`: the shingle hash-family meta check
+(:func:`_assert_hash_family`), the one-tokenize-pass append stage and
+the band projection, which keeps a legacy store's ``sig``-less schema.
 """
 
 from __future__ import annotations
@@ -44,22 +52,18 @@ from polars_text_spark.operators.dedup import (
 )
 from polars_text_spark.persist import track_persist
 from polars_text_spark.sources.bucketing import (
-    check_generation_unchanged as _check_generation_unchanged,
-    clear_table,
+    IdKeyedStore,
     live_table as _phys,
     meta_gen,
     minus_tombstones as _minus_tombstones,
     phys_table,
-    probe_id_clash,
     read_meta,
     read_tombstones as _tombstones,
     rewrite_generation,
-    snapshot_rewrite,
+    start_meta_log,
     store_generation,
-    sweep_stale_generations,
     tombstone_ids,
     write_bucketed,
-    write_meta_row,
 )
 
 __all__ = [
@@ -74,8 +78,6 @@ __all__ = [
     "write_minhash_store",
 ]
 
-_SUFFIXES = ("bands", "shingles")
-
 
 def _write_meta(
     spark: SparkSession,
@@ -87,14 +89,13 @@ def _write_meta(
     buckets: int,
     hashv: int,
 ) -> None:
-    """Start a fresh meta log at generation 0 (cutovers append their
-    rows in :func:`~polars_text_spark.sources.bucketing.rewrite_generation`)."""
-    meta = spark.createDataFrame(
-        [(int(num_perm), int(bands), int(shingle_n), int(buckets), int(hashv), 0)],
-        "num_perm int, bands int, shingle_n int, buckets int, "
-        "hashv int, gen int",
-    )
-    write_meta_row(spark, meta, f"{name}_meta", reset=True)
+    """Start a fresh meta log at generation 0 recording these
+    parameters (:func:`~polars_text_spark.sources.bucketing.start_meta_log`);
+    the ``minhash_store_migrate`` query stamps a v1-family meta with it."""
+    start_meta_log(spark, name, dict(
+        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
+        buckets=buckets, hashv=hashv,
+    ))
 
 
 def _write_tables(
@@ -156,41 +157,25 @@ def write_minhash_store(
     buckets: int = 8,
 ) -> None:
     """Materialize ``<name>_shingles`` and ``<name>_bands`` bucketed
-    tables for ``df`` in one pass over the text (:func:`_write_tables`).
-    A fresh write is generation 0 (unsuffixed physical names); any
-    physical tables a previous store of the same name left behind —
-    including suffixed maintenance generations — are swept first."""
-    spark = df.sparkSession
-    # a rebuild starts a NEW store: sweep EVERY physical generation of
-    # the old one (current_gen=-1 matches no table, so all are
-    # dropped), then write fresh at generation 0
-    sweep_stale_generations(spark, name, _SUFFIXES, -1)
-    _write_tables(
-        df, f"{name}_shingles", f"{name}_bands",
-        text_col=text_col, id_col=id_col, num_perm=num_perm,
-        bands=bands, shingle_n=shingle_n, buckets=buckets,
-    )
-    # a rebuild starts a NEW store generation: tombstones from the
-    # previous generation would silently delete rows from the fresh
-    # store at read time and block re-appending their ids
-    clear_table(spark, f"{name}_tombstones")
-    # signature parameters ride with the store (the ann_store meta
-    # pattern): a shard banded under different permutations/shingles
-    # would NEVER collide with standing keys, so append reads them
-    # back instead of trusting the caller. hashv records the shingle
-    # hash FAMILY (dedup.SHINGLE_HASH_VERSION) — the same
-    # never-collide failure with no parameter to mismatch.
+    tables for ``df`` in one pass over the text (:func:`_write_tables`),
+    as a NEW store at generation 0 (:meth:`IdKeyedStore.fresh
+    <polars_text_spark.sources.bucketing.IdKeyedStore.fresh>`). The
+    meta records the signature parameters and ``hashv``, the shingle
+    hash FAMILY (dedup.SHINGLE_HASH_VERSION): a shard hashed under
+    another family would never collide with the standing keys either,
+    with no parameter to mismatch."""
     from polars_text_spark.operators.dedup import SHINGLE_HASH_VERSION
 
-    _write_meta(
-        spark,
-        name,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
-        buckets=buckets,
-        hashv=SHINGLE_HASH_VERSION,
+    params = dict(
+        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
+        buckets=buckets, hashv=SHINGLE_HASH_VERSION,
     )
+    with MINHASH_STORE.fresh(df.sparkSession, name, params):
+        _write_tables(
+            df, f"{name}_shingles", f"{name}_bands",
+            text_col=text_col, id_col=id_col, num_perm=num_perm,
+            bands=bands, shingle_n=shingle_n, buckets=buckets,
+        )
 
 
 def _assert_hash_family(spark: SparkSession, name: str, meta_row=None) -> None:
@@ -247,135 +232,52 @@ def append_minhash_shard(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
-    """Incremental ingest for the MinHash store (the dedup twin of
-    :func:`polars_text_spark.operators.ann_store.append_ann_shard`):
-    band the shard under the store's RECORDED signature parameters and
-    append its band + shingle rows as new bucket files. Standing files
-    are never rewritten — ingest writes O(shard) data (the
-    disjointness probe does read the store's id column, shuffle-free,
-    to prove no clash). After the append, :func:`pairs_from_store` answers over the
-    grown corpus; once append fragments accumulate,
+    """Incremental ingest for the MinHash store: band the shard under
+    the store's RECORDED signature parameters and append its band +
+    shingle rows as new bucket files; standing files are never
+    rewritten. After the append, :func:`pairs_from_store` answers over
+    the grown corpus; once append fragments accumulate,
     :func:`rebucket_minhash_store` at the current bucket count merges
     them to one file per bucket.
 
-    Contract: shard ids must be DISJOINT from store ids AND from any
-    pending tombstones (enforced with a semi-join probe — the shard
-    probes the id-bucketed store, nothing store-sized is broadcast)
-    — a duplicate id would double its rows in both tables, and
-    a tombstoned id would be silently swallowed by the read-time
-    anti-join until purge."""
-    spark = shard.sparkSession
-    meta = _append_meta(spark, name)
-    clash = probe_id_clash(
-        shard,
-        # the meta tuple ends with the generation the append writes to
-        spark.table(phys_table(name, "shingles", meta[-1])),
-        _tombstones(spark, name),
-        id_col=id_col,
-    )
-    if clash is not None:
-        raise ValueError(
-            f"shard id {clash!r} already exists in minhash "
-            f"store '{name}' (or is tombstoned awaiting purge); "
-            "appending would duplicate its rows and corrupt later "
-            "pair results"
-        )
-    _append_rows(shard, name, meta, text_col=text_col, id_col=id_col)
+    Contract: shard ids are non-null and DISJOINT from store ids AND
+    from pending tombstones, enforced by the shared append gate
+    (:meth:`IdKeyedStore.append
+    <polars_text_spark.sources.bucketing.IdKeyedStore.append>`)."""
+    MINHASH_STORE.append(shard, name, id_col=id_col, payload_col=text_col)
 
 
-def _append_meta(
-    spark: SparkSession, name: str
-) -> tuple[int, int, int, int, int]:
-    """(num_perm, bands, shingle_n, buckets, gen) an append bands
-    under, from ONE meta read; raises for a store without meta or
-    written under another shingle hash family (whose band keys would
-    never collide with the new rows)."""
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"minhash store '{name}' predates incremental ingest (no "
-            "meta table); rewrite it with write_minhash_store before "
-            "appending shards"
-        )
-    _assert_hash_family(spark, name, meta_row=m)
-    return (
-        int(m["num_perm"]),
-        int(m["bands"]),
-        int(m["shingle_n"]),
-        int(m["buckets"]),
-        meta_gen(m),
-    )
-
-
-def _append_rows(
-    rows: DataFrame,
-    name: str,
-    meta: tuple[int, int, int, int, int],
-    *,
-    text_col: str,
-    id_col: str,
-) -> None:
-    """Append ``rows`` (ids already proven new to the store) under
-    ``meta`` from :func:`_append_meta` — the one append body behind
-    :func:`append_minhash_shard` and the streaming sink
-    (``streaming.ingest.minhash_ingest_batch``).
-
-    Write order is BANDS FIRST, shingles last, and both callers decide
-    an id's presence on the SHINGLES table. A crash between the two
-    writes leaves band rows whose ids still read as new, so the retry
-    re-appends them: duplicate band rows are harmless (candidate pairs
-    are deduplicated and compaction rewrites the files), while a
-    duplicate shingle row would double-count every verified pair.
-    Flipping the order would make a crashed append refuse its retry
-    with shingle rows whose band keys never landed — silent recall
-    loss. The post-write generation check fails the append loudly when
-    a maintenance cutover raced it."""
-    num_perm, bands, shingle_n, buckets, gen_at_start = meta
-    spark = rows.sparkSession
-    bands_tbl = phys_table(name, "bands", gen_at_start)
-    shingles_tbl = phys_table(name, "shingles", gen_at_start)
-    # ONE tokenize pass (round 15): the staged (id, shingles) frame is
-    # pinned and feeds BOTH table appends — appended rows are the
-    # small side by contract, so the pin is bounded. A LAZY local
-    # checkpoint fills during the bands write's own job; persist()
-    # would cost AQE a separate cache-building job per append. A lost
-    # block fails the shingles write loudly, and the bands-first order
-    # keeps that retryable. The pin also makes the streaming sink's
-    # lazy novelty filter (bucketing.novel_rows) run exactly once,
-    # inside the bands write, against the shingles table as it stood
-    # before this append.
-    staged = rows.select(
+def _stage(rows: DataFrame, meta, id_col: str, text_col: str) -> DataFrame:
+    """The append's pinned stage: ``(id, sh)``, ONE tokenize pass
+    (round 15) feeding both table appends."""
+    return rows.select(
         F.col(id_col).alias("id"),
-        token_shingles(text_col, shingle_n, hashed=True).alias("sh"),
-    ).localCheckpoint(eager=False)
-    shard_cols = ["id", F.col("bk.band").alias("band"),
-                  F.col("bk.bucket").alias("bucket")]
-    if "sig" in spark.table(bands_tbl).columns:
+        token_shingles(text_col, int(meta["shingle_n"]), hashed=True).alias("sh"),
+    )
+
+
+def _project(staged: DataFrame, meta, bands_table: str):
+    """(bands, shingles) rows of the staged ``(id, sh)`` frame under
+    the store's recorded signature parameters."""
+    cols = ["id", F.col("bk.band").alias("band"),
+            F.col("bk.bucket").alias("bucket")]
+    if "sig" in staged.sparkSession.table(bands_table).columns:
         # the hot-band guard's signature-group key; stores written
         # before it existed keep their narrower schema
-        shard_cols.append(F.col("__sig").alias("sig"))
+        cols.append(F.col("__sig").alias("sig"))
     banded = _banded_signatures(
-        staged, text_col, "id", "id",
-        num_perm=num_perm, bands=bands, shingle_n=shingle_n,
-        shingles_col="sh",
-    ).select(*shard_cols)
-    write_bucketed(
-        banded,
-        bands_tbl,
-        bucket_by=["band", "bucket"],
-        buckets=buckets,
-        sort_by=["band", "bucket"],
-        mode="append",
-    )
-    write_bucketed(
-        staged,
-        shingles_tbl,
-        bucket_by="id",
-        buckets=buckets,
-        sort_by="id",
-        mode="append",
-    )
-    _check_generation_unchanged(spark, name, gen_at_start)
+        staged, "sh", "id", "id",
+        num_perm=int(meta["num_perm"]), bands=int(meta["bands"]),
+        shingle_n=int(meta["shingle_n"]), shingles_col="sh",
+    ).select(*cols)
+    return banded, staged
+
+
+MINHASH_STORE = IdKeyedStore(
+    kind="minhash", suffixes=("bands", "shingles"), band_keys=("band", "bucket"),
+    writer="write_minhash_store", check_meta=_assert_hash_family,
+    stage=_stage, project=_project,
+)
 
 
 def _warn_if_legacy_sig_less(
@@ -419,21 +321,7 @@ def rebucket_minhash_store(
     preserved; :func:`pairs_from_store` answers are identical before
     and after (parity-tested). Atomic and race-checked: see
     :func:`polars_text_spark.sources.bucketing.rewrite_generation`."""
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"minhash store '{name}' predates the meta table; rewrite "
-            "it with write_minhash_store (which also records the "
-            "bucket count) instead of re-bucketing in place"
-        )
-    rewrite_generation(
-        spark,
-        name,
-        _SUFFIXES,
-        m,
-        snapshot_rewrite(spark, buckets=new_buckets),
-        changes={"buckets": int(new_buckets)},
-    )
+    MINHASH_STORE.rebucket(spark, name, new_buckets)
 
 
 def rebuild_minhash_store(
@@ -471,19 +359,16 @@ def rebuild_minhash_store(
     the ``minhash_store_migrate`` driver query pins the lifecycle)."""
     from polars_text_spark.operators.dedup import SHINGLE_HASH_VERSION
 
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"minhash store '{name}' has no meta table; use "
-            "write_minhash_store to (re)create it — rebuild preserves "
-            "tombstones, which a pre-meta store cannot have recorded "
-            "reliably"
-        )
+    m = MINHASH_STORE.require_meta(
+        spark, name,
+        "instead — rebuild preserves tombstones, which a pre-meta store "
+        "cannot have recorded reliably",
+    )
     params = {k: int(m[k]) for k in ("num_perm", "bands", "shingle_n", "buckets")}
     rewrite_generation(
         spark,
         name,
-        _SUFFIXES,
+        MINHASH_STORE.suffixes,
         m,
         lambda dst, _: _write_tables(
             corpus_df, dst["shingles"], dst["bands"],
@@ -512,29 +397,11 @@ def delete_ids(ids: DataFrame, name: str, *, id_col: str = "doc_id") -> None:
 
 
 def purge_deleted(spark: SparkSession, name: str) -> None:
-    """Fold the tombstone set into the store files: rewrite both
-    bucketed tables with the tombstones anti-joined away, then clear
-    the tombstone table. After this the store is equivalent to one
-    rebuilt from the filtered corpus (parity-tested). Atomic and
-    race-checked: see
-    :func:`polars_text_spark.sources.bucketing.rewrite_generation`;
-    the tombstone clear happens AFTER the cutover, so a crash between
-    the two leaves reads correct (the anti-join of already-purged ids
-    is a no-op). A store without a meta table is refused, tombstones
-    and rows left in place."""
-    ts = _tombstones(spark, name)
-    if ts is None:
-        return
-    m = read_meta(spark, name)
-    if m is None:
-        raise ValueError(
-            f"minhash store '{name}' has no meta table; rewrite it with "
-            "write_minhash_store from its live rows instead of purging "
-            "in place"
-        )
-    ts = ts.localCheckpoint(eager=True)  # survives the table drops below
-    rewrite_generation(spark, name, _SUFFIXES, m, snapshot_rewrite(spark, anti=ts))
-    clear_table(spark, f"{name}_tombstones")
+    """Fold the tombstone set into the store files (:meth:`IdKeyedStore.purge
+    <polars_text_spark.sources.bucketing.IdKeyedStore.purge>`: atomic
+    and race-checked). After this the store is equivalent to one
+    rebuilt from the filtered corpus (parity-tested)."""
+    MINHASH_STORE.purge(spark, name)
 
 
 def band_stats_from_store(
@@ -550,15 +417,7 @@ def band_stats_from_store(
     get the full cross-signature recall telemetry; pre-sig stores
     report null there (and the pair paths warn — see
     :func:`_warn_if_legacy_sig_less`)."""
-    from polars_text_spark.operators.dedup import band_bucket_stats
-
-    banded = _minus_tombstones(
-        spark.table(_phys(spark, name, "bands")), _tombstones(spark, name)
-    )
-    sig_col = "sig" if "sig" in banded.columns else None
-    return band_bucket_stats(
-        banded, ["band", "bucket"], band_cap=band_cap, sig_col=sig_col
-    )
+    return MINHASH_STORE.band_stats(spark, name, band_cap)
 
 
 def candidate_self_join(spark: SparkSession, name: str) -> DataFrame:

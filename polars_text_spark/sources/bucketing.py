@@ -15,14 +15,17 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
+from dataclasses import dataclass
 from functools import partial
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
 __all__ = [
+    "IdKeyedStore",
     "check_generation_unchanged",
     "clear_table",
     "live_table",
@@ -35,6 +38,7 @@ __all__ = [
     "read_tombstones",
     "rewrite_generation",
     "snapshot_rewrite",
+    "start_meta_log",
     "store_generation",
     "sweep_stale_generations",
     "tombstone_ids",
@@ -153,12 +157,13 @@ def novel_rows(
 
     The append that follows writes into the table this plan
     anti-joined, so the filter must run exactly once, before its own
-    rows land. The append bodies (``_append_rows`` in
-    ``operators/dedup_store.py`` and ``operators/ann_store.py``)
-    guarantee it: they pin their input with a lazy local checkpoint
+    rows land. The append body (:meth:`IdKeyedStore.append_rows`)
+    guarantees it: it pins its input with a lazy local checkpoint
     that fills during the bands write, before the id-keyed table is
     touched. A redelivered batch is an append of zero rows, which
-    writes no files."""
+    writes no files. A null id is never matched by the anti-join, so
+    it reads as novel on every delivery: callers drop null ids first
+    (:meth:`IdKeyedStore.sink` does)."""
     novel = batch.join(
         standing.select(F.col("id").alias(id_col)), id_col, "left_anti"
     )
@@ -648,6 +653,19 @@ def write_meta_row(
     df.write.format("parquet").mode("append").saveAsTable(table)
 
 
+def start_meta_log(spark: SparkSession, name: str, params: dict) -> None:
+    """Start a fresh ``<name>_meta`` log at generation 0: one row of
+    the store's integer parameters, in ``params`` order, plus ``gen``
+    (:func:`write_meta_row` with ``reset=True``; cutovers append their
+    rows in :func:`rewrite_generation`)."""
+    row = {**params, "gen": 0}
+    meta = spark.createDataFrame(
+        [tuple(int(v) for v in row.values())],
+        ", ".join(f"{k} int" for k in row),
+    )
+    write_meta_row(spark, meta, f"{name}_meta", reset=True)
+
+
 def check_generation_unchanged(
     spark: SparkSession, name: str, gen_at_start: int
 ) -> None:
@@ -674,4 +692,235 @@ def check_generation_unchanged(
             "Re-run the append — an 'already exists' id-clash means "
             "the rows were carried and no action is needed. Schedule "
             "maintenance in a writer-free window"
+        )
+
+
+# ---------------------------------------------------------------------------
+# The id-keyed store protocol (the MinHash and ANN stores)
+#
+# Both stores are a bands table bucketed by its band key and an id table
+# bucketed by ``id``, plus the meta pointer and the tombstone set. Only
+# the meta check and the row projections differ; the protocol is written
+# once, below. Bloom is not id-keyed: its appends re-OR bits.
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class IdKeyedStore:
+    """One kind of id-keyed store: the hooks it supplies, and the
+    protocol every such store shares. The hooks:
+
+    - ``check_meta(spark, name, meta)`` raises for a meta row an
+      append must refuse;
+    - ``stage(rows, meta, id_col, payload_col)`` is the frame an append
+      pins: ``id`` plus what both tables derive from;
+    - ``project(staged, meta, bands_table)`` returns the ``(bands,
+      ids)`` frames to append; ``bands_table`` is the live bands table,
+      whose schema may depend on the store's age."""
+
+    kind: str  # named in every message
+    suffixes: tuple[str, str]  # (bands table, id table): the write order
+    band_keys: tuple[str, ...]  # bucket and sort columns of the bands table
+    writer: str  # the fresh-write function a refusal points at
+    check_meta: Callable
+    stage: Callable
+    project: Callable
+
+    @contextmanager
+    def fresh(self, spark: SparkSession, name: str, params: dict):
+        """Prologue and epilogue around a fresh write's table writes
+        (the ``with`` body), which start a NEW store at generation 0.
+        Before: sweep every physical generation a previous store of
+        the name left (``current_gen=-1`` matches no table). After:
+        clear its tombstones (they would delete rows of the fresh store
+        at read time and block re-appending their ids), then start a
+        new meta log with ``params``: the signature parameters, so a
+        mismatched append or query (band keys that never collide:
+        silent recall 0) fails loudly, and ``buckets``, so appends
+        reuse the write-time bucket spec."""
+        sweep_stale_generations(spark, name, self.suffixes, -1)
+        yield
+        clear_table(spark, f"{name}_tombstones")
+        start_meta_log(spark, name, params)
+
+    def require_meta(self, spark: SparkSession, name: str, instead: str):
+        """The current meta row. A store without one (pre-meta, or a
+        crashed bootstrap) has no generation pointer and is refused,
+        pointing at the fresh write ``instead`` of the asking verb."""
+        m = read_meta(spark, name)
+        if m is None:
+            raise ValueError(
+                f"{self.kind} store '{name}' has no meta table; rewrite "
+                f"it with {self.writer} {instead}"
+            )
+        return m
+
+    def append_meta(self, spark: SparkSession, name: str):
+        """The meta row an append writes under, from ONE meta read."""
+        m = self.require_meta(spark, name, "before appending shards")
+        self.check_meta(spark, name, m)
+        return m
+
+    def append(
+        self, shard: DataFrame, name: str, *, id_col: str, payload_col: str
+    ) -> None:
+        """THE batch append gate: read the meta, probe the shard's ids
+        against the id table at the meta's generation and the pending
+        tombstones (:func:`probe_id_clash`), refuse, then append.
+
+        A duplicate id would double its rows in both tables, a
+        tombstoned one would be swallowed by the read-time anti-join
+        until purge. A null id never matches the probe, so it reads as
+        "no clash" and every retry would append it again. It is refused
+        in-plan, like ``sha_band_keys``' dimension guard: the guard
+        runs as the pinned stage fills, inside the bands write's first
+        job, which fails before any file is committed. So the refusal
+        costs no job and leaves the probe's plan (and its pushed-down
+        filters) alone; it surfaces as a Spark error carrying the
+        message."""
+        spark = shard.sparkSession
+        meta = self.append_meta(spark, name)
+        clash = probe_id_clash(
+            shard,
+            spark.table(phys_table(name, self.suffixes[1], meta_gen(meta))),
+            read_tombstones(spark, name),
+            id_col=id_col,
+        )
+        if clash is not None:
+            raise ValueError(
+                f"shard id {clash!r} already exists in {self.kind} store "
+                f"'{name}' (or is tombstoned awaiting purge); appending "
+                f"would duplicate its rows in the {'/'.join(self.suffixes)} "
+                "tables and corrupt every later answer over them"
+            )
+        ids = F.col(id_col)
+        null_id = F.raise_error(F.lit(
+            f"{self.kind} store '{name}': shard column '{id_col}' holds a "
+            "null id; store rows are keyed by id, and a null id is never "
+            "matched by the clash probe, so every retry would append it "
+            "again. Drop or assign null ids before appending"
+        ))
+        guarded = shard.withColumn(
+            id_col, F.when(ids.isNull(), null_id).otherwise(ids)
+        )
+        self.append_rows(guarded, name, meta, id_col=id_col, payload_col=payload_col)
+
+    def append_rows(
+        self, rows: DataFrame, name: str, meta, *, id_col: str, payload_col: str
+    ) -> None:
+        """THE append body behind the batch gate and the stream sink:
+        append ``rows``, whose ids are proven new, under ``meta``.
+
+        Write order is BANDS FIRST, the id table last, and both callers
+        decide an id's presence on the id table. A crash between the
+        writes leaves band rows whose ids still read as new, so the
+        retry re-appends them: duplicate band rows are harmless (pairs
+        and ANN candidates are deduplicated, compaction rewrites the
+        files), while a duplicate id-table row is not — a duplicate
+        MinHash shingle row double-counts every verified pair, a
+        duplicate ANN vector row duplicates (query, neighbor) rows in
+        the exact re-rank. The flipped order would make a crashed
+        append refuse its retry with id rows whose band keys never
+        landed: silent recall loss. The post-write generation check
+        fails the append loudly when a maintenance cutover raced it.
+
+        The staged input is pinned with a LAZY local checkpoint that
+        fills during the bands write's own job (``persist()`` would
+        cost AQE a separate cache-building job) and feeds the id-table
+        write: the stage (MinHash's tokenize pass) runs once, and so
+        does the sink's lazy novelty filter (:func:`novel_rows`),
+        against the id table as it stood before this append. Appended
+        rows are the small side by contract, so the pin is bounded."""
+        gen, buckets = meta_gen(meta), int(meta["buckets"])
+        bands_tbl, ids_tbl = (phys_table(name, s, gen) for s in self.suffixes)
+        staged = self.stage(rows, meta, id_col, payload_col)
+        staged = staged.localCheckpoint(eager=False)
+        bands, ids = self.project(staged, meta, bands_tbl)
+        keys = list(self.band_keys)
+        write_bucketed(bands, bands_tbl, bucket_by=keys, buckets=buckets,
+                       sort_by=keys, mode="append")
+        write_bucketed(ids, ids_tbl, bucket_by="id", buckets=buckets,
+                       sort_by="id", mode="append")
+        check_generation_unchanged(rows.sparkSession, name, gen)
+
+    def sink(self, name: str, *, id_col: str, payload_col: str, bootstrap):
+        """THE ``foreachBatch`` sink body, growing the store by each
+        batch's novel ids. Rows with a null id or payload are dropped,
+        and one copy of a repeated id is kept (arbitrary: an id
+        re-crawled with DIFFERENT content must be resolved upstream).
+        A store with neither a meta table nor a data table is
+        bootstrapped by ``bootstrap(batch)``, the store's fresh write.
+        Data tables without meta are generation 0 (generations
+        postdate the meta table), and the append gate refuses them: a
+        bootstrap would sweep their standing rows. Otherwise the batch
+        passes the append's meta gate, and :func:`novel_rows` drops ids
+        already stored or tombstoned, lazily, inside
+        :meth:`append_rows`: the sink is idempotent under at-least-once
+        delivery."""
+        tables = [f"{name}_{s}" for s in ("meta", *self.suffixes)]
+
+        def ingest(batch_df: DataFrame, batch_id: int) -> None:
+            spark = batch_df.sparkSession
+            batch = batch_df.filter(
+                F.col(payload_col).isNotNull() & F.col(id_col).isNotNull()
+            ).dropDuplicates([id_col])
+            if not any(spark.catalog.tableExists(t) for t in tables):
+                bootstrap(batch)
+                return
+            meta = self.append_meta(spark, name)
+            novel = novel_rows(
+                batch,
+                spark.table(phys_table(name, self.suffixes[1], meta_gen(meta))),
+                read_tombstones(spark, name),
+                id_col=id_col,
+            )
+            self.append_rows(novel, name, meta, id_col=id_col, payload_col=payload_col)
+
+        return ingest
+
+    def purge(self, spark: SparkSession, name: str) -> None:
+        """Rewrite both tables with the tombstones anti-joined away
+        (:func:`rewrite_generation`), then clear the tombstones: a
+        crash between the two leaves reads correct (anti-joining
+        purged ids is a no-op). A store without meta is refused."""
+        ts = read_tombstones(spark, name)
+        if ts is None:
+            return
+        m = self.require_meta(
+            spark, name, "from its live rows instead of purging in place"
+        )
+        ts = ts.localCheckpoint(eager=True)  # survives the table drops below
+        rewrite_generation(
+            spark, name, self.suffixes, m, snapshot_rewrite(spark, anti=ts)
+        )
+        clear_table(spark, f"{name}_tombstones")
+
+    def rebucket(self, spark: SparkSession, name: str, new_buckets: int) -> None:
+        """Rewrite both tables at ``new_buckets`` and record the count
+        in the next meta row (:func:`rewrite_generation`)."""
+        m = self.require_meta(
+            spark, name,
+            "(which also records the bucket count) instead of re-bucketing in place",
+        )
+        rewrite_generation(
+            spark, name, self.suffixes, m,
+            snapshot_rewrite(spark, buckets=new_buckets),
+            changes={"buckets": int(new_buckets)},
+        )
+
+    def band_stats(
+        self, spark: SparkSession, name: str, band_cap: int | None
+    ) -> DataFrame:
+        """``band_bucket_stats`` over the live bands table, tombstones
+        respected; the signature-group telemetry needs a ``sig``
+        column (MinHash stores written since it exists)."""
+        from polars_text_spark.operators.dedup import band_bucket_stats
+
+        banded = minus_tombstones(
+            spark.table(live_table(spark, name, self.suffixes[0])),
+            read_tombstones(spark, name),
+        )
+        sig_col = "sig" if "sig" in banded.columns else None
+        return band_bucket_stats(
+            banded, list(self.band_keys), band_cap=band_cap, sig_col=sig_col
         )

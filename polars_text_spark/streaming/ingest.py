@@ -1,6 +1,6 @@
 """Continuous crawl ingest into the bucketed MinHash and ANN stores
-(Structured Streaming ``foreachBatch`` + the incremental-append
-protocols of ``operators/dedup_store.py`` / ``operators/ann_store.py``).
+(Structured Streaming ``foreachBatch`` + the id-keyed store protocol
+of ``sources/bucketing.py``, which both stores share).
 
 The production shape at 100 TB: a crawler drops document shards into
 a directory all day; the dedup store must grow with them so tonight's
@@ -17,22 +17,27 @@ therefore wrong here; instead every batch is filtered to its NOVEL
 ids (anti-join against the store) and only the remainder appends —
 redelivery becomes a no-op, not a poison pill.
 
-Each sink hands that LAZY anti-joined frame straight to the SAME
-private append body its store's batch ``append_*_shard`` uses: no
-separate novelty job runs. The append body pins its input with a lazy
-local checkpoint that fills during the bands write, so the filter
-runs once, against the store as it stood before the batch; a
+Both sinks run ONE body, ``IdKeyedStore.sink`` in
+``sources/bucketing.py``, which hands that LAZY anti-joined frame
+straight to the same append body the batch ``append_*_shard`` uses:
+no separate novelty job runs. The append body pins its input with a
+lazy local checkpoint that fills during the bands write, so the
+filter runs once, against the store as it stood before the batch; a
 redelivered batch appends zero rows and writes no files. The write
 order that makes a crash between the two table writes safe to
-redeliver is defined once, in ``operators/dedup_store.py`` and
-``operators/ann_store.py``. A store whose tables exist without a meta
-table (a crashed bootstrap, or a pre-meta store) is refused like the
-batch append refuses it, never re-bootstrapped over its standing rows.
+redeliver is defined once, on that append body. Rows with a null id
+are dropped like rows with a null payload: the anti-join never
+matches a null id, so it would append again on every delivery. A
+store whose tables exist without a meta table (a crashed bootstrap,
+or a pre-meta store) is refused like the batch append refuses it,
+never re-bootstrapped over its standing rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -49,18 +54,6 @@ __all__ = [
     "topk_serve_batch",
     "web_gate_batch",
 ]
-
-
-def _store_absent(spark: SparkSession, name: str, suffixes) -> bool:
-    """True when store ``name`` has neither a meta table nor any of
-    its data tables: the one state an id-keyed sink bootstraps. Data
-    tables without meta are generation 0 (a crashed bootstrap sweeps
-    every generation first, and generations postdate the meta table),
-    and the append gate refuses them; re-bootstrapping would sweep
-    their standing rows."""
-    return not any(
-        spark.catalog.tableExists(f"{name}_{s}") for s in ("meta", *suffixes)
-    )
 
 
 def _start(frame: DataFrame, sink, checkpoint_dir: str, available_now: bool):
@@ -89,62 +82,24 @@ def minhash_ingest_batch(
     buckets: int = 8,
 ):
     """A ``foreachBatch`` function ``(batch_df, batch_id) -> None``
-    that grows the MinHash store ``name`` by the batch's novel ids.
-
-    A batch into an absent store bootstraps it with the given
-    signature parameters; every later batch passes the batch append's
-    gate — the recorded meta (parameters can never drift mid-stream)
-    and its shingle hash family. Ids already in the store — from a
-    previous batch, a redelivered batch, or a duplicate document in
-    the crawl — are dropped, so the sink is idempotent under
-    at-least-once delivery.
-    """
+    that grows the MinHash store ``name`` by the batch's novel ids
+    (the shared sink body, ``IdKeyedStore.sink``). A batch into an
+    absent store bootstraps it with the given signature parameters;
+    every later batch passes the batch append's gate — the recorded
+    meta (parameters can never drift mid-stream) and its shingle hash
+    family."""
     from polars_text_spark.operators.dedup_store import (
-        _SUFFIXES,
-        _append_meta,
-        _append_rows,
+        MINHASH_STORE,
         write_minhash_store,
     )
-    from polars_text_spark.sources.bucketing import (
-        novel_rows,
-        phys_table,
-        read_tombstones,
+
+    return MINHASH_STORE.sink(
+        name, id_col=id_col, payload_col=text_col,
+        bootstrap=partial(
+            write_minhash_store, name=name, text_col=text_col, id_col=id_col,
+            num_perm=num_perm, bands=bands, shingle_n=shingle_n, buckets=buckets,
+        ),
     )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = (
-            batch_df.filter(F.col(text_col).isNotNull())
-            # a batch can carry the same doc twice (crawl re-fetch);
-            # keep one — arbitrary among copies, which is fine for
-            # identical re-fetches; an id re-crawled with DIFFERENT
-            # text must be resolved upstream (this sink never
-            # overwrites standing rows)
-            .dropDuplicates([id_col])
-        )
-        if _store_absent(spark, name, _SUFFIXES):
-            write_minhash_store(
-                batch,
-                name,
-                text_col=text_col,
-                id_col=id_col,
-                num_perm=num_perm,
-                bands=bands,
-                shingle_n=shingle_n,
-                buckets=buckets,
-            )
-            return
-        meta = _append_meta(spark, name)
-        novel = novel_rows(
-            batch,
-            # the meta tuple ends with the generation to append to
-            spark.table(phys_table(name, "shingles", meta[-1])),
-            read_tombstones(spark, name),
-            id_col=id_col,
-        )
-        _append_rows(novel, name, meta, text_col=text_col, id_col=id_col)
-
-    return ingest
 
 
 def stream_into_minhash_store(
@@ -191,52 +146,19 @@ def ann_ingest_batch(
     buckets: int = 8,
 ):
     """``foreachBatch`` sink growing the ANN store ``name`` by each
-    batch's novel ids — the vector twin of
-    :func:`minhash_ingest_batch`, same at-least-once contract.
-    Dimensionality is validated per batch, in-plan by the append body
-    (a wrong-dim drop would null-pad into degenerate band keys: silent
-    recall 0)."""
-    from polars_text_spark.operators.ann_store import (
-        _SUFFIXES,
-        _append_rows,
-        _store_meta,
-        write_ann_store,
-    )
-    from polars_text_spark.sources.bucketing import (
-        novel_rows,
-        phys_table,
-        read_tombstones,
-    )
+    batch's novel ids — the same sink body as
+    :func:`minhash_ingest_batch`. Dimensionality is validated per
+    batch, in-plan by the append body (a wrong-dim drop would null-pad
+    into degenerate band keys: silent recall 0)."""
+    from polars_text_spark.operators.ann_store import ANN_STORE, write_ann_store
 
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = (
-            batch_df.filter(F.col(vec_col).isNotNull())
-            .dropDuplicates([id_col])
-        )
-        if _store_absent(spark, name, _SUFFIXES):
-            write_ann_store(
-                batch,
-                name,
-                id_col=id_col,
-                vec_col=vec_col,
-                dim=dim,
-                num_planes=num_planes,
-                bands=bands,
-                buckets=buckets,
-            )
-            return
-        meta = _store_meta(spark, name)
-        novel = novel_rows(
-            batch,
-            # the meta tuple ends with the generation to append to
-            spark.table(phys_table(name, "vectors", meta[-1])),
-            read_tombstones(spark, name),
-            id_col=id_col,
-        )
-        _append_rows(novel, name, meta, id_col=id_col, vec_col=vec_col)
-
-    return ingest
+    return ANN_STORE.sink(
+        name, id_col=id_col, payload_col=vec_col,
+        bootstrap=partial(
+            write_ann_store, name=name, id_col=id_col, vec_col=vec_col,
+            dim=dim, num_planes=num_planes, bands=bands, buckets=buckets,
+        ),
+    )
 
 
 def stream_into_ann_store(

@@ -106,7 +106,7 @@ def test_append_racing_a_cutover_raises_loudly(spark, corpus, monkeypatch):
     reports already-exists when the rows were carried, and re-ingests
     them when they were lost (bands-first write order + candidate
     dedup make a partially-carried shard re-appendable too)."""
-    import polars_text_spark.operators.dedup_store as ds
+    import polars_text_spark.sources.bucketing as ds
 
     base = corpus.filter(F.col("doc_id") % 4 != 0)
     shard = corpus.filter(F.col("doc_id") % 4 == 0).limit(10)

@@ -5,6 +5,8 @@ and respect pending tombstones."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -394,3 +396,123 @@ def test_stream_refuses_store_without_meta(
     with pytest.raises(Exception, match="no meta table"):
         q.awaitTermination(600)
     assert {t: spark.table(f"{name}_{t}").count() for t in tables} == before
+
+
+def _id_keyed_store(spark, corpus, sf_dir, store, name):
+    """A small store of the even ids, with its two physical tables,
+    its sink and its batch append."""
+    from polars_text_spark.operators.ann_store import (
+        append_ann_shard,
+        write_ann_store,
+    )
+    from polars_text_spark.operators.dedup_store import append_minhash_shard
+    from polars_text_spark.streaming.ingest import (
+        ann_ingest_batch,
+        minhash_ingest_batch,
+    )
+
+    if store == "minhash":
+        rows, key = corpus.select("doc_id", "text"), "doc_id"
+        write_minhash_store(rows.filter(F.col(key) % 2 == 0), name, buckets=4)
+        sink = minhash_ingest_batch(name, buckets=4)
+        append = partial(append_minhash_shard, name=name)
+        tables = [f"{name}_bands", f"{name}_shingles"]
+    else:
+        rows = (
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            .filter(F.col("embedding").isNotNull())
+            .select("vec_id", "embedding")
+            .limit(100)
+        )
+        key = "vec_id"
+        write_ann_store(
+            rows.filter(F.col(key) % 2 == 0), name, dim=64, buckets=4
+        )
+        sink = ann_ingest_batch(name, dim=64, buckets=4)
+        append = partial(append_ann_shard, name=name)
+        tables = [f"{name}_bands", f"{name}_vectors"]
+    return rows, key, tables, sink, append
+
+
+def _landed(spark, frame, path):
+    """``frame`` written to parquet and read back, like a landed shard
+    or a file-stream micro-batch (no predicate on the id in its plan)."""
+    frame.write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _with_null_id(rows, key):
+    """``rows`` plus one copy of its first row under a null id."""
+    return rows.unionByName(
+        rows.limit(1).withColumn(
+            key, F.lit(None).cast(rows.schema[key].dataType)
+        )
+    )
+
+
+@pytest.mark.parametrize("store", ["minhash", "ann"])
+def test_sink_redelivery_drops_null_ids(spark, corpus, sf_dir, tmp_path, store):
+    """A null id never matches the novelty anti-join, so a sink that
+    kept null-id rows would append them again on every delivery. The
+    sink drops them: the first delivery stores only the non-null ids,
+    and redelivering the batch changes neither table's row count nor
+    its data-file count."""
+    name = f"{store}_sink_null_id"
+    rows, key, tables, sink, _ = _id_keyed_store(
+        spark, corpus, sf_dir, store, name
+    )
+    batch = _landed(
+        spark, _with_null_id(rows.filter(F.col(key) % 2 == 1), key),
+        str(tmp_path / "batch"),
+    )
+    sink(batch, 0)
+    grown = _table_state(spark, tables)
+    assert grown[tables[1]][0] == rows.count()
+    sink(batch, 1)  # redelivery
+    assert _table_state(spark, tables) == grown
+    assert spark.table(tables[1]).filter(F.col("id").isNull()).count() == 0
+
+
+@pytest.mark.parametrize("store", ["minhash", "ann"])
+def test_append_refuses_null_id(spark, corpus, sf_dir, tmp_path, store):
+    """The batch append gate refuses a shard carrying a null id with its
+    own message (the clash probe alone reads a null id as "no clash"),
+    and neither table changes."""
+    name = f"{store}_append_null_id"
+    rows, key, tables, _, append = _id_keyed_store(
+        spark, corpus, sf_dir, store, name
+    )
+    shard = _landed(
+        spark, _with_null_id(rows.filter(F.col(key) % 2 == 1), key),
+        str(tmp_path / "shard"),
+    )
+    before = _table_state(spark, tables)
+    with pytest.raises(Exception, match="holds a\\s+null id"):
+        append(shard)
+    assert _table_state(spark, tables) == before
+
+
+# Spark jobs per call, counted at the commit before the two stores'
+# append, sink, purge and rebucket bodies were merged into one.
+_JOB_BUDGETS = {
+    "minhash": {"sink": 9, "append": 9},
+    "ann": {"sink": 8, "append": 8},
+}
+
+
+@pytest.mark.parametrize("store", ["minhash", "ann"])
+def test_sink_and_append_job_budgets(spark, corpus, sf_dir, tmp_path, store):
+    """A novel sink micro-batch and a batch append of a landed shard
+    stay on their job budgets, for both id-keyed stores."""
+    name = f"{store}_job_budget"
+    rows, key, tables, sink, append = _id_keyed_store(
+        spark, corpus, sf_dir, store, name
+    )
+    batch = _landed(spark, rows.filter(F.col(key) % 4 == 1), str(tmp_path / "b"))
+    shard = _landed(spark, rows.filter(F.col(key) % 4 == 3), str(tmp_path / "s"))
+    budget = _JOB_BUDGETS[store]
+    jobs = _job_count(spark, lambda: sink(batch, 0), f"{name}-sink")
+    assert jobs <= budget["sink"], f"novel sink batch ran {jobs} jobs"
+    jobs = _job_count(spark, lambda: append(shard), f"{name}-append")
+    assert jobs <= budget["append"], f"append ran {jobs} jobs"
+    assert _table_state(spark, tables)[tables[1]][0] == rows.count()
