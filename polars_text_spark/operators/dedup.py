@@ -584,7 +584,7 @@ def resolve_band_cap(
     decline many self pairs is exactly one that holds more distinct
     families than the cap keeps representatives for), so the ladder
     walks up in the same regimes. MEASURED on the round-16 cross-face
-    probe (scripts/scale_probe_band_miss.py::cross_face, SCALING.md):
+    probe (SCALING.md "Round-16: cross-face auto-cap proxy VALIDATED"):
     in the hard Zipf regime the proxy resolves the same rung the
     cross face needs (realized pair miss 0.0 at the resolved cap),
     and the LEFT-verdict recall unit is lost at no rung at all — the
@@ -1091,8 +1091,9 @@ def _band_stats_agg(
       regime (escape mass tiny), ~0 on isolated hash hot spots
       (everything co-locates in unsaturated buckets elsewhere), and
       exactly 0 on the signature-identical easy regime (the bound is
-      0). On the round-15 Zipf probe
-      (scripts/scale_probe_band_miss.py) it lands within 2x of the
+      0). On the round-15 Zipf probe (SCALING.md
+      "est_family_miss_rate: a band-cap miss number an operator can
+      size from") it lands within 2x of the
       realized miss rate at every cap. A heuristic ESTIMATOR, not a
       bound (the union bound double-counts pairs sharing several
       saturated buckets; the rescue term double-counts pairs sharing
@@ -2251,12 +2252,10 @@ def dup_degree_histogram(
     pairs when the histogram must reflect true clique degrees
     (README "Behavior changes").
 
-    Scale: union the two id columns (map-only), one groupBy for
-    degrees (|docs-in-pairs| rows), one for the histogram (|distinct
-    degrees| rows).
+    Scale: one map-only pass emits both ends of every pair (the pair
+    frame is planned once), one groupBy for degrees (|docs-in-pairs|
+    rows), one for the histogram (|distinct degrees| rows).
     """
-    ends = pairs.select(F.col(id_a).alias("id")).unionAll(
-        pairs.select(F.col(id_b).alias("id"))
-    )
+    ends = pairs.select(F.explode(F.array(id_a, id_b)).alias("id"))
     degrees = ends.groupBy("id").agg(F.count(F.lit(1)).alias("degree"))
     return degrees.groupBy("degree").agg(F.count(F.lit(1)).alias("n_docs"))

@@ -1167,8 +1167,8 @@ def lsh_band_keys(
     return F.array(*keys)
 
 
-# Measured crossover for the re-rank route (scripts/scale_probe_rerank
-# .py, SCALING.md round-12, 100k x dim-64 corpus, 64 queries): at
+# Measured crossover for the re-rank route (SCALING.md round-12 re-rank
+# A/B: expression dot vs Arrow route; 100k x dim-64 corpus, 64 queries): at
 # ~600k estimated candidate pairs the two routes are at parity
 # (IVF n_lists=32: 2.12 s expr / 1.90 s arrow); at >= ~4.8M the Arrow
 # route wins outright (IVF n_lists=4: 17.9 s -> 2.1 s = 8.5x; 1-bit

@@ -6641,22 +6641,17 @@ def q_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dup_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the j>=0.9 MinHash near-dup graph — the
     hub-vs-mirror shape audit run before choosing a dedup strategy.
-    The pair frame is persisted: the histogram unions both id columns,
-    and without the pin the WHOLE banded pipeline (signatures, guard
-    window, verification) runs once per union arm."""
+    The histogram reads both id columns in one pass, so the banded
+    pipeline runs once without a persisted pair frame."""
     from polars_text_spark.operators.dedup import (
         dup_degree_histogram,
         minhash_lsh_pairs,
     )
-    from polars_text_spark.persist import track_persist
 
     docs = _docs(spark, sf_dir).filter(F.col("text").isNotNull())
-    pairs = track_persist(
-        minhash_lsh_pairs(
-            docs, "text", "doc_id", jaccard_threshold=0.9
-        ).persist()
+    return dup_degree_histogram(
+        minhash_lsh_pairs(docs, "text", "doc_id", jaccard_threshold=0.9)
     )
-    return dup_degree_histogram(pairs)
 
 
 # ---------------------------------------------------------------------------

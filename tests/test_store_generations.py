@@ -106,14 +106,13 @@ def test_append_racing_a_cutover_raises_loudly(spark, corpus, monkeypatch):
     reports already-exists when the rows were carried, and re-ingests
     them when they were lost (bands-first write order + candidate
     dedup make a partially-carried shard re-appendable too)."""
-    import polars_text_spark.sources.bucketing as ds
-
     base = corpus.filter(F.col("doc_id") % 4 != 0)
     shard = corpus.filter(F.col("doc_id") % 4 == 0).limit(10)
     write_minhash_store(base, "mh_race2", buckets=4)
 
-    # patch the APPEND's binding (dedup_store imports write_bucketed
-    # by name); the rebucket inside uses bucketing's own, unpatched
+    # patch write_bucketed where the shared append body calls it
+    # (sources.bucketing); the rebucket's writes go through it too, but
+    # the wrapper acts on the append's mode="append" writes only
     real_write = bucketing.write_bucketed
     state = {"appends": 0}
 
@@ -124,10 +123,10 @@ def test_append_racing_a_cutover_raises_loudly(spark, corpus, monkeypatch):
             if state["appends"] == 2:  # after the append's LAST write
                 rebucket_minhash_store(spark, "mh_race2", 8)
 
-    monkeypatch.setattr(ds, "write_bucketed", racing_write)
+    monkeypatch.setattr(bucketing, "write_bucketed", racing_write)
     with pytest.raises(RuntimeError, match="raced this append"):
         append_minhash_shard(shard, "mh_race2")
-    monkeypatch.setattr(ds, "write_bucketed", real_write)
+    monkeypatch.setattr(bucketing, "write_bucketed", real_write)
     assert state["appends"] == 2
 
     # the cutover won; its snapshot ran AFTER both append writes, so
