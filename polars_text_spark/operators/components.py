@@ -38,16 +38,20 @@ Scale design (the part that must survive 100 TB):
   ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()`` for
   executor-loss resilience; localCheckpoint is the single-JVM
   variant.)
-- Convergence is detected by the per-round label SUM (exact
-  decimal(38,0)): labels move monotonically down, so the sum is
-  constant exactly at the fixpoint — one aggregate job per round that
-  doubles as the checkpoint materialization, instead of the former
-  separate changed-count job. The sum probe is gated on the vertex id
-  being an integral type or a scale-0 decimal (round 17, ADVICE r16):
-  string ids would cast to null (ANSI-off) or raise (ANSI-on),
-  numeric strings order lexicographically, and fractional decimals
-  round in the sum, so those ids use the exact changed-count probe
-  instead.
+- Convergence is detected by one exact changed-count probe. Each
+  vertex's self-message carries its current label in an extra column
+  (null on neighbour messages), so the round's ``groupBy`` min keeps
+  the old label next to the new one with no extra join. The loop
+  stops after a round that changed no label: both steps are
+  deterministic functions of the labels, so an unchanged round is the
+  fixpoint. Comparing each label with its previous value is exact for
+  any orderable id type (integral, 2^62-magnitude, string, fractional
+  decimal, float), where a label sum would round, overflow or not
+  exist. The probe is ONE aggregate per round, which is also the
+  action that materializes the round's lazy checkpoint. The same pass
+  counts null vertex ids and refuses them with a ``ValueError`` in
+  round 1: a null id has no component and would come back as a
+  silent null row.
 
 The O(log² n)-round alternating large-star/small-star algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond") is
@@ -108,83 +112,32 @@ def connected_components(
     )
     labels = verts.withColumn("component", F.col("vertex"))
     # lazy checkpoints: materialization folds into the first action
-    # that consumes them (the label-sum probe / round-1 join) instead
-    # of paying a standalone job each (round-16 job diet)
+    # that consumes them (round 1's probe) instead of paying a
+    # standalone job each (round-16 job diet)
     labels = labels.localCheckpoint(eager=False)
     sym = sym.localCheckpoint(eager=False)
+    no_label = F.lit(None).cast(labels.schema["vertex"].dataType)
 
-    # The cheap sum probe is only SOUND for integral vertex ids
-    # (ADVICE r16). String ids cast to null under ANSI-off (the
-    # all-null sums compare equal and the loop exits half-merged) or
-    # raise under ANSI-on; numeric STRINGS take a lexicographic min,
-    # so their sum is not monotone; a fractional decimal rounds in the
-    # decimal(38,0) sum, so a decrease below the rounding step
-    # (1.4 -> 1.2) ends the loop half-merged. Those ids fall back to
-    # the exact changed-count probe (one extra self-join per round —
-    # the pre-round-16 shape).
-    from pyspark.sql import types as T
-
-    _vt = labels.schema["vertex"].dataType
-    _sum_probe = isinstance(
-        _vt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ) or (isinstance(_vt, T.DecimalType) and _vt.scale == 0)
-
-    def _label_sum(frame: DataFrame):
-        # Convergence probe: labels only ever move DOWN (both steps
-        # take a min), and the vertex set is fixed, so the label sum
-        # strictly decreases while anything changes and is constant
-        # exactly at convergence. Decimal(38,0) keeps the sum exact
-        # for any realistic graph (10^12 rows of 2^63-bound ids
-        # < 10^31). ONE aggregate job per round — it doubles as the
-        # action that materializes the round's lazy checkpoint,
-        # replacing the former separate count + eager-checkpoint jobs.
-        row = frame.agg(
-            F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()
-        s, n = row[0]["s"], row[0]["n"]
-        if s is None and n > 0:
-            # belt-and-braces: a null sum over a nonempty integral
-            # label frame means null ids leaked in — never compare
-            # None == None as "converged"
-            raise ValueError(
-                "connected_components: label sum is null over a "
-                "nonempty frame (null vertex ids in the pair input?)"
-            )
-        return s
-
-    def _changed_count(new: DataFrame, old: DataFrame) -> int:
-        # Exact fallback probe for non-numeric ids: count vertices
-        # whose label moved this round (also the action that
-        # materializes the round's lazy checkpoint).
-        return (
-            new.join(
-                old.select(
-                    "vertex", F.col("component").alias("__prev")
-                ),
-                "vertex",
-            )
-            .filter(F.col("component") != F.col("__prev"))
-            .count()
-        )
-
-    if _sum_probe:
-        prev_sum = _label_sum(labels)
-    else:
-        labels.count()  # materialize the initial lazy checkpoint
     for _ in range(max_iterations):
         # min label among self + neighbors: ONE equi-join of the edge
         # list against the labels (the neighbor messages) unioned with
-        # the labels themselves (the self messages), then one groupBy —
-        # the former labels-side left join carried the same information
-        # and cost an extra shuffle per round.
+        # the labels themselves (the self messages), then one groupBy.
+        # Only self messages fill __old, so its min is the vertex's
+        # label before this round.
         msgs = sym.join(labels, sym["v"] == labels["vertex"]).select(
-            F.col("u").alias("vertex"), "component"
+            F.col("u").alias("vertex"), "component", no_label.alias("__old")
         )
         merged = (
-            msgs.union(labels.select("vertex", "component"))
+            msgs.union(
+                labels.select(
+                    "vertex", "component", F.col("component").alias("__old")
+                )
+            )
             .groupBy("vertex")
-            .agg(F.min("component").alias("__m"))
+            .agg(
+                F.min("component").alias("__m"),
+                F.min("__old").alias("__old"),
+            )
         )
         # Path halving: l(v) <- l(l(v)). Every label is a member of
         # the same component (invariant of both steps), so composing
@@ -197,16 +150,18 @@ def connected_components(
         ).select(
             "vertex",
             F.least("__m", F.coalesce("__rc", "__m")).alias("component"),
-        )
-        new_labels = updated.localCheckpoint(eager=False)
-        if _sum_probe:
-            cur_sum = _label_sum(new_labels)
-            converged = cur_sum == prev_sum
-            prev_sum = cur_sum
-        else:
-            converged = _changed_count(new_labels, labels) == 0
-        labels = new_labels
-        if converged:
+            "__old",
+        ).localCheckpoint(eager=False)
+        changed, null_ids = updated.agg(
+            F.count_if(F.col("component") != F.col("__old")),
+            F.count_if(F.col("vertex").isNull()),
+        ).first()
+        if null_ids:
+            raise ValueError(
+                "connected_components: null vertex ids in the pair input"
+            )
+        labels = updated.select("vertex", "component")
+        if not changed:
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} "

@@ -3,6 +3,8 @@ topologies, convergence behavior, and the corpus keep-list contract."""
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,6 +12,7 @@ from polars_text_spark.operators.components import (
     connected_components,
     duplicate_clusters,
 )
+from tests.test_streaming_ingest import _job_count
 
 
 def _pairs(spark, rows):
@@ -105,10 +108,10 @@ def test_empty_pairs(spark):
 
 
 def test_huge_ids_sum_convergence_exact(spark):
-    """Round-16 convergence probe regression guard: the per-round
-    label sum is accumulated as decimal(38,0), so 2^62-magnitude
-    vertex ids (sha-derived id spaces) cannot overflow a long sum
-    into a false 'converged' (or never-converged) verdict."""
+    """2^62-magnitude vertex ids (sha-derived id spaces) converge
+    exactly: the changed-count probe compares each label with its
+    previous value, so no sum can overflow into a false 'converged'
+    (or never-converged) verdict."""
     big = 1 << 62
     pairs = _pairs(
         spark,
@@ -126,11 +129,9 @@ def test_huge_ids_sum_convergence_exact(spark):
 
 
 def test_string_ids_changed_count_probe(spark):
-    """Round-17 (ADVICE r16): string vertex ids must NOT use the
-    decimal label-sum probe (the cast nulls out under ANSI-off and the
-    all-null sums would compare equal after ONE round, returning
-    half-merged components). A 4-chain needs >1 hash-min round, so a
-    premature exit would mislabel 'd'."""
+    """String vertex ids converge under the changed-count probe. A
+    4-chain needs >1 hash-min round, so a premature exit (a probe that
+    read string labels as null, or as equal) would mislabel 'd'."""
     pairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d")], "id_a string, id_b string"
     )
@@ -140,8 +141,8 @@ def test_string_ids_changed_count_probe(spark):
 
 def test_numeric_string_ids_lexicographic_min(spark):
     """Numeric STRINGS order lexicographically ('10' < '9'); the
-    changed-count probe must converge to the lexicographic min — the
-    sum probe would be unsound here (non-monotone under string min)."""
+    changed-count probe must converge to the lexicographic min, not
+    the numeric one."""
     pairs = spark.createDataFrame(
         [("9", "10"), ("10", "111")], "id_a string, id_b string"
     )
@@ -149,17 +150,49 @@ def test_numeric_string_ids_lexicographic_min(spark):
     assert got == {"9": "10", "10": "10", "111": "10"}
 
 
-def test_fractional_decimal_ids_changed_count_probe(spark):
-    """Fractional decimal ids must NOT use the decimal(38,0) label-sum
-    probe: every id of the chain 1.4-1.3-1.2-1.1-1.0 rounds to 1, so
-    the first round's label decreases (1.4 -> 1.2 after path halving)
-    leave the rounded sum unchanged and the loop would exit
-    half-merged."""
-    from decimal import Decimal
-
-    ids = [Decimal(f"1.{d}") for d in range(5)]
+@pytest.mark.parametrize(
+    "id_type, as_id",
+    [("decimal(3,1)", Decimal), ("double", float)],
+    ids=["decimal", "double"],
+)
+def test_fractional_decimal_ids_changed_count_probe(spark, id_type, as_id):
+    """Fractional ids converge exactly: every id of the chain
+    1.4-1.3-1.2-1.1-1.0 rounds to 1, so a probe that summed rounded
+    labels would miss the first round's decreases (1.4 -> 1.2 after
+    path halving) and exit half-merged. The changed-count probe
+    compares each label with its previous value instead."""
+    ids = [as_id(f"1.{d}") for d in range(5)]
     pairs = spark.createDataFrame(
-        list(zip(ids[1:], ids[:-1])), "id_a decimal(3,1), id_b decimal(3,1)"
+        list(zip(ids[1:], ids[:-1])), f"id_a {id_type}, id_b {id_type}"
     )
     got = _comp_map(connected_components(pairs))
-    assert got == {i: Decimal("1.0") for i in ids}
+    assert got == {i: as_id("1.0") for i in ids}
+
+
+def test_null_vertex_id_refused(spark):
+    """A null id among other edges is refused in round 1, not returned
+    as a silent (vertex=NULL, component=NULL) row."""
+    pairs = _pairs(spark, [(1, 2), (2, None), (3, 4)])
+    with pytest.raises(ValueError, match="null vertex ids in the pair input"):
+        connected_components(pairs).collect()
+
+
+# Spark jobs of one call on the test_basic_components graph, collect()
+# included. The graph converges in two rounds; each round's one action
+# is its probe aggregate, which also materializes its checkpoint.
+_BASIC_GRAPH_JOB_BUDGET = 16
+
+
+def test_basic_components_job_budget(spark):
+    """connected_components stays on its job budget: the convergence
+    probe is read off each round's checkpointing aggregate, with no
+    pre-loop probe job and no per-round self-join."""
+    pairs = _pairs(spark, [(1, 2), (2, 3), (5, 6), (9, 9)])
+    got = {}
+    jobs = _job_count(
+        spark,
+        lambda: got.update(_comp_map(connected_components(pairs))),
+        "components-job-budget",
+    )
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 9: 9}
+    assert jobs <= _BASIC_GRAPH_JOB_BUDGET, f"ran {jobs} jobs"
