@@ -298,9 +298,7 @@ def embedding_contamination(
                 else:
                     import numpy as np
 
-                    acc, valid = _fold_dot_batch(
-                        vals, evecs, exact_fold=True, normalize=True
-                    )
+                    acc, valid = _fold_dot_batch(vals, evecs, normalize=True)
                     best = np.where(valid, acc, -np.inf).max(axis=1)
                     any_valid = valid.any(axis=1)
                     mx = [

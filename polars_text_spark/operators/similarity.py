@@ -197,21 +197,18 @@ def _quantize_vec_py(u, levels: int):
     return 0.0, [0] * len(u)
 
 
-def _fold_dot_batch(vals, qlist, *, exact_fold: bool = True, normalize: bool = False):
+def _fold_dot_batch(vals, qlist, *, normalize: bool = False):
     """Dot products of a batch of vectors against a fixed query list,
     vectorized across rows: returns ``(acc, valid)`` — an (n x Q)
     float64 matrix and its validity mask.
 
-    ``exact_fold=True`` replays the engine's LEFT FOLD bit-for-bit:
-    the dim loop runs ``acc = acc + V[:, i] * q[i]`` — per element the
-    exact same IEEE multiply-then-add sequence as
+    The dots replay the engine's LEFT FOLD bit-for-bit: the dim loop
+    runs ``acc = acc + V[:, i] * q[i]`` — per element the exact same
+    IEEE multiply-then-add sequence as
     ``aggregate(zip_with(a, b, *), 0.0, +)`` and as the DuckDB
     oracles' ``list_reduce`` replay, just vectorized across the PAIR
     axis instead of the dim axis — so downstream hashes cannot move by
-    an ulp. ``exact_fold=False`` uses one BLAS matmul per dim group —
-    reordered accumulation, only for INTEGER-VALUED inputs where every
-    intermediate is exact (int8 products <= 16129, sums << 2^53), i.e.
-    associativity makes any order bit-identical.
+    an ulp.
 
     Entries are invalid (null) where either side is null or the dims
     differ — matching zip_with's null padding, whose null product
@@ -249,12 +246,9 @@ def _fold_dot_batch(vals, qlist, *, exact_fold: bool = True, normalize: bool = F
         if normalize and dj > 0:
             V = _norm_rows_exact(V)
         QT = np.stack([np.asarray(qlist[j], dtype=np.float64) for j in cols])
-        if exact_fold:
-            a = np.zeros((len(ridx), len(cols)), dtype=np.float64)
-            for i in range(dj):
-                a = a + V[:, i : i + 1] * QT[:, i][None, :]
-        else:
-            a = V @ QT.T
+        a = np.zeros((len(ridx), len(cols)), dtype=np.float64)
+        for i in range(dj):
+            a = a + V[:, i : i + 1] * QT[:, i][None, :]
         acc[np.ix_(ridx, cols)] = a
         valid[np.ix_(ridx, cols)] = True
     valid &= np.isfinite(acc)
@@ -364,7 +358,6 @@ def _dots_map_fn(qvecs_bc, n_queries: int, out_dots_col: str):
                 acc, valid = _fold_dot_batch(
                     part["__vec"].to_numpy(),
                     qvecs,
-                    exact_fold=True,
                     normalize=True,
                 )
                 yield pd.DataFrame(

@@ -76,6 +76,13 @@ _SQL_TOKENS = (
     " AND upper(x) NOT IN ('CLS','SEP','PAD','UNK','MASK'))"
 )
 
+# THE portable whitespace tokenizer in SQL (functions/analysis.py::
+# ws_token_array twin) — defined early, many later oracles inline it.
+_SQL_WS_TOKS = (
+    "list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),"
+    " x -> x <> '')"
+)
+
 
 def query(name: str, oracle: str | None = None):
     def deco(fn):
@@ -251,15 +258,14 @@ def q_bloom_store_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared 2-round integer-perceptron training CTEs (classifier_train +
 # classifier_pr_sweep replay the identical training; only the final
 # SELECT differs) — the _DSIR_CTES sharing pattern.
-_CLF_CTES = """
+_CLF_CTES = f"""
     WITH lab AS (
       SELECT doc_id, text,
              CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y
       FROM documents WHERE text IS NOT NULL),
     tl AS (
       SELECT doc_id, y,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS tk
+             {_SQL_WS_TOKS} AS tk
       FROM lab),
     tn AS (SELECT doc_id, y, len(tk) AS n, unnest(tk) AS t
            FROM tl WHERE len(tk) > 0),
@@ -862,11 +868,65 @@ _SQL_SHINGLES = (
     "ELSE list_distinct([array_to_string(toks[i:i+2], ' ')"
     " for i in generate_series(1, len(toks)-2)]) END"
 )
-_SQL_SH_CTE = f"""
-  SELECT doc_id, source, lang, {_SQL_SHINGLES} AS s
-  FROM (SELECT doc_id, source, lang,
-               regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-        FROM documents WHERE text IS NOT NULL)
+
+
+def _sql_shingle_sets(pred: str = "TRUE") -> str:
+    """The shingle-set CTE body over the documents matching ``pred``:
+    ``doc_id, source, lang``, the distinct shingle list ``s`` and its
+    size ``n`` (computed once, read by the length bound below)."""
+    return f"""
+  SELECT *, len(s) AS n FROM (
+    SELECT doc_id, source, lang, {_SQL_SHINGLES} AS s
+    FROM (SELECT doc_id, source, lang,
+                 regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
+          FROM documents WHERE text IS NOT NULL AND ({pred})))
+"""
+
+
+_SQL_SH_CTE = _sql_shingle_sets()
+
+
+def _sql_jaccard_pairs(
+    t: float,
+    *,
+    block: bool = False,
+    on: str = "a.doc_id < b.doc_id",
+    jaccard: str | None = "round",
+    cols: str = "a.doc_id AS id_a, b.doc_id AS id_b",
+    left: str = "sh",
+    right: str = "sh",
+) -> str:
+    """SELECT of the exact shingle-Jaccard >= ``t`` pairs between two
+    shingle-set CTEs (:func:`_sql_shingle_sets`) — the oracle of every
+    Jaccard pair operator in operators/dedup.py.
+
+    ``block`` adds the ``(source, lang)`` equi-join; ``on`` is the
+    doc_id predicate (``TRUE`` for a cross join of disjoint sides).
+    ``jaccard`` picks the score column after ``cols``: ``"round"`` is
+    ``round(J, 6) AS jaccard``, ``"raw"`` is the unrounded ``J AS j``,
+    ``None`` none.
+
+    The size bound is PPJoin's length filter (Xiao et al., WWW'08):
+    J = |A∩B| / |A∪B| <= min(|A|, |B|) / max(|A|, |B|), so J >= t
+    implies min >= t * max, i.e. both ``b.n >= t * a.n`` and
+    ``a.n >= t * b.n`` (``n`` is the size of the list_distinct set
+    ``s``). The bound is exact decimal arithmetic and J a double ratio
+    of small integers, which cannot round across t, so the bound
+    drops only pairs the J filter drops — it prunes before the costly
+    list_intersect, which is what makes the unblocked joins feasible
+    at sf0.1. Containment has no such bound (containment_dups)."""
+    inter = "len(list_intersect(a.s, b.s))"
+    j = f"{inter} * 1.0 / (a.n + b.n - {inter})"
+    score = {
+        "round": f", round({j}, 6) AS jaccard", "raw": f", {j} AS j", None: "",
+    }[jaccard]
+    pred = f"a.source = b.source AND a.lang = b.lang AND {on}" if block else on
+    return f"""
+    SELECT {cols}{score}
+    FROM {left} a JOIN {right} b
+      ON {pred}
+     AND b.n >= {t} * a.n AND a.n >= {t} * b.n
+    WHERE {j} >= {t}
 """
 
 
@@ -916,12 +976,7 @@ def q_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "near_dedup_minhash",
     f"""
     WITH sh AS ({_SQL_SH_CTE})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.s, b.s)) * 1.0
-                 / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s)) * 1.0
-          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
+    {_sql_jaccard_pairs(0.9)}
     """,
 )
 def q_near_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -956,12 +1011,7 @@ _HOTBAND_GROUPS = [
     "near_dedup_hotband",
     f"""
     WITH sh AS ({_SQL_SH_CTE})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.s, b.s)) * 1.0
-                 / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s)) * 1.0
-          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
+    {_sql_jaccard_pairs(0.9)}
     UNION ALL  -- saturated family (300 > cap 64): hub star, hub = min id
     SELECT 1000000000 AS id_a, 1000000000 + i AS id_b, 1.0 AS jaccard
     FROM generate_series(1, 299) t(i)
@@ -1203,13 +1253,7 @@ def q_cross_dedup_hotband(spark: SparkSession, sf_dir: str) -> DataFrame:
     "near_dedup_blocked_jaccard",
     f"""
     WITH sh AS ({_SQL_SH_CTE})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.s, b.s)) * 1.0
-                 / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-    FROM sh a JOIN sh b
-      ON a.source = b.source AND a.lang = b.lang AND a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s)) * 1.0
-          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.01
+    {_sql_jaccard_pairs(0.01, block=True)}
     """,
 )
 def q_near_dedup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1236,14 +1280,7 @@ def q_near_dedup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_sweep",
     f"""
     WITH sh AS ({_SQL_SH_CTE}),
-    p AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             len(list_intersect(a.s, b.s)) * 1.0
-               / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j
-      FROM sh a JOIN sh b
-        ON a.source = b.source AND a.lang = b.lang AND a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) * 1.0
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.01),
+    p AS ({_sql_jaccard_pairs(0.01, block=True, jaccard="raw")}),
     t AS (SELECT CAST(unnest([0.01, 0.02, 0.03, 0.05, 0.5, 0.9]) AS DOUBLE)
             AS threshold),
     f AS (SELECT t.threshold, p.id_a, p.id_b
@@ -1285,12 +1322,7 @@ def q_dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "near_dedup_setjoin",
     f"""
     WITH sh AS ({_SQL_SH_CTE})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.s, b.s)) * 1.0
-                 / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s)) * 1.0
-          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
+    {_sql_jaccard_pairs(0.9)}
     """,
 )
 def q_near_dedup_setjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1311,12 +1343,7 @@ def q_near_dedup_setjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cross_corpus_dedup",
     f"""
     WITH sh AS ({_SQL_SH_CTE})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.s, b.s)) * 1.0
-                 / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6) AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
-    WHERE len(list_intersect(a.s, b.s)) * 1.0
-          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
+    {_sql_jaccard_pairs(0.9, on="a.doc_id % 2 = 1 AND b.doc_id % 2 = 0")}
     """,
 )
 def q_cross_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1340,18 +1367,14 @@ def q_cross_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_clusters",
-    f"""
+# Duplicate families of the blocked j >= 0.01 pair graph, the oracle of
+# operators/components.py::duplicate_clusters: the recursive closure
+# labels every doc_id on a pair with ``component`` = its family's min
+# id, and ``sized`` adds the family size. Callers continue the WITH.
+_SQL_DUP_FAMILIES = f"""
     WITH RECURSIVE
     sh AS ({_SQL_SH_CTE}),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b
-        ON a.source = b.source AND a.lang = b.lang AND a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) * 1.0
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.01
-    ),
+    pairs AS ({_sql_jaccard_pairs(0.01, block=True, jaccard=None)}),
     edges AS (SELECT id_a AS u, id_b AS v FROM pairs
               UNION SELECT id_b, id_a FROM pairs),
     verts AS (SELECT DISTINCT u AS v FROM edges),
@@ -1366,7 +1389,13 @@ def q_cross_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM comp c
       JOIN (SELECT component, count(*) AS n FROM comp GROUP BY component) s
         USING (component)
-    )
+    )"""
+
+
+@query(
+    "dedup_clusters",
+    f"""
+    {_SQL_DUP_FAMILIES}
     SELECT d.doc_id,
            coalesce(z.component, d.doc_id)          AS component,
            CAST(coalesce(z.cluster_size, 1) AS BIGINT) AS cluster_size,
@@ -2079,12 +2108,40 @@ QUERIES["topic_modeling"] = q_topic_modeling
 # recipe as operators.dedup.sha_token_hash, inlined for SQL fragments.
 _SQL_SHA60 = "('0x' || substr(sha256({expr}), 1, 15))::BIGINT"
 
-# THE portable whitespace tokenizer in SQL (functions/analysis.py::
-# ws_token_array twin) — defined early, many later oracles inline it.
-_SQL_WS_TOKS = (
-    "list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),"
-    " x -> x <> '')"
-)
+
+def _sql_vecs(pred: str = "TRUE") -> str:
+    """CTE ``e``: the embeddings matching ``pred`` as DOUBLE lists ``v``."""
+    return f"""e AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+      FROM embeddings WHERE embedding IS NOT NULL AND ({pred}))"""
+
+
+# The exact re-rank of the vector oracles — the DuckDB twin of
+# operators/similarity.py::rank_topk over fold-exact cosines. ``unit``
+# L2-normalizes ``e`` (a zero vector stays as-is); ``scored`` is the
+# left-fold dot of the unit vectors of every ``cand(query_id,
+# neighbor_id)`` pair; _SQL_TOP10 keeps each query's 10 best, ties to
+# the smaller neighbor_id.
+_SQL_UNIT_CTE = """unit AS (
+      SELECT vec_id,
+        CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm) ELSE v END AS u
+      FROM (SELECT vec_id, v,
+              sqrt(list_reduce(list_transform(v, x -> x * x),
+                   (a, b) -> a + b)) AS nrm
+            FROM e))"""
+_SQL_SCORED_CTE = """scored AS (
+      SELECT c.query_id, c.neighbor_id,
+             list_reduce(list_transform(generate_series(1, len(uq.u)),
+                  i -> uq.u[i] * un.u[i]), (a, b) -> a + b) AS cos
+      FROM cand c
+      JOIN unit uq ON uq.vec_id = c.query_id
+      JOIN unit un ON un.vec_id = c.neighbor_id)"""
+_SQL_TOP10 = """SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
+           CAST(rn AS INT) AS rank
+    FROM (SELECT *, row_number() OVER (
+            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
+          FROM scored)
+    WHERE rn <= 10"""
 
 
 @query(
@@ -2316,9 +2373,7 @@ def q_topic_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "topic_projector",
     f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
+    WITH {_sql_vecs()},
     fit AS (
       SELECT vec_id, v,
              {_SQL_SHA60.format(expr="CAST(vec_id AS VARCHAR)")} % 6 - 1
@@ -2443,9 +2498,7 @@ def _topic_oos_oracle_sql() -> str:
         for j in range(5)
     )
     return f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
+    WITH {_sql_vecs()},
     fit AS (
       SELECT vec_id, v,
              {_SQL_SHA60.format(expr="CAST(vec_id AS VARCHAR)")} % 6 - 1
@@ -2837,12 +2890,10 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "unigram_surprisal",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             unnest(list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               t -> t <> '')) AS token
+             unnest({_SQL_WS_TOKS}) AS token
       FROM documents WHERE text IS NOT NULL),
     freq AS (SELECT token, count(*) AS cnt FROM toks GROUP BY token),
     tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM freq)
@@ -2873,12 +2924,10 @@ def q_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "surprisal_buckets",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             unnest(list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               t -> t <> '')) AS token
+             unnest({_SQL_WS_TOKS}) AS token
       FROM documents WHERE text IS NOT NULL),
     freq AS (SELECT token, count(*) AS cnt FROM toks GROUP BY token),
     tot AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM freq),
@@ -2933,11 +2982,9 @@ def q_surprisal_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bigram_surprisal",
-    """
+    f"""
     WITH t AS (
-      SELECT doc_id, list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               x -> x <> '') AS tk
+      SELECT doc_id, {_SQL_WS_TOKS} AS tk
       FROM documents WHERE text IS NOT NULL),
     bg AS (
       SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
@@ -2975,11 +3022,9 @@ def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "decontaminate_ngrams",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               x -> x <> '') AS t
+      SELECT doc_id, {_SQL_WS_TOKS} AS t
       FROM documents WHERE text IS NOT NULL),
     sh AS (
       SELECT doc_id,
@@ -3012,11 +3057,9 @@ def q_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bloom_decontam",
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               x -> x <> '') AS t
+      SELECT doc_id, {_SQL_WS_TOKS} AS t
       FROM documents WHERE text IS NOT NULL),
     sh AS (
       SELECT doc_id,
@@ -3097,12 +3140,10 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pack_sequences",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             len(list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               t -> t <> '')) AS n_tokens
+             len({_SQL_WS_TOKS}) AS n_tokens
       FROM documents WHERE text IS NOT NULL),
     w AS (
       SELECT doc_id, lang, n_tokens,
@@ -3144,12 +3185,10 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sequence_manifest",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, lang,
-             len(list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               t -> t <> '')) AS tok
+             len({_SQL_WS_TOKS}) AS tok
       FROM documents WHERE text IS NOT NULL),
     w AS (
       SELECT doc_id, lang, tok,
@@ -3319,12 +3358,10 @@ def q_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vocab_oov",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id,
-             unnest(list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               t -> t <> '')) AS token
+             unnest({_SQL_WS_TOKS}) AS token
       FROM documents WHERE text IS NOT NULL),
     freq AS (SELECT token, count(*) AS cnt FROM toks GROUP BY token),
     vocab AS (SELECT token FROM freq ORDER BY cnt DESC, token ASC LIMIT 10)
@@ -3359,12 +3396,10 @@ def q_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_divergence",
-    """
+    f"""
     WITH toks AS (
       SELECT source,
-             unnest(list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               t -> t <> '')) AS token
+             unnest({_SQL_WS_TOKS}) AS token
       FROM documents WHERE text IS NOT NULL),
     gt AS (SELECT source, token, count(*) AS cnt_gt
            FROM toks GROUP BY source, token),
@@ -3398,12 +3433,10 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "zipf_by_lang",
-    """
+    f"""
     WITH toks AS (
       SELECT lang,
-             unnest(list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               t -> t <> '')) AS token
+             unnest({_SQL_WS_TOKS}) AS token
       FROM documents WHERE text IS NOT NULL),
     freq AS (SELECT lang, token, count(*) AS cnt
              FROM toks GROUP BY lang, token),
@@ -5052,11 +5085,9 @@ def q_paragraph_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "winnow_overlap",
-    """
+    f"""
     WITH t AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)),
-                                                       '\\s+'),
-                                 x -> x <> '') AS tk
+      SELECT doc_id, {_SQL_WS_TOKS} AS tk
       FROM documents WHERE text IS NOT NULL),
     g AS (
       SELECT doc_id,
@@ -5328,30 +5359,7 @@ def q_events_purchase_windows_left(spark: SparkSession, sf_dir: str) -> DataFram
 @query(
     "dedup_keep_best",
     f"""
-    WITH RECURSIVE
-    sh AS ({_SQL_SH_CTE}),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b
-        ON a.source = b.source AND a.lang = b.lang AND a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) * 1.0
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.01
-    ),
-    edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT u AS v FROM edges),
-    reach(v, r) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.v
-    ),
-    comp AS (SELECT v AS doc_id, min(r) AS component FROM reach GROUP BY v),
-    sized AS (
-      SELECT c.doc_id, c.component, s.n AS cluster_size
-      FROM comp c
-      JOIN (SELECT component, count(*) AS n FROM comp GROUP BY component) s
-        USING (component)
-    ),
+    {_SQL_DUP_FAMILIES},
     labeled AS (
       SELECT d.doc_id, d.n_chars,
              coalesce(z.component, d.doc_id)             AS component,
@@ -5388,10 +5396,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "component", "cluster_size", "is_canonical")
 
 
-_SQL_KMEANS_CTE = """
-    e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
+_SQL_KMEANS_CTE = f"""
+    {_sql_vecs()},
     c0 AS (
       SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
       FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
@@ -5447,14 +5453,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantic_dedup_pairs",
     f"""
     WITH {_SQL_KMEANS_CTE},
-    unit AS (
-      SELECT vec_id,
-        CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm) ELSE v END
-          AS u
-      FROM (SELECT vec_id, v,
-              sqrt(list_reduce(list_transform(v, x -> x * x),
-                   (a, b) -> a + b)) AS nrm
-            FROM e))
+    {_SQL_UNIT_CTE}
     SELECT id_a, id_b, cluster, round(cos, 6) AS cosine FROM (
       SELECT x.vec_id AS id_a, y.vec_id AS id_b,
              CAST(x.cid AS INT) AS cluster,
@@ -5483,13 +5482,11 @@ def q_semantic_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_classifier",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id,
              CASE WHEN text IS NULL THEN CAST([] AS VARCHAR[])
-                  ELSE list_filter(regexp_split_to_array(trim(lower(text)),
-                                                         '\\s+'),
-                                   x -> x <> '')
+                  ELSE {_SQL_WS_TOKS}
              END AS tk
       FROM documents),
     z AS (
@@ -5530,11 +5527,9 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dup_span_coverage",
-    """
+    f"""
     WITH t AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)),
-                                                       '\\s+'),
-                                 x -> x <> '') AS tk
+      SELECT doc_id, {_SQL_WS_TOKS} AS tk
       FROM documents WHERE text IS NOT NULL),
     base AS (
       SELECT doc_id, len(tk) AS n_tokens,
@@ -5588,13 +5583,11 @@ def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "gopher_filter",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id,
              CASE WHEN text IS NULL THEN CAST([] AS VARCHAR[])
-                  ELSE list_filter(regexp_split_to_array(trim(lower(text)),
-                                                         '\\s+'),
-                                   x -> x <> '')
+                  ELSE {_SQL_WS_TOKS}
              END AS tk
       FROM documents),
     m AS (
@@ -5644,11 +5637,9 @@ def q_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "strip_duplicate_spans",
-    """
+    f"""
     WITH t AS (
-      SELECT doc_id, list_filter(regexp_split_to_array(trim(lower(text)),
-                                                       '\\s+'),
-                                 x -> x <> '') AS tk
+      SELECT doc_id, {_SQL_WS_TOKS} AS tk
       FROM documents WHERE text IS NOT NULL),
     pos AS (
       SELECT doc_id, unnest(generate_series(1, len(tk) - 4)) AS i, tk
@@ -5727,14 +5718,7 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     "similarity_topk_ivf_sha",
     f"""
     WITH {_SQL_KMEANS_CTE},
-    unit AS (
-      SELECT vec_id,
-        CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm) ELSE v END
-          AS u
-      FROM (SELECT vec_id, v,
-              sqrt(list_reduce(list_transform(v, x -> x * x),
-                   (a, b) -> a + b)) AS nrm
-            FROM e)),
+    {_SQL_UNIT_CTE},
     pd AS (
       SELECT q.vec_id AS query_id, c.cid,
              list_reduce(list_transform(generate_series(1, len(q.v)),
@@ -5751,19 +5735,8 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT p.query_id, a.vec_id AS neighbor_id
       FROM probe p JOIN a1 a ON a.cid = p.cid
       WHERE a.vec_id <> p.query_id),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_reduce(list_transform(generate_series(1, len(uq.u)),
-                  i -> uq.u[i] * un.u[i]), (a, b) -> a + b) AS cos
-      FROM cand c
-      JOIN unit uq ON uq.vec_id = c.query_id
-      JOIN unit un ON un.vec_id = c.neighbor_id)
-    SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-           CAST(rn AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-          FROM scored)
-    WHERE rn <= 10
+    {_SQL_SCORED_CTE}
+    {_SQL_TOP10}
     """,
 )
 def q_similarity_topk_ivf_sha(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5935,24 +5908,7 @@ def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "split_leakage_audit",
     f"""
-    WITH RECURSIVE
-    sh AS ({_SQL_SH_CTE}),
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b
-        ON a.source = b.source AND a.lang = b.lang AND a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) * 1.0
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.01
-    ),
-    edges AS (SELECT id_a AS u, id_b AS v FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-    verts AS (SELECT DISTINCT u AS v FROM edges),
-    reach(v, r) AS (
-      SELECT v, v FROM verts
-      UNION
-      SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.v
-    ),
-    comp AS (SELECT v AS doc_id, min(r) AS component FROM reach GROUP BY v),
+    {_SQL_DUP_FAMILIES},
     s AS (
       SELECT doc_id, {_SQL_SPLIT_CASE} AS split
       FROM documents WHERE text IS NOT NULL),
@@ -6338,14 +6294,10 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "near_dup_sources",
     f"""
     WITH sh AS ({_SQL_SH_CTE}),
-    p AS (
-      SELECT coalesce(a.source, '<null>') AS sa,
-             coalesce(b.source, '<null>') AS sb,
-             len(list_intersect(a.s, b.s)) * 1.0
-               / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) * 1.0
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9)
+    p AS ({_sql_jaccard_pairs(
+        0.9, jaccard="raw",
+        cols="coalesce(a.source, '<null>') AS sa, "
+             "coalesce(b.source, '<null>') AS sb")})
     SELECT least(sa, sb) AS source_a, greatest(sa, sb) AS source_b,
            CAST(count(*) AS BIGINT) AS pair_count,
            round(min(j), 6) AS min_jaccard,
@@ -6626,11 +6578,7 @@ def q_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dup_degree_hist",
     f"""
     WITH sh AS ({_SQL_SH_CTE}),
-    p AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) * 1.0
-            / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9),
+    p AS ({_sql_jaccard_pairs(0.9, jaccard=None)}),
     ends AS (SELECT id_a AS id FROM p UNION ALL SELECT id_b FROM p),
     deg AS (SELECT id, CAST(count(*) AS BIGINT) AS degree
             FROM ends GROUP BY id)
@@ -6820,10 +6768,8 @@ def q_language_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_norms",
-    """
-    WITH e AS (
-      SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
+    f"""
+    WITH {_sql_vecs()},
     n AS (
       SELECT sqrt(list_reduce(list_transform(v, x -> x * x),
                               (a, b) -> a + b)) AS nrm
@@ -6869,9 +6815,7 @@ def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH t AS (
       SELECT doc_id, text,
              CASE WHEN text IS NULL THEN CAST([] AS VARCHAR[])
-                  ELSE list_filter(regexp_split_to_array(trim(lower(text)),
-                                                         '\\s+'),
-                                   x -> x <> '')
+                  ELSE {_SQL_WS_TOKS}
              END AS tk
       FROM documents),
     m AS (
@@ -6982,37 +6926,29 @@ def _lsh_sha_keys_sql(alias: str) -> str:
     return "[" + ", ".join(keys) + "]"
 
 
-_LSH_SHA_ORACLE = f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
-    unit AS (
-      SELECT vec_id,
-        CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm) ELSE v END AS u
-      FROM (SELECT vec_id, v,
-              sqrt(list_reduce(list_transform(v, x -> x * x),
-                   (a, b) -> a + b)) AS nrm
-            FROM e)),
-    bk AS (
+# CTE ``bk``: the sha-LSH band keys of every ``e`` vector, one row each.
+_SQL_LSH_SHA_BK = f"""bk AS (
       SELECT e.vec_id, unnest({_lsh_sha_keys_sql('e')}) AS band_key
-      FROM e),
+      FROM e)"""
+
+
+def _sql_lsh_sha_cand(where: str) -> str:
+    """CTEs ``bk`` and ``cand``: the distinct ``(query_id, neighbor_id)``
+    pairs sharing a band key (the banding OR-construction) that pass
+    ``where``, over the query side ``q`` and the neighbor side ``n``."""
+    return f"""{_SQL_LSH_SHA_BK},
     cand AS (
       SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
       FROM bk q JOIN bk n ON q.band_key = n.band_key
-      WHERE q.vec_id < 5 AND n.vec_id <> q.vec_id),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_reduce(list_transform(generate_series(1, len(uq.u)),
-                  i -> uq.u[i] * un.u[i]), (a, b) -> a + b) AS cos
-      FROM cand c
-      JOIN unit uq ON uq.vec_id = c.query_id
-      JOIN unit un ON un.vec_id = c.neighbor_id)
-    SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-           CAST(rn AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-          FROM scored)
-    WHERE rn <= 10
+      WHERE {where})"""
+
+
+_LSH_SHA_ORACLE = f"""
+    WITH {_sql_vecs()},
+    {_SQL_UNIT_CTE},
+    {_sql_lsh_sha_cand("q.vec_id < 5 AND n.vec_id <> q.vec_id")},
+    {_SQL_SCORED_CTE}
+    {_SQL_TOP10}
     """
 
 
@@ -7066,37 +7002,12 @@ def q_similarity_topk_lsh_sha_arrow(
 @query(
     "ann_store_incremental",
     f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL AND vec_id % 8 = 0),
-    unit AS (
-      SELECT vec_id,
-        CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm) ELSE v END AS u
-      FROM (SELECT vec_id, v,
-              sqrt(list_reduce(list_transform(v, x -> x * x),
-                   (a, b) -> a + b)) AS nrm
-            FROM e)),
-    bk AS (
-      SELECT e.vec_id, unnest({{_lsh_keys}}) AS band_key
-      FROM e),
-    cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-      FROM bk q JOIN bk n ON q.band_key = n.band_key
-      WHERE q.vec_id < 80 AND n.vec_id <> q.vec_id),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_reduce(list_transform(generate_series(1, len(uq.u)),
-                  i -> uq.u[i] * un.u[i]), (a, b) -> a + b) AS cos
-      FROM cand c
-      JOIN unit uq ON uq.vec_id = c.query_id
-      JOIN unit un ON un.vec_id = c.neighbor_id)
-    SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-           CAST(rn AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-          FROM scored)
-    WHERE rn <= 10
-    """.replace("{_lsh_keys}", _lsh_sha_keys_sql("e")),
+    WITH {_sql_vecs("vec_id % 8 = 0")},
+    {_SQL_UNIT_CTE},
+    {_sql_lsh_sha_cand("q.vec_id < 80 AND n.vec_id <> q.vec_id")},
+    {_SQL_SCORED_CTE}
+    {_SQL_TOP10}
+    """,
 )
 def q_ann_store_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN-store ingest under the driver hash: write the
@@ -7126,13 +7037,6 @@ def q_ann_store_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pid-unique name: a concurrent bench/driver run must not overwrite
     # this invocation's store between the append and the collect.
-    # Deferred directory cleanup (the collect reads the tables lazily;
-    # the in-memory catalog entries die with the process anyway) keeps
-    # repeated runs from accumulating dead store data in the warehouse
-    # — same lifecycle as q_tokenize_cached's temp dir.
-    import atexit
-    import shutil
-
     name = f"annincr_{os.getpid()}"
     _register_store_cleanup(spark, name)
     write_ann_store(
@@ -7151,41 +7055,15 @@ def q_ann_store_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_store_delete",
     f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL AND vec_id % 8 = 1),
-    unit AS (
-      SELECT vec_id,
-        CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm) ELSE v END AS u
-      FROM (SELECT vec_id, v,
-              sqrt(list_reduce(list_transform(v, x -> x * x),
-                   (a, b) -> a + b)) AS nrm
-            FROM e)),
-    bk AS (
-      SELECT e.vec_id, unnest({{_lsh_keys}}) AS band_key
-      FROM e),
-    cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-      FROM bk q JOIN bk n ON q.band_key = n.band_key
-      WHERE q.vec_id < 80 AND n.vec_id <> q.vec_id
-        AND (n.vec_id % 5) <> 0),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_reduce(list_transform(generate_series(1, len(uq.u)),
-                  i -> uq.u[i] * un.u[i]), (a, b) -> a + b) AS cos
-      FROM cand c
-      JOIN unit uq ON uq.vec_id = c.query_id
-      JOIN unit un ON un.vec_id = c.neighbor_id),
-    topk AS (
-      SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-             CAST(rn AS INT) AS rank
-      FROM (SELECT *, row_number() OVER (
-              PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-            FROM scored)
-      WHERE rn <= 10)
+    WITH {_sql_vecs("vec_id % 8 = 1")},
+    {_SQL_UNIT_CTE},
+    {_sql_lsh_sha_cand(
+        "q.vec_id < 80 AND n.vec_id <> q.vec_id AND (n.vec_id % 5) <> 0")},
+    {_SQL_SCORED_CTE},
+    topk AS ({_SQL_TOP10})
     SELECT s.stage, t.query_id, t.neighbor_id, t.cosine, t.rank
     FROM topk t CROSS JOIN (VALUES ('logical'), ('purged')) AS s(stage)
-    """.replace("{_lsh_keys}", _lsh_sha_keys_sql("e")),
+    """,
 )
 def q_ann_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Store deletion lifecycle under the driver hash: write the ANN
@@ -7205,9 +7083,7 @@ def q_ann_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 stages keep the hash entropy, and every fifth slice member is
     tombstoned so the anti-join and the purge both stay
     load-bearing."""
-    import atexit
     import os
-    import shutil
 
     from polars_text_spark.operators.ann_store import (
         delete_ids,
@@ -7249,38 +7125,13 @@ def q_ann_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_store_rebucket",
     f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL AND vec_id % 16 = 2),
-    unit AS (
-      SELECT vec_id,
-        CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm) ELSE v END AS u
-      FROM (SELECT vec_id, v,
-              sqrt(list_reduce(list_transform(v, x -> x * x),
-                   (a, b) -> a + b)) AS nrm
-            FROM e)),
-    bk AS (
-      SELECT e.vec_id, unnest({{_lsh_keys}}) AS band_key
-      FROM e),
-    cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-      FROM bk q JOIN bk n ON q.band_key = n.band_key
-      WHERE q.vec_id < 130 AND n.vec_id <> q.vec_id
-        AND (n.vec_id % 5) <> 0),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_reduce(list_transform(generate_series(1, len(uq.u)),
-                  i -> uq.u[i] * un.u[i]), (a, b) -> a + b) AS cos
-      FROM cand c
-      JOIN unit uq ON uq.vec_id = c.query_id
-      JOIN unit un ON un.vec_id = c.neighbor_id)
-    SELECT query_id, neighbor_id, round(cos, 6) AS cosine,
-           CAST(rn AS INT) AS rank
-    FROM (SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rn
-          FROM scored)
-    WHERE rn <= 10
-    """.replace("{_lsh_keys}", _lsh_sha_keys_sql("e")),
+    WITH {_sql_vecs("vec_id % 16 = 2")},
+    {_SQL_UNIT_CTE},
+    {_sql_lsh_sha_cand(
+        "q.vec_id < 130 AND n.vec_id <> q.vec_id AND (n.vec_id % 5) <> 0")},
+    {_SQL_SCORED_CTE}
+    {_SQL_TOP10}
+    """,
 )
 def q_ann_store_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Store re-bucketing lifecycle under the driver hash (VERDICT r12
@@ -7293,9 +7144,7 @@ def q_ann_store_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks the band/vector tables shifts candidates or cosines and
     fails the value hash (the meta row's new bucket count and the
     co-location plan are pinned by tests/test_ann_store.py)."""
-    import atexit
     import os
-    import shutil
 
     from polars_text_spark.operators.ann_store import (
         append_ann_shard,
@@ -7336,12 +7185,8 @@ def q_ann_store_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ann_band_audit",
     f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
-    bk AS (
-      SELECT e.vec_id, unnest({{_lsh_keys}}) AS band_key
-      FROM e WHERE (e.vec_id % 5) <> 0),
+    WITH {_sql_vecs("vec_id % 5 <> 0")},
+    {_SQL_LSH_SHA_BK},
     per AS (
       SELECT band_key, count(*) AS m FROM bk GROUP BY band_key),
     per_id AS (
@@ -7380,7 +7225,7 @@ def q_ann_store_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(no_escape_ids * 1.0 / total_ids, 6)
              AS no_escape_id_fraction
     FROM agg, idagg
-    """.replace("{_lsh_keys}", _lsh_sha_keys_sql("e")),
+    """,
 )
 def q_ann_band_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ANN-store band audit under the driver hash: write the store,
@@ -7394,9 +7239,7 @@ def q_ann_band_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, and the stats row. The cross-signature columns are null by
     design for vector bands (no signature grouping) and are omitted
     here."""
-    import atexit
     import os
-    import shutil
 
     from polars_text_spark.operators.ann_store import (
         band_stats_from_ann_store,
@@ -7711,30 +7554,10 @@ def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "contrastive_triplets",
     f"""
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
-    unit AS (
-      SELECT vec_id,
-        CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm) ELSE v END AS u
-      FROM (SELECT vec_id, v,
-              sqrt(list_reduce(list_transform(v, x -> x * x),
-                   (a, b) -> a + b)) AS nrm
-            FROM e)),
-    bk AS (
-      SELECT e.vec_id, unnest({{keys}}) AS band_key
-      FROM e),
-    cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-      FROM bk q JOIN bk n ON q.band_key = n.band_key
-      WHERE n.vec_id <> q.vec_id),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_reduce(list_transform(generate_series(1, len(uq.u)),
-                  i -> uq.u[i] * un.u[i]), (a, b) -> a + b) AS cos
-      FROM cand c
-      JOIN unit uq ON uq.vec_id = c.query_id
-      JOIN unit un ON un.vec_id = c.neighbor_id),
+    WITH {_sql_vecs()},
+    {_SQL_UNIT_CTE},
+    {_sql_lsh_sha_cand("n.vec_id <> q.vec_id")},
+    {_SQL_SCORED_CTE},
     pos AS (
       SELECT query_id AS anchor_id, neighbor_id AS positive_id,
              cos AS pos_cosine
@@ -7750,7 +7573,7 @@ def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
            n.negative_id, round(n.neg_cosine, 6) AS neg_cosine
     FROM pos p JOIN (SELECT * FROM neg WHERE rn = 1) n
       ON n.anchor_id = p.anchor_id
-    """.replace("{keys}", _lsh_sha_keys_sql("e")),
+    """,
 )
 def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive triplets (operators/contrastive.py): positives are
@@ -8102,35 +7925,15 @@ def q_chat_lint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bitext_pairs",
-    """
-    WITH e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings WHERE embedding IS NOT NULL),
-    unit AS (
-      SELECT vec_id,
-        CASE WHEN nrm > 0 THEN list_transform(v, x -> x / nrm) ELSE v END AS u
-      FROM (SELECT vec_id, v,
-              sqrt(list_reduce(list_transform(v, x -> x * x),
-                   (a, b) -> a + b)) AS nrm
-            FROM e)),
+    f"""
+    WITH {_sql_vecs()},
+    {_SQL_UNIT_CTE},
     sides AS (SELECT vec_id, label % 2 AS side
               FROM embeddings WHERE embedding IS NOT NULL),
-    bk AS (
-      SELECT e.vec_id, unnest({keys}) AS band_key
-      FROM e),
-    cand AS (
-      SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-      FROM bk q JOIN bk n ON q.band_key = n.band_key
-      JOIN sides sq ON sq.vec_id = q.vec_id
-      JOIN sides sn ON sn.vec_id = n.vec_id
-      WHERE sq.side = 0 AND sn.side = 1),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id,
-             list_reduce(list_transform(generate_series(1, len(uq.u)),
-                  i -> uq.u[i] * un.u[i]), (a, b) -> a + b) AS cos
-      FROM cand c
-      JOIN unit uq ON uq.vec_id = c.query_id
-      JOIN unit un ON un.vec_id = c.neighbor_id),
+    {_sql_lsh_sha_cand(
+        "q.vec_id IN (SELECT vec_id FROM sides WHERE side = 0)"
+        " AND n.vec_id IN (SELECT vec_id FROM sides WHERE side = 1)")},
+    {_SQL_SCORED_CTE},
     lr AS (
       SELECT query_id, neighbor_id, cos,
              row_number() OVER (PARTITION BY query_id
@@ -8163,7 +7966,7 @@ def q_chat_lint(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN avg_r ar ON ar.rq = b.right_id
     WHERE al.avg_l + ar.avg_r > 0
       AND b.cos / ((al.avg_l + ar.avg_r) / 2.0) >= 1.1
-    """.replace("{keys}", _lsh_sha_keys_sql("e")),
+    """,
 )
 def q_bitext_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitext mining (operators/bitext.py): label parity splits the
@@ -8362,11 +8165,9 @@ def q_preference_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "trigram_surprisal",
-    """
+    f"""
     WITH t AS (
-      SELECT doc_id, list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               x -> x <> '') AS tk
+      SELECT doc_id, {_SQL_WS_TOKS} AS tk
       FROM documents WHERE text IS NOT NULL),
     tg AS (
       SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3
@@ -8414,11 +8215,9 @@ def q_trigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "trigram_cross_score",
-    """
+    f"""
     WITH t AS (
-      SELECT doc_id, list_filter(
-               regexp_split_to_array(trim(lower(text)), '\\s+'),
-               x -> x <> '') AS tk
+      SELECT doc_id, {_SQL_WS_TOKS} AS tk
       FROM documents WHERE text IS NOT NULL),
     tg AS (
       SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3
@@ -8509,28 +8308,6 @@ def q_trigram_cross_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # collapse_left="auto" route on both cross-dedup faces.
 # ---------------------------------------------------------------------------
 
-# the store-lifecycle subset CTE: the same whitespace/3-gram shingle
-# derivation as _SQL_SH_CTE, parameterized by a doc_id predicate
-def _sql_sh_subset(pred: str) -> str:
-    return f"""
-  SELECT doc_id, {_SQL_SHINGLES} AS s
-  FROM (SELECT doc_id,
-               regexp_split_to_array(trim(lower(text)), '\\s+') AS toks
-        FROM documents WHERE text IS NOT NULL AND ({pred}))
-"""
-
-
-_SQL_PAIRWISE_09 = """
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.s, b.s)) * 1.0
-                 / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6)
-             AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s)) * 1.0
-          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
-"""
-
-
 # identical-text families riding the store lifecycles (round 15): the
 # resized corpus slices (VERDICT r14 #2) can carry zero natural
 # near-dup pairs at small scale factors, which would leave the driver
@@ -8553,8 +8330,9 @@ def _lifecycle_family(spark, start: int, text: str, n: int = 6):
 @query(
     "minhash_store_migrate",
     f"""
-    WITH sh AS ({{subset}})
-    {_SQL_PAIRWISE_09}
+    WITH sh AS ({_sql_shingle_sets(
+        "(doc_id % 8 = 0 AND doc_id % 40 <> 0) OR doc_id % 16 = 9")})
+    {_sql_jaccard_pairs(0.9)}
     UNION ALL  -- the family clique minus the tombstoned member 3:
                -- members 0-3 rode the original store (3 deleted),
                -- 4-5 the post-migration shard
@@ -8563,9 +8341,7 @@ def _lifecycle_family(spark, start: int, text: str, n: int = 6):
     FROM generate_series(0, 5) s(i) JOIN generate_series(0, 5) t(j)
       ON i < j
     WHERE i <> 3 AND j <> 3
-    """.replace("{subset}", _sql_sh_subset(
-        "(doc_id % 8 = 0 AND doc_id % 40 <> 0) OR doc_id % 16 = 9"
-    )),
+    """,
 )
 def q_minhash_store_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The v1->v2 store migration lifecycle under the driver hash
@@ -8647,17 +8423,15 @@ def q_minhash_store_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "minhash_store_rebucket",
     f"""
-    WITH sh AS ({{subset}})
-    {_SQL_PAIRWISE_09}
+    WITH sh AS ({_sql_shingle_sets("doc_id % 8 = 2 AND doc_id % 10 <> 0")})
+    {_sql_jaccard_pairs(0.9)}
     UNION ALL  -- the family clique minus the tombstoned member 5:
                -- members 0-2 rode the write, 3-5 the append
     SELECT {_RBK_FAM_START} + i AS id_a, {_RBK_FAM_START} + j AS id_b,
            1.0 AS jaccard
     FROM generate_series(0, 4) s(i) JOIN generate_series(0, 4) t(j)
       ON i < j
-    """.replace("{subset}", _sql_sh_subset(
-        "doc_id % 8 = 2 AND doc_id % 10 <> 0"
-    )),
+    """,
 )
 def q_minhash_store_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash twin of ``ann_store_rebucket`` (round 14,
@@ -8808,15 +8582,14 @@ def _collapse_frames(spark, docs, standing_pred):
     return shard, standing
 
 
-_SQL_COLLAPSE_CROSS = f"""
-    WITH sa AS ({{ssub}}), sb AS ({{bsub}})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.s, b.s)) * 1.0
-                 / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6)
-             AS jaccard
-    FROM sa a JOIN sb b ON TRUE
-    WHERE len(list_intersect(a.s, b.s)) * 1.0
-          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
+def _sql_collapse_cross(standing_pred: str) -> str:
+    """Oracle of both collapse_left='auto' faces: the exact cross pairs
+    of the ``doc_id % 4 = 3`` shard against the standing docs matching
+    ``standing_pred``, plus the shard family's fan-back rows."""
+    return f"""
+    WITH sa AS ({_sql_shingle_sets("doc_id % 4 = 3")}),
+    sb AS ({_sql_shingle_sets(standing_pred)})
+    {_sql_jaccard_pairs(0.9, on="TRUE", left="sa", right="sb")}
     UNION ALL  -- the collapsed family fans back: every member pairs
                -- with the standing twin at jaccard 1
     SELECT {_COLLAPSE_FAM_START} + i AS id_a,
@@ -8827,9 +8600,7 @@ _SQL_COLLAPSE_CROSS = f"""
 
 @query(
     "cross_dedup_collapse_auto",
-    _SQL_COLLAPSE_CROSS
-    .replace("{ssub}", _sql_sh_subset("doc_id % 4 = 3"))
-    .replace("{bsub}", _sql_sh_subset("doc_id % 2 = 0")),
+    _sql_collapse_cross("doc_id % 2 = 0"),
 )
 def q_cross_dedup_collapse_auto(
     spark: SparkSession, sf_dir: str
@@ -8860,9 +8631,7 @@ def q_cross_dedup_collapse_auto(
 
 @query(
     "incremental_store_collapse_auto",
-    _SQL_COLLAPSE_CROSS
-    .replace("{ssub}", _sql_sh_subset("doc_id % 4 = 3"))
-    .replace("{bsub}", _sql_sh_subset("doc_id % 4 = 0")),
+    _sql_collapse_cross("doc_id % 4 = 0"),
 )
 def q_incremental_store_collapse_auto(
     spark: SparkSession, sf_dir: str
@@ -8914,14 +8683,8 @@ _CAPAUTO_FAM_START = 3_200_000_000
 @query(
     "near_dedup_capauto",
     f"""
-    WITH sh AS ({{base}})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           round(len(list_intersect(a.s, b.s)) * 1.0
-                 / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 6)
-             AS jaccard
-    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.s, b.s)) * 1.0
-          / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) >= 0.9
+    WITH sh AS ({_sql_shingle_sets("doc_id % 8 = 3")})
+    {_sql_jaccard_pairs(0.9)}
     UNION ALL  -- the near-identical family survives IN FULL: auto
                -- walked the cap past the family size, so the clique
                -- is emitted and every pair verifies at exactly 58/60
@@ -8930,7 +8693,7 @@ _CAPAUTO_FAM_START = 3_200_000_000
            round(58 * 1.0 / 60, 6) AS jaccard
     FROM generate_series(0, {_CAPAUTO_FAM_N - 1}) s(i)
     JOIN generate_series(0, {_CAPAUTO_FAM_N - 1}) t(j) ON i < j
-    """.replace("{base}", _sql_sh_subset("doc_id % 8 = 3")),
+    """,
 )
 def q_near_dedup_capauto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``band_cap=("auto", 4)`` in the FAMILY regime (VERDICT r14 #6

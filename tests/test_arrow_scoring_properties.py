@@ -57,7 +57,7 @@ def test_fold_dot_bit_identical_to_python_fold(rows, queries):
     vals = np.empty(len(rows), dtype=object)
     for i, r in enumerate(rows):
         vals[i] = r
-    acc, valid = _fold_dot_batch(vals, queries, exact_fold=True)
+    acc, valid = _fold_dot_batch(vals, queries)
     for i, r in enumerate(rows):
         for j, q in enumerate(queries):
             want = _py_fold_dot(r, q)
@@ -80,7 +80,7 @@ def test_normalized_fold_bit_identical(rows, queries):
     for i, r in enumerate(rows):
         vals[i] = r
     qn = [_normalize_vec_py(q) for q in queries]
-    acc, valid = _fold_dot_batch(vals, qn, exact_fold=True, normalize=True)
+    acc, valid = _fold_dot_batch(vals, qn, normalize=True)
     for i, r in enumerate(rows):
         rn = _py_norm(r)
         for j, q in enumerate(qn):
@@ -140,7 +140,7 @@ def test_fold_dot_ragged_null_and_nonfinite_mask():
     vals[2] = [1.0, 2.0, 3.0]
     vals[3] = [float("nan"), 1.0]
     queries = [[3.0, 4.0], None, [1.0, 1.0, 1.0]]
-    acc, valid = _fold_dot_batch(vals, queries, exact_fold=True)
+    acc, valid = _fold_dot_batch(vals, queries)
     assert valid[0, 0] and acc[0, 0] == 11.0
     assert not valid[0, 1] and not valid[0, 2]  # null q / dim mismatch
     assert not valid[1].any()                   # null row
