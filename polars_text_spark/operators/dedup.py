@@ -474,7 +474,14 @@ def minhash_signatures(
     a columnar re-read of longs; on the id-bucketed shingle table the
     groupBy(id) aggregation is also exchange-free. Values are
     identical either way (the column IS ``token_shingles(hashed=
-    True)``)."""
+    True)``).
+
+    The groupBy folds several rows of one id into one signature over
+    their union, so this is sound on any input. The store append
+    (``dedup_store._project``) takes each min ROW-WISE instead: its
+    pinned stage holds one row per id, where the per-row min is the
+    per-id min, and skipping the groupBy's exchange saves the append a
+    job. Band rows are equal either way (parity-tested)."""
     # explode_outer + null filter: plain explode makes the optimizer
     # infer `size(token_shingles(..)) > 0` and pushdown inlines the
     # whole shingle expression into the filter, computing it twice
@@ -495,28 +502,14 @@ def minhash_signatures(
     return exploded.groupBy(id_col).agg(F.expr(f"array({mins})").alias("minhash"))
 
 
-def _banded_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    out_id: str,
-    *,
-    num_perm: int,
-    bands: int,
-    shingle_n: int,
-    shingles_col: str | None = None,
+def _band_rows(
+    sigs: DataFrame, id_col: str, out_id: str, *, num_perm: int, bands: int
 ) -> DataFrame:
     """``(out_id, bk: struct<band, bucket>, __sig)`` — one row per LSH
-    band. ``__sig`` is an xxhash64 over the FULL signature: docs with
-    equal ``__sig`` have (collision-negligibly) identical MinHash
-    signatures, i.e. are near-certain duplicates of each other — the
-    grouping key the hot-band guard stars by, so star edges verify by
-    construction instead of against an arbitrary bucket hub."""
+    band of an ``(id_col, minhash)`` signature frame: the projection
+    shared by :func:`_banded_signatures` and the store append's
+    row-wise signatures (``dedup_store._project``)."""
     rows_per_band = num_perm // bands
-    sigs = minhash_signatures(
-        df, text_col, id_col,
-        num_perm=num_perm, shingle_n=shingle_n, shingles_col=shingles_col,
-    )
 
     def items(lo: int, hi: int) -> str:
         return ", ".join(f"minhash[{i}]" for i in range(lo, hi))
@@ -534,6 +527,30 @@ def _banded_signatures(
         F.explode(F.expr(f"array({band_structs})")).alias("bk"),
         F.expr(f"xxhash64({items(0, num_perm)})").alias("__sig"),
     )
+
+
+def _banded_signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    out_id: str,
+    *,
+    num_perm: int,
+    bands: int,
+    shingle_n: int,
+    shingles_col: str | None = None,
+) -> DataFrame:
+    """``(out_id, bk: struct<band, bucket>, __sig)`` — one row per LSH
+    band. ``__sig`` is an xxhash64 over the FULL signature: docs with
+    equal ``__sig`` have (collision-negligibly) identical MinHash
+    signatures, i.e. are near-certain duplicates of each other — the
+    grouping key the hot-band guard stars by, so star edges verify by
+    construction instead of against an arbitrary bucket hub."""
+    sigs = minhash_signatures(
+        df, text_col, id_col,
+        num_perm=num_perm, shingle_n=shingle_n, shingles_col=shingles_col,
+    )
+    return _band_rows(sigs, id_col, out_id, num_perm=num_perm, bands=bands)
 
 
 #: default hot-band guard cap, and the base of the ``"auto"`` ladder

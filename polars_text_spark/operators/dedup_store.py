@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polars_text_spark.operators.dedup import (
+    _band_rows,
     _banded_signatures,
     _cross_pairs,
     _self_pairs,
@@ -196,7 +197,8 @@ def _assert_hash_family(spark: SparkSession, name: str, meta_row=None) -> None:
     when NEITHER table exists (the store genuinely doesn't exist yet)
     is the check a no-op, leaving the missing-store error to the
     caller's own read. ``meta_row`` lets a caller that already read
-    the meta row skip the re-read (one collect per append saved)."""
+    the meta row skip the re-read (a listing of the meta log's files,
+    and a collect when the log changed since the last read)."""
     from polars_text_spark.operators.dedup import SHINGLE_HASH_VERSION
 
     m = meta_row if meta_row is not None else read_meta(spark, name)
@@ -240,8 +242,9 @@ def append_minhash_shard(
     :func:`rebucket_minhash_store` at the current bucket count merges
     them to one file per bucket.
 
-    Contract: shard ids are non-null and DISJOINT from store ids AND
-    from pending tombstones, enforced by the shared append gate
+    Contract: shard ids are non-null, unique within the shard and
+    DISJOINT from store ids AND from pending tombstones; all but
+    uniqueness are enforced by the shared append gate
     (:meth:`IdKeyedStore.append
     <polars_text_spark.sources.bucketing.IdKeyedStore.append>`)."""
     MINHASH_STORE.append(shard, name, id_col=id_col, payload_col=text_col)
@@ -258,17 +261,33 @@ def _stage(rows: DataFrame, meta, id_col: str, text_col: str) -> DataFrame:
 
 def _project(staged: DataFrame, meta, bands_table: str):
     """(bands, shingles) rows of the staged ``(id, sh)`` frame under
-    the store's recorded signature parameters."""
+    the store's recorded signature parameters.
+
+    The signature is taken per ROW, not by the explode/``groupBy(id)``
+    of :func:`~polars_text_spark.operators.dedup.minhash_signatures`:
+    the pinned stage holds one row per id (the sink's
+    ``dropDuplicates`` plus novelty anti-join; the batch append's
+    contract of unique shard ids), so the per-row min is the per-id
+    min, and the groupBy's exchange would cost the append a job of its
+    own. Null shingles are skipped and a row with none left is
+    dropped, as the groupBy path drops it; the band rows are
+    value-identical (parity-tested)."""
+    num_perm = int(meta["num_perm"])
+    sigs = staged.where("exists(sh, x -> x is not null)").select(
+        "id",
+        F.expr(
+            f"transform(sequence(0, {num_perm - 1}), k -> array_min("
+            "transform(filter(sh, x -> x is not null), x -> xxhash64(x, k))))"
+        ).alias("minhash"),
+    )
     cols = ["id", F.col("bk.band").alias("band"),
             F.col("bk.bucket").alias("bucket")]
     if "sig" in staged.sparkSession.table(bands_table).columns:
         # the hot-band guard's signature-group key; stores written
         # before it existed keep their narrower schema
         cols.append(F.col("__sig").alias("sig"))
-    banded = _banded_signatures(
-        staged, "sh", "id", "id",
-        num_perm=int(meta["num_perm"]), bands=int(meta["bands"]),
-        shingle_n=int(meta["shingle_n"]), shingles_col="sh",
+    banded = _band_rows(
+        sigs, "id", "id", num_perm=num_perm, bands=int(meta["bands"])
     ).select(*cols)
     return banded, staged
 

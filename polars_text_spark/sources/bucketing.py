@@ -241,6 +241,16 @@ def meta_gen(row) -> int:
     return int(gen) if gen is not None else 0
 
 
+# Current row of each store's meta log, stamped with the log's parquet
+# file set. Parquet files are immutable and every meta write (cutover
+# append, fresh-write reset, schema upgrade) adds or replaces files, so
+# an equal file set means an equal log. The stamp is listed through the
+# same catalog relation the collect would read, so a hit returns what
+# the collect would have returned. Entries are replaced whole, never
+# mutated, so a concurrent reader sees one consistent (files, row) pair.
+_META_CACHE: dict[str, tuple[frozenset, object]] = {}
+
+
 def read_meta(spark: SparkSession, name: str):
     """Current ``<name>_meta`` row, or None when the table is absent
     or empty. Meta tables are an APPEND-ONLY log since round 15: a
@@ -249,11 +259,26 @@ def read_meta(spark: SparkSession, name: str):
     CREATE, so a crash mid-flip left NO meta table at all — ADVICE
     r14); the current store state is the highest-``gen`` row, which
     this helper resolves for every reader. Rows predating the ``gen``
-    column sort as generation 0."""
-    if not spark.catalog.tableExists(f"{name}_meta"):
+    column sort as generation 0.
+
+    A read runs NO Spark job while the log is unchanged: the log's
+    file set (``inputFiles()``, a listing, not a job) is compared with
+    the one the memoized row was read under (``_META_CACHE``), and only
+    a changed set collects the log again. So the append gate, the
+    post-append generation check and every other meta reader pay one
+    collect per meta write, not one per call."""
+    table = f"{name}_meta"
+    if not spark.catalog.tableExists(table):
         return None
-    rows = spark.table(f"{name}_meta").collect()
-    return max(rows, key=meta_gen) if rows else None
+    log = spark.table(table)
+    files = frozenset(log.inputFiles())
+    hit = _META_CACHE.get(table)
+    if hit is not None and hit[0] == files:
+        return hit[1]
+    rows = log.collect()
+    row = max(rows, key=meta_gen) if rows else None
+    _META_CACHE[table] = (files, row)
+    return row
 
 
 def store_generation(spark: SparkSession, name: str) -> int:
@@ -606,11 +631,12 @@ def write_meta_row(
     same one-off non-atomic upgrade any schema migration needs).
 
     Log growth: one tiny row (and one parquet file) per cutover —
-    bounded by maintenance frequency, not data size; ``read_meta``
-    collects the whole log, so even a store purged hourly for a year
-    reads back ~10^4 scalar rows, driver-side noise. A store that ever
-    wants the history gone gets it for free at the next fresh write
-    (reset).
+    bounded by maintenance frequency, not data size. ``read_meta``
+    lists the log's files on every call and collects the whole log
+    only when that file set changed, i.e. once per meta write; even a
+    store purged hourly for a year lists ~10^4 files and reads back
+    ~10^4 scalar rows, driver-side noise. A store that ever wants the
+    history gone gets it for free at the next fresh write (reset).
 
     Concurrent MAINTENANCE ops are detected here (ADVICE r15): two
     racing cutovers (say a purge and a rebucket) would each append a
@@ -682,7 +708,12 @@ def check_generation_unchanged(
     even a partially-carried shard re-appendable). The maintenance
     side independently aborts when files appear under its snapshot,
     so between the two checks a racing append is aborted-against,
-    detected here, or both."""
+    detected here, or both.
+
+    The check costs one listing of the meta log's files and no job
+    while the log is unchanged (:func:`read_meta`); a cutover's flip
+    adds a meta file, so the changed file set re-reads the log and the
+    new generation is seen."""
     now = store_generation(spark, name)
     if now != gen_at_start:
         raise RuntimeError(
@@ -830,7 +861,18 @@ class IdKeyedStore:
         write: the stage (MinHash's tokenize pass) runs once, and so
         does the sink's lazy novelty filter (:func:`novel_rows`),
         against the id table as it stood before this append. Appended
-        rows are the small side by contract, so the pin is bounded."""
+        rows are the small side by contract, so the pin is bounded.
+        The pinned stage holds one row per id, so ``project`` may
+        derive each row's band keys row-wise (MinHash does: no
+        ``groupBy(id)`` exchange in the bands write).
+
+        Jobs: the two table writes (each its AQE shuffle-map stages
+        plus the write) and nothing else while the meta log is
+        unchanged — neither the caller's meta read nor the post-write
+        generation check collects the log on a memo hit
+        (:func:`read_meta`). A MinHash stream micro-batch runs 6 jobs
+        in that steady state; the first read after a meta write
+        collects once more."""
         gen, buckets = meta_gen(meta), int(meta["buckets"])
         bands_tbl, ids_tbl = (phys_table(name, s, gen) for s in self.suffixes)
         staged = self.stage(rows, meta, id_col, payload_col)

@@ -454,3 +454,41 @@ def test_store_write_signature_derivation_is_exchange_free(spark, corpus):
         for r in direct.collect()
     }
     assert got == want
+
+
+def test_append_rowwise_bands_match_groupby_bands(spark, corpus):
+    """The append derives each row's signature row-wise from its pinned
+    one-row-per-id ``(id, sh)`` stage (``dedup_store._project``); on
+    the same staged frame its band rows equal the explode/``groupBy(id)``
+    rows of ``_banded_signatures``, both ways. The stage covers empty
+    text, null text (a null shingle array) and a text shorter than
+    ``shingle_n``, plus shingle arrays that are empty, null or hold a
+    null, which both paths drop or skip alike."""
+    from polars_text_spark.operators.dedup import _banded_signatures
+    from polars_text_spark.operators.dedup_store import _phys, _project, _stage
+
+    write_minhash_store(corpus.limit(20), "mh_rowwise", buckets=2)
+    meta = {"num_perm": 64, "bands": 16, "shingle_n": 3}
+    edge = spark.createDataFrame(
+        [(-1, ""), (-2, None), (-3, "two words"), (-4, "one")],
+        "doc_id long, text string",
+    )
+    staged = _stage(
+        corpus.limit(60).unionByName(edge), meta, "doc_id", "text"
+    ).unionByName(spark.createDataFrame(
+        [(-5, []), (-6, None), (-7, [None, 7, 11])], "id long, sh array<long>"
+    ))
+    rowwise, _ = _project(staged, meta, _phys(spark, "mh_rowwise", "bands"))
+    grouped = _banded_signatures(
+        staged, "sh", "id", "id", num_perm=64, bands=16, shingle_n=3,
+        shingles_col="sh",
+    ).select(
+        "id", F.col("bk.band").alias("band"),
+        F.col("bk.bucket").alias("bucket"), F.col("__sig").alias("sig"),
+    )
+    assert rowwise.columns == grouped.columns
+    assert rowwise.exceptAll(grouped).count() == 0
+    assert grouped.exceptAll(rowwise).count() == 0
+    ids = {r["id"] for r in rowwise.select("id").distinct().collect()}
+    assert {-1, -3, -4, -7} <= ids and not ids & {-2, -5, -6}
+    assert rowwise.count() == 16 * len(ids)

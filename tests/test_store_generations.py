@@ -561,3 +561,57 @@ def test_failed_write_cancels_its_sibling(spark, corpus, monkeypatch):
     assert not spark.catalog.tableExists("mh_pool_bands_g1")
     assert not spark.catalog.tableExists("mh_pool_shingles_g1")
     assert _pairs(spark, "mh_pool") == before
+
+
+def test_read_meta_memo_follows_every_meta_write(spark, corpus):
+    """``read_meta`` runs no Spark job while the meta log's file set is
+    unchanged, and every meta write (a rebucket or purge cutover, a
+    fresh write under other parameters) changes that set: the next
+    read returns the new row. A stale memo must never hide a cutover
+    from the post-append generation check."""
+    from polars_text_spark.sources.bucketing import (
+        check_generation_unchanged,
+        read_meta,
+    )
+
+    sc = spark.sparkContext
+    name = "mh_memo"
+
+    def jobs(fn) -> int:
+        group = f"{name}-{fn.__name__}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    write_minhash_store(corpus.limit(40), name, buckets=2)
+    m = read_meta(spark, name)
+    assert (m["gen"], m["buckets"], m["num_perm"]) == (0, 2, 64)
+
+    def reread():
+        assert read_meta(spark, name) == m
+        check_generation_unchanged(spark, name, 0)
+
+    assert jobs(reread) == 0
+
+    rebucket_minhash_store(spark, name, 4)
+    m = read_meta(spark, name)
+    assert (m["gen"], m["buckets"]) == (1, 4)
+    with pytest.raises(RuntimeError, match="raced this append"):
+        check_generation_unchanged(spark, name, 0)
+
+    delete_ids(corpus.limit(40).select("doc_id").limit(3), name)
+    purge_deleted(spark, name)
+    m = read_meta(spark, name)
+    assert (m["gen"], m["buckets"]) == (2, 4)
+
+    write_minhash_store(
+        corpus.limit(40), name, num_perm=32, bands=8, buckets=3
+    )
+    m = read_meta(spark, name)
+    assert (m["gen"], m["buckets"], m["num_perm"], m["bands"]) == (0, 3, 32, 8)
+    with pytest.raises(RuntimeError, match="raced this append"):
+        check_generation_unchanged(spark, name, 2)
