@@ -257,8 +257,9 @@ def append_ann_shard(
     guarded in-plan by ``sha_band_keys`` (round 16: the former
     pre-flight scan was a full extra pass over the shard).
 
-    Contract: shard ids are non-null and DISJOINT from store ids and
-    pending tombstones, enforced by the shared append gate
+    Contract: shard ids are non-null, unique within the shard and
+    DISJOINT from store ids and pending tombstones, enforced by the
+    shared append gate
     (:meth:`IdKeyedStore.append
     <polars_text_spark.sources.bucketing.IdKeyedStore.append>`): a
     duplicated id would burn top-k rank slots with duplicate
@@ -301,38 +302,14 @@ def topk_against_shard(
     """
     # read-only: works on pre-bucket-meta stores too
     m = ANN_STORE.require_meta(spark, name, "before querying it")
-    dim, num_planes, bands = (int(m[k]) for k in ("dim", "num_planes", "bands"))
-    __gen = meta_gen(m)
-    # wrong-dim shards fail loudly inside sha_band_keys (in-plan
-    # guard, round 16) when the banding projection first runs
-    banded, unit = _shard_projections(
-        shard,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=dim,
-        num_planes=num_planes,
-        bands=bands,
-    )
-    unit = unit.dropDuplicates(["id"])
-    q_bands = banded.select(F.col("id").alias("query_id"), "band_key")
-    qunit = unit.select(
-        F.col("id").alias("query_id"), F.col("u").alias("__qvec")
-    )
-    __ts = _tombstones(spark, name)
-    # __gen came from the same meta read as the signature params —
-    # one collect resolves everything (round 16)
-    store_bands = _minus_tombstones(
-        spark.table(phys_table(name, "bands", __gen)), __ts
-    ).select(F.col("id").alias("neighbor_id"), "band_key")
-    shard_bands = banded.select(
-        F.col("id").alias("neighbor_id"), "band_key"
+    q_bands, unit, store_bands, store_unit = _query_side(
+        spark, name, m, shard, id_col=id_col, vec_col=vec_col
     )
     # Slim candidate stream + neighbor-keyed dedup (round 17) — same
     # restructure as topk_from_store: no vector payload rides the
     # candidate exchanges, the dedup keying doubles as the re-rank
-    # join keying, and the query vectors re-attach after the dedup
-    # (this also deletes the former upfront banded-x-unit join that
-    # carried __qvec into the candidate generation).
+    # join keying, and the query vectors re-attach after the dedup.
+    shard_bands = q_bands.withColumnRenamed("query_id", "neighbor_id")
     cands = (
         store_bands.join(q_bands, "band_key")
         .unionByName(q_bands.join(F.broadcast(shard_bands), "band_key"))
@@ -340,23 +317,9 @@ def topk_against_shard(
         .repartition(F.col("neighbor_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    if exclude_self:
-        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    neighbors = (
-        _minus_tombstones(spark.table(phys_table(name, "vectors", __gen)), __ts)
-        .unionByName(unit)
-        .select(F.col("id").alias("neighbor_id"), F.col("u").alias("__vvec"))
+    return _rerank_tail(
+        cands, store_unit.unionByName(unit), unit, k=k, exclude_self=exclude_self
     )
-    scored = (
-        cands.join(neighbors, "neighbor_id")
-        .join(qunit, "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
-        )
-    )
-    return rank_topk(scored, k)
 
 
 def topk_from_store(
@@ -402,28 +365,9 @@ def topk_from_store(
             f"bands={bands}) would produce band keys that can never "
             "collide with the store"
         )
-    # generation from the SAME meta row — no second meta-log collect
-    __gen = meta_gen(m)
-    # wrong-dim queries fail loudly inside sha_band_keys (in-plan
-    # guard, round 16) when the banding projection first runs
-    base = queries.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"), vec_col
+    q_bands, unit, store_bands, store_unit = _query_side(
+        spark, name, m, queries, id_col=id_col, vec_col=vec_col
     )
-    qunit = with_l2_normalized(base, vec_col, "__qvec").select(
-        "query_id", "__qvec"
-    ).dropDuplicates(["query_id"])
-    q_bands = base.select(
-        "query_id",
-        F.explode(
-            sha_band_keys(
-                F.col(vec_col), dim=dim, num_planes=num_planes, bands=bands
-            )
-        ).alias("band_key"),
-    )
-    __ts = _tombstones(spark, name)
-    store_bands = _minus_tombstones(
-        spark.table(phys_table(name, "bands", __gen)), __ts
-    ).select(F.col("id").alias("neighbor_id"), "band_key")
     # Candidate dedup folded into the re-rank keying (round 17,
     # VERDICT r16 #6 + guide §2.3/§2.4): the candidate stream carries
     # ONLY (query_id, neighbor_id) — the query vector no longer rides
@@ -444,14 +388,65 @@ def topk_from_store(
     else:
         cands = cands.repartition(F.col("neighbor_id"))
     cands = cands.dropDuplicates(["query_id", "neighbor_id"])
+    return _rerank_tail(cands, store_unit, unit, k=k, exclude_self=exclude_self)
+
+
+def _query_side(
+    spark: SparkSession, name: str, m, queries: DataFrame, *, id_col: str, vec_col: str
+):
+    """The four frames a store top-k joins, from ONE meta row ``m``:
+    the queries' band keys ``(query_id, band_key)`` and unit vectors
+    ``(id, u)`` (deduplicated on id, null vectors dropped), and the
+    live generation's band ``(neighbor_id, band_key)`` and unit-vector
+    ``(id, u)`` tables minus tombstones. Wrong-dim queries fail loudly
+    inside ``sha_band_keys`` (in-plan guard) when the banding
+    projection first runs."""
+    gen = meta_gen(m)
+    banded, unit = _shard_projections(
+        queries,
+        id_col=id_col,
+        vec_col=vec_col,
+        dim=int(m["dim"]),
+        num_planes=int(m["num_planes"]),
+        bands=int(m["bands"]),
+    )
+    ts = _tombstones(spark, name)
+    store_bands = _minus_tombstones(
+        spark.table(phys_table(name, "bands", gen)), ts
+    ).select(F.col("id").alias("neighbor_id"), "band_key")
+    store_unit = _minus_tombstones(
+        spark.table(phys_table(name, "vectors", gen)), ts
+    )
+    return (
+        banded.select(F.col("id").alias("query_id"), "band_key"),
+        unit.dropDuplicates(["id"]),
+        store_bands,
+        store_unit,
+    )
+
+
+def _rerank_tail(
+    cands: DataFrame, neighbors: DataFrame, qunit: DataFrame, *, k: int, exclude_self: bool
+) -> DataFrame:
+    """The store re-rank tail: candidate pairs ``(query_id,
+    neighbor_id)`` -> neighbor unit vectors (``neighbors(id, u)``) ->
+    query unit vectors (``qunit(id, u)``) -> exact :func:`dot` ->
+    :func:`rank_topk`."""
     if exclude_self:
         cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    unit = _minus_tombstones(
-        spark.table(phys_table(name, "vectors", __gen)), __ts
-    ).select(F.col("id").alias("neighbor_id"), F.col("u").alias("__vvec"))
     scored = (
-        cands.join(unit, "neighbor_id")
-        .join(qunit, "query_id")
+        cands.join(
+            neighbors.select(
+                F.col("id").alias("neighbor_id"), F.col("u").alias("__vvec")
+            ),
+            "neighbor_id",
+        )
+        .join(
+            qunit.select(
+                F.col("id").alias("query_id"), F.col("u").alias("__qvec")
+            ),
+            "query_id",
+        )
         .select(
             "query_id",
             "neighbor_id",

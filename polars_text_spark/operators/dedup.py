@@ -16,8 +16,9 @@ BASELINE.json north star). Five strategies, all shuffle-conscious:
   (SQL-oracle-checkable; the verification path for the approximate
   strategies).
 - embedding-cosine near-dup — see
-  :func:`polars_text_spark.operators.similarity.cosine_topk_lsh`;
-  :func:`embedding_dup_pairs` wraps it for a threshold.
+  :func:`polars_text_spark.operators.similarity.cosine_topk_lsh` (or
+  :func:`~polars_text_spark.operators.similarity.banded_scored_candidates`
+  filtered at a cosine threshold).
 
 Design note for scale: every strategy maps to (narrow per-row exprs) +
 (one groupBy or one equi-join on a blocking key). Nothing cross-joins
@@ -56,7 +57,6 @@ __all__ = [
     "count_join_jaccard_pairs",
     "exact_dedup",
     "minhash_band_plan",
-    "embedding_dup_pairs",
     "bottomk_sketch",
     "bottomk_sketch_pairs",
     "dedup_threshold_sweep",
@@ -1954,46 +1954,6 @@ def count_join_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
-    )
-
-
-def embedding_dup_pairs(
-    vectors: DataFrame,
-    *,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    num_planes: int = 16,
-    bands: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs via LSH bucket candidates."""
-    from polars_text_spark.operators.similarity import (
-        dot,
-        lsh_band_keys,
-        with_l2_normalized,
-    )
-
-    keys = lsh_band_keys(
-        F.col(vec_col), dim=dim, num_planes=num_planes, bands=bands, seed=seed
-    )
-    banded = with_l2_normalized(
-        vectors.select(F.col(id_col).alias("id"), vec_col), vec_col, "vec"
-    ).select(
-        "id",
-        "vec",
-        F.explode(keys).alias("band_key"),
-    )
-    left = banded.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), "band_key")
-    right = banded.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), "band_key")
-    return (
-        left.join(right, "band_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("cosine", dot(F.col("vec_a"), F.col("vec_b")))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )
 
 

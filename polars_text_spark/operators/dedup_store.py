@@ -243,8 +243,8 @@ def append_minhash_shard(
     them to one file per bucket.
 
     Contract: shard ids are non-null, unique within the shard and
-    DISJOINT from store ids AND from pending tombstones; all but
-    uniqueness are enforced by the shared append gate
+    DISJOINT from store ids AND from pending tombstones, all enforced
+    by the shared append gate
     (:meth:`IdKeyedStore.append
     <polars_text_spark.sources.bucketing.IdKeyedStore.append>`)."""
     MINHASH_STORE.append(shard, name, id_col=id_col, payload_col=text_col)
@@ -266,8 +266,8 @@ def _project(staged: DataFrame, meta, bands_table: str):
     The signature is taken per ROW, not by the explode/``groupBy(id)``
     of :func:`~polars_text_spark.operators.dedup.minhash_signatures`:
     the pinned stage holds one row per id (the sink's
-    ``dropDuplicates`` plus novelty anti-join; the batch append's
-    contract of unique shard ids), so the per-row min is the per-id
+    ``dropDuplicates`` plus novelty anti-join; the batch append gate's
+    refusal of repeated shard ids), so the per-row min is the per-id
     min, and the groupBy's exchange would cost the append a job of its
     own. Null shingles are skipped and a row with none left is
     dropped, as the groupBy path drops it; the band rows are

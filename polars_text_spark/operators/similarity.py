@@ -1,21 +1,39 @@
 """Similarity search over embedding columns (beyond-reference,
 BASELINE.json north star).
 
-Two paths, both 100% JVM built-ins (no Python UDF in the hot loop):
+Every key-blocked top-k operator here is one pipeline, keys ->
+candidates -> exact re-rank -> rank, and each stage is written once:
 
-- :func:`cosine_topk` — exact brute force. The query side is
-  broadcast; similarity is ``zip_with`` product + ``aggregate`` sum,
-  which Catalyst evaluates inside the join projection. Right at small
-  query counts; O(Q·N) at scale — the calibration baseline.
-- :func:`cosine_topk_lsh` — random-hyperplane (SimHash) LSH: H seeded
-  hyperplanes -> H sign bits -> ``bands`` bucket keys; candidates are
-  bucket collisions only, then exact cosine re-rank. Sub-linear
-  candidate generation; recall tunable via (H, bands). The 100 TB
-  path: bucket join shuffles on band keys instead of cross-joining.
+1. **Keys.** LSH keys both sides with sign bits against a plane matrix
+   (:func:`_band_keys`): Gaussian planes in :func:`lsh_band_keys`,
+   sha-derived ±1 planes, replayable by another engine, in
+   :func:`sha_band_keys`. IVF keys a vector by its list and a query by
+   its ``nprobe`` nearest lists, from a numpy-trained codebook
+   (:func:`cosine_topk_ivf`) or the oracle-replayable k-means of
+   :mod:`polars_text_spark.operators.semdedup`
+   (:func:`cosine_topk_ivf_kmeans`).
+2. **Candidates and re-rank.** :func:`_scored_candidates` drops null
+   vectors, equi-joins the exploded keys and scores each pair with the
+   exact cosine, in the join projection (``rerank="expr"``) or in the
+   Arrow fold scorer over a slim key join (``"arrow"``,
+   :func:`_arrow_scores`); ``"auto"`` picks from a counts-only fan-out
+   estimate (:func:`_resolve_rerank`). Both routes replay one left-fold
+   order, so their rows are bit-identical.
+   :func:`banded_scored_candidates` is the public banded face, shared
+   with the contrastive and bitext miners.
+3. **Rank.** :func:`rank_topk`: ``row_number`` per query over (score
+   desc, neighbor id asc), ``rank <= k``.
 
-Hyperplanes are generated driver-side from a seed and embedded as
-array literals — every executor evaluates the same projection with
-zero side channels.
+The brute-force operators need no keys: :func:`cosine_topk` scores
+every pair in the Arrow scorer and :func:`cosine_topk_quantized` runs
+int8 integer dots, both shipping the small query side through
+``sc.broadcast``. The bucketed store
+(:mod:`polars_text_spark.operators.ann_store`) persists the key and
+unit-vector stages and reuses :func:`rank_topk`.
+:func:`ann_recall_report` audits the approximate paths against the
+exact top-k. Planes and codebooks are built driver-side from a seed
+and embedded as literals: every executor evaluates the same
+projection with zero side channels.
 """
 
 from __future__ import annotations
@@ -535,53 +553,13 @@ def cosine_topk(
     Q-sized ever crosses the shuffle; the per-query Exchange ships
     3-scalar rows already capped at k by the partial
     WindowGroupLimit."""
-    from pyspark.sql import types as T
-
-    spark = vectors.sparkSession
-    qid_type = queries.schema[id_col].dataType
-    vid_type = vectors.schema[id_col].dataType
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
-    qrows = _collect_query_side(
-        q, max_query_rows, "cosine_topk query", vec_field="__qvec"
-    )
-    out_fields = [
-        T.StructField("query_id", qid_type),
-        T.StructField("neighbor_id", vid_type),
-        T.StructField("cosine", T.DoubleType()),
-        T.StructField("rank", T.IntegerType(), nullable=False),
-    ]
-    if not qrows:
-        return spark.createDataFrame([], T.StructType(out_fields))
-    qvecs = [
-        None if r["__qvec"] is None else _normalize_vec_py(list(r["__qvec"]))
-        for r in qrows
-    ]
-    qvecs_bc = spark.sparkContext.broadcast(qvecs)
-    v = vectors.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
-    )
-    dotted = v.mapInPandas(
-        _dots_map_fn(qvecs_bc, len(qvecs), "dots"),
-        schema=T.StructType(
-            [
-                T.StructField("neighbor_id", vid_type),
-                T.StructField("dots", T.ArrayType(T.DoubleType())),
-            ]
-        ),
-    )
-    # pos -> query_id through a constant-folded SINGLE array Literal
-    # (the bloom lesson: a literal, never a join-carried payload; one
-    # Literal node, never a Q-child CreateArray), cast so int-fitting
-    # ids don't narrow to array<int>
-    qid_arr = _array_lit([r["query_id"] for r in qrows], qid_type)
-    scored = dotted.select(
-        "neighbor_id", F.posexplode("dots").alias("pos", "cosine")
-    ).select(
-        F.element_at(qid_arr, F.col("pos") + 1).alias("query_id"),
-        "neighbor_id",
-        "cosine",
+    scored = _arrow_scores(
+        vectors,
+        queries,
+        id_col=id_col,
+        vec_col=vec_col,
+        max_query_rows=max_query_rows,
+        what="cosine_topk query",
     )
     if exclude_self:
         scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
@@ -732,12 +710,7 @@ def cosine_topk_quantized(
     )
     if exclude_self:
         scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k, "score")
 
 
 def _kmeans_fit(sample: np.ndarray, k: int, seed: int, iters: int = 10) -> np.ndarray:
@@ -798,12 +771,19 @@ def _train_vectors(
     ``count()`` is metadata-cheap on parquet; the 1.5x fraction gives
     headroom so the seeded trim below usually still fills
     ``train_sample`` — the Bernoulli draw is approximate and may
-    return slightly fewer rows (fine for codebook training)."""
+    return slightly fewer rows (fine for codebook training). Null
+    vectors are left out of the sample: they have no position to
+    train on (and the candidate stage drops them anyway)."""
     n_total = vectors.count()
     if n_total == 0:
         return np.empty((0, 0), dtype=np.float32)
     frac = min(1.0, (1.5 * train_sample) / n_total)
-    rows = vectors.select(vec_col).sample(fraction=frac, seed=seed).collect()
+    rows = (
+        vectors.select(vec_col)
+        .where(F.col(vec_col).isNotNull())
+        .sample(fraction=frac, seed=seed)
+        .collect()
+    )
     mat = np.array([np.asarray(r[0], dtype=np.float32) for r in rows])
     if len(mat) > train_sample:
         # a limit() here would re-bias toward early partitions; trim
@@ -847,10 +827,6 @@ def cosine_topk_ivf(
     ``n_lists`` regime a grown corpus hits by accident routes to
     arrow automatically; two extra count jobs, nothing else.
     """
-    if rerank not in ("expr", "arrow", "auto"):
-        raise ValueError(
-            f"rerank must be 'expr', 'arrow' or 'auto', got {rerank!r}"
-        )
     sample = _train_vectors(vectors, vec_col, train_sample, seed)
     if len(sample) == 0:
         # Empty vectors table: degenerate to an empty result with the
@@ -879,73 +855,24 @@ def cosine_topk_ivf(
         n_lists = max(1, int(np.sqrt(len(sample))))
     n_lists = min(n_lists, len(sample))
     nprobe = min(nprobe, n_lists)
-    if rerank == "auto":
-        n_v = vectors.where(F.col(vec_col).isNotNull()).count()
-        n_q = queries.where(F.col(vec_col).isNotNull()).count()
-        rerank = _auto_rerank(
-            n_v * n_q * nprobe / n_lists, n_q, 65536
-        )
     centroids = _kmeans_fit(sample, n_lists, seed)
-
-    assign_one = _nearest_centroids_udf(centroids, 1)
-    probe_many = _nearest_centroids_udf(centroids, nprobe)
-
-    if rerank == "arrow":
-        vnn = vectors.where(F.col(vec_col).isNotNull())
-        qnn = queries.where(F.col(vec_col).isNotNull())
-        v_keys = vnn.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.explode(assign_one(F.col(vec_col))).alias("list_id"),
-        )
-        q_keys = qnn.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(probe_many(F.col(vec_col))).alias("list_id"),
-        )
-        # each vector lives in exactly ONE list and a query's probed
-        # lists are distinct, so (query_id, neighbor_id) is already
-        # unique — no dedup exchange
-        cands = v_keys.join(q_keys, "list_id").select(
-            "query_id", "neighbor_id"
-        )
-        if exclude_self:
-            cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-        scored = _arrow_candidate_scores(
-            vnn, qnn, cands, id_col=id_col, vec_col=vec_col
-        )
-        return rank_topk(scored, k)
-
-    v = with_l2_normalized(
-        vectors.select(F.col(id_col).alias("neighbor_id"), vec_col), vec_col, "__vvec"
-    ).select(
-        "neighbor_id",
-        "__vvec",
-        F.explode(assign_one(F.col(vec_col))).alias("list_id"),
+    vec = F.col(vec_col)
+    # each vector lives in exactly ONE list and a query's probed lists
+    # are distinct: one_key skips the dedup exchange; the expected
+    # fan-out per pair is nprobe / n_lists (exact for balanced lists)
+    scored = _scored_candidates(
+        vectors,
+        queries,
+        _nearest_centroids_udf(centroids, 1)(vec),
+        _nearest_centroids_udf(centroids, nprobe)(vec),
+        id_col=id_col,
+        vec_col=vec_col,
+        exclude_self=exclude_self,
+        rerank=rerank,
+        pair_rate=nprobe / n_lists,
+        one_key=True,
     )
-    q = with_l2_normalized(
-        queries.select(F.col(id_col).alias("query_id"), vec_col), vec_col, "__qvec"
-    ).select(
-        "query_id",
-        "__qvec",
-        F.explode(probe_many(F.col(vec_col))).alias("list_id"),
-    )
-    # each vector lives in exactly ONE list (assign_one) and a query's
-    # probed lists are distinct, so (query_id, neighbor_id) is already
-    # unique — the dedup this used to do was a pure Exchange of
-    # vector-carrying rows (2 x dim doubles per candidate) for nothing
-    cands = v.join(q, "list_id")
-    if exclude_self:
-        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k)
 
 
 def cosine_topk_ivf_kmeans(
@@ -984,22 +911,6 @@ def cosine_topk_ivf_kmeans(
         k=n_lists, iterations=iterations, decimals=decimals,
     )
     nprobe = min(nprobe, len(centroids))
-
-    v = (
-        with_l2_normalized(
-            vectors.select(F.col(id_col).alias("neighbor_id"), vec_col),
-            vec_col,
-            "__vvec",
-        )
-        .select("neighbor_id", "__vvec")
-        .join(
-            assign.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col("cluster").alias("list_id"),
-            ),
-            "neighbor_id",
-        )
-    )
     # nprobe nearest lists per query: sort (dist, cid) structs — array
     # sort is lexicographic, so ties resolve to the smaller list id,
     # matching the oracle's ORDER BY d, cid
@@ -1016,29 +927,23 @@ def cosine_topk_ivf_kmeans(
     probes = F.transform(
         F.slice(F.array_sort(dc), 1, nprobe), lambda s: s.getField("cid")
     )
-    q = with_l2_normalized(
-        queries.select(F.col(id_col).alias("query_id"), vec_col),
-        vec_col,
-        "__qvec",
-    ).select(
-        "query_id", "__qvec", F.explode(probes).alias("list_id")
+    # each vector lives in exactly ONE list (its k-means cluster) and
+    # a query's probes are distinct: no dedup exchange
+    keyed = vectors.join(
+        assign.select(id_col, F.col("cluster").alias("__list")), id_col
     )
-    # each vector lives in exactly ONE list and probes are distinct,
-    # so (query_id, neighbor_id) is already unique — no dedup needed
-    cands = v.join(q, "list_id")
-    if exclude_self:
-        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
+    scored = _scored_candidates(
+        keyed,
+        queries,
+        F.array("__list"),
+        probes,
+        id_col=id_col,
+        vec_col=vec_col,
+        exclude_self=exclude_self,
+        rerank="expr",
+        one_key=True,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(scored, k)
 
 
 def ann_recall_report(
@@ -1113,19 +1018,40 @@ def _hyperplanes(dim: int, num_planes: int, seed: int) -> np.ndarray:
     return rng.standard_normal((num_planes, dim))
 
 
-def _signature_bits(vec_col, planes: np.ndarray):
-    """One sign bit per hyperplane, as built-in expressions."""
-    v = vec_col.cast("array<double>")
-    bits = []
-    for plane in planes:
-        lits = F.array(*[F.lit(float(x)) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(v, lits, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+def _band_keys(vec_col, planes, bands: int):
+    """``array<string>`` of band bucket keys from a plane matrix: one
+    sign bit per plane (``1`` when the left-fold dot
+    ``aggregate(zip_with(v, plane, *), 0.0, +)`` is ``>= 0``; a null
+    dot reads ``0``), ``len(planes) // bands`` bits per band, each key
+    ``"<band>:<bits>"``.
+
+    The whole key array is ONE parsed SQL lambda bound to the vector
+    (the :func:`~polars_text_spark.plans.exprs.let` shape): every
+    plane is a DOUBLE array literal in the SQL text (``repr``
+    round-trips a float exactly) and every ``zip_with``/``aggregate``
+    lambda is SQL too, so a build costs one parse instead of a few
+    Py4J calls per plane element and per lambda."""
+    r = len(planes) // bands
+
+    def bit(plane) -> str:
+        lits = ", ".join(f"{float(x)!r}D" for x in plane)
+        return (
+            f"CASE WHEN aggregate(zip_with(v, array({lits}), "
+            "(x, y) -> x * y), 0.0D, (acc, x) -> acc + x) >= 0 "
+            "THEN '1' ELSE '0' END"
         )
-        bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)))
-    return bits
+
+    keys = ", ".join(
+        f"concat_ws('', '{b}', ':', "
+        + ", ".join(bit(p) for p in planes[b * r : (b + 1) * r])
+        + ")"
+        for b in range(bands)
+    )
+    return F.call_function(
+        "transform",
+        F.array(vec_col.cast("array<double>")),
+        F.expr(f"v -> array({keys})"),
+    )[0]
 
 
 def lsh_band_keys(
@@ -1147,17 +1073,7 @@ def lsh_band_keys(
     candidates bounded; the re-rank A/B in SCALING.md round-12
     measures what under-provisioned bands cost and `rerank="arrow"`
     is the mitigation when re-provisioning isn't possible."""
-    planes = _hyperplanes(dim, num_planes, seed)
-    bits = _signature_bits(vec_col, planes)
-    rows_per_band = num_planes // bands
-    keys = []
-    for b in range(bands):
-        chunk = bits[b * rows_per_band : (b + 1) * rows_per_band]
-        key = F.concat_ws(
-            "", F.lit(str(b)), F.lit(":"), *[c.cast("string") for c in chunk]
-        )
-        keys.append(key)
-    return F.array(*keys)
+    return _band_keys(vec_col, _hyperplanes(dim, num_planes, seed), bands)
 
 
 # Measured crossover for the re-rank route (SCALING.md round-12 re-rank
@@ -1202,108 +1118,122 @@ def _auto_rerank(
     return "arrow"
 
 
-def _auto_banded_rerank(
+def _resolve_rerank(
+    rerank: str,
     vectors: DataFrame,
     queries: DataFrame,
-    vec_col: str,
-    *,
-    num_planes: int,
-    bands: int,
-    max_query_rows: int = 65536,
+    pair_rate: float | None,
+    max_query_rows: int,
 ) -> str:
-    """Counts-only route estimate for the banded (LSH) paths:
-    ``est = n_v * n_q * (1 - (1 - 2^-r)^bands)`` with ``r`` bits per
-    band — per-pair collision probability under UNIFORM bucket
-    occupancy, which is a LOWER bound (clustering only concentrates
-    buckets and raises collisions), so auto errs toward the
-    expression route. The structural degenerate regime — bands too
-    narrow for the corpus (the accident a grown corpus hits, see
-    :func:`lsh_band_keys` sizing note) — is captured by the
-    parameters alone; DATA-driven skew on top of adequate bands is
-    not, which is what :func:`lsh_band_stats` audits (pass
-    ``rerank="arrow"`` explicitly when it reports hot buckets). Two
-    count jobs, nothing else touches the corpus."""
-    r = num_planes // bands
-    n_v = vectors.where(F.col(vec_col).isNotNull()).count()
-    n_q = queries.where(F.col(vec_col).isNotNull()).count()
-    collide = 1.0 - (1.0 - 2.0 ** -r) ** bands
-    return _auto_rerank(n_v * n_q * collide, n_q, max_query_rows)
+    """Validate ``rerank`` and resolve ``"auto"``: the one place either
+    happens. ``"auto"`` estimates the candidate fan-out as ``n_v * n_q
+    * pair_rate`` from two count jobs over the (null-free) sides and
+    routes through :func:`_auto_rerank`; ``pair_rate`` is the caller's
+    per-pair candidate probability, and a caller without one (None)
+    takes only ``"expr"`` or ``"arrow"``."""
+    modes = ("expr", "arrow") if pair_rate is None else ("expr", "arrow", "auto")
+    if rerank not in modes:
+        raise ValueError(
+            f"rerank must be one of {', '.join(map(repr, modes))}, "
+            f"got {rerank!r}"
+        )
+    if rerank != "auto":
+        return rerank
+    n_q = queries.count()
+    return _auto_rerank(vectors.count() * n_q * pair_rate, n_q, max_query_rows)
 
 
-def rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """The shared re-rank tail of every candidate-generation strategy:
-    ``row_number`` per query over ``(cosine desc, neighbor_id asc)``
-    (the deterministic tie-break), keep ``rank <= k``. One definition
-    so the rank contract cannot drift between operators."""
+def rank_topk(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """The shared rank tail of every top-k operator: ``row_number``
+    per query over ``(<score> desc, neighbor_id asc)`` (the
+    deterministic tie-break), keep ``rank <= k``. One definition so
+    the rank contract cannot drift between operators; the ``rank <=
+    k`` filter is what lets Spark push a partial WindowGroupLimit
+    below the per-query exchange (plan-tested for every family)."""
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+        F.col(score).desc(), F.col("neighbor_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= k
     )
 
 
-def _arrow_candidate_scores(
+def _arrow_scores(
     vectors: DataFrame,
     queries: DataFrame,
-    cands: DataFrame,
     *,
     id_col: str,
     vec_col: str,
-    max_query_rows: int = 65536,
+    max_query_rows: int,
+    what: str,
+    cands: DataFrame | None = None,
 ) -> DataFrame:
-    """Score a SLIM candidate-pair frame ``cands(query_id,
-    neighbor_id)`` with the Arrow fold scorer: ``(query_id,
-    neighbor_id, cosine)`` for exactly the candidate pairs, cosines
-    bit-identical to the expression path (``_fold_dot_batch`` replays
-    the normalize + left-fold dot order, the property the sha-twin
-    oracles pin).
+    """The Arrow dense scorer: ``(query_id, neighbor_id, cosine)`` for
+    every (query, vector) pair or, given a SLIM candidate-pair frame
+    ``cands(query_id, neighbor_id)``, for exactly the candidate pairs.
+    Cosines are bit-identical to the expression path
+    (:func:`_fold_dot_batch` replays the normalize + left-fold dot
+    order, the property the sha-twin oracles pin).
 
-    The high-fan-out re-rank shape (see SCALING.md round-12 A/B): the
-    candidate join carries NO vector payload — band/list keys join
-    3-scalar rows — and each candidate-bearing scan vector crosses into
-    the Arrow pass ONCE (left-semi join on the candidate neighbor set)
-    where it scores against ALL queries vectorized; the final inner
-    join keeps candidate pairs. Per scored row the waste is the
-    non-candidate queries' dots — numpy throughput makes that cheaper
-    than one interpreted HOF dot per pair as soon as fan-out is
-    non-trivial; at toy candidate counts the fixed query collect +
-    Python-worker exchange dominates instead, which is why the
-    expression path stays the default."""
+    The query side is collected RAW under the row and byte budget
+    (:func:`_collect_query_side`, ``what`` names it in the error),
+    fold-exact-normalized driver-side and shipped once per executor
+    through ``sc.broadcast``. Vectors enter :func:`_dots_map_fn` raw;
+    each emits its Q dots as one array, exploded JVM-side in the same
+    stage and mapped back to query ids through one array literal
+    (:func:`_array_lit`). An empty query side returns an empty frame
+    without touching ``vectors``.
+
+    With ``cands`` (the high-fan-out re-rank shape, SCALING.md
+    round-12 A/B) the key join upstream carries no vector payload,
+    each candidate-bearing vector crosses into the Arrow pass ONCE
+    (left-semi join on the candidate neighbor set) where it scores
+    against ALL queries, and the final inner join keeps the candidate
+    pairs. Per scored row the waste is the non-candidate queries'
+    dots: numpy throughput makes that cheaper than one interpreted
+    HOF dot per pair once fan-out is non-trivial; at toy candidate
+    counts the fixed query collect and Python-worker exchange dominate
+    instead, which is why the expression re-rank stays the default."""
     from pyspark.sql import types as T
-
-    from polars_text_spark.persist import track_persist
 
     spark = vectors.sparkSession
     qid_type = queries.schema[id_col].dataType
     vid_type = vectors.schema[id_col].dataType
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
     qrows = _collect_query_side(
-        q, max_query_rows, "arrow re-rank query", vec_field="__qvec"
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+        ),
+        max_query_rows,
+        what,
+        vec_field="__qvec",
     )
-    out_fields = [
-        T.StructField("query_id", qid_type),
-        T.StructField("neighbor_id", vid_type),
-        T.StructField("cosine", T.DoubleType()),
-    ]
     if not qrows:
-        return spark.createDataFrame([], T.StructType(out_fields))
+        return spark.createDataFrame(
+            [],
+            T.StructType(
+                [
+                    T.StructField("query_id", qid_type),
+                    T.StructField("neighbor_id", vid_type),
+                    T.StructField("cosine", T.DoubleType()),
+                ]
+            ),
+        )
     qvecs = [
         None if r["__qvec"] is None else _normalize_vec_py(list(r["__qvec"]))
         for r in qrows
     ]
     qvecs_bc = spark.sparkContext.broadcast(qvecs)
-    # consumed twice: the neighbor semi-join and the final pair join
-    cands = track_persist(cands.persist())
     v = vectors.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
-    ).join(
-        cands.select(F.col("neighbor_id").alias("__id")),
-        "__id",
-        "left_semi",
     )
+    if cands is not None:
+        # consumed twice: the neighbor semi-join and the final pair join
+        cands = track_persist(cands.persist())
+        v = v.join(
+            cands.select(F.col("neighbor_id").alias("__id")),
+            "__id",
+            "left_semi",
+        )
     dotted = v.mapInPandas(
         _dots_map_fn(qvecs_bc, len(qvecs), "dots"),
         schema=T.StructType(
@@ -1313,6 +1243,7 @@ def _arrow_candidate_scores(
             ]
         ),
     )
+    # cast so int-fitting ids don't narrow to array<int>
     qid_arr = _array_lit([r["query_id"] for r in qrows], qid_type)
     scored = dotted.select(
         "neighbor_id", F.posexplode("dots").alias("pos", "cosine")
@@ -1321,7 +1252,106 @@ def _arrow_candidate_scores(
         "neighbor_id",
         "cosine",
     )
+    if cands is None:
+        return scored
     return scored.join(cands, ["query_id", "neighbor_id"])
+
+
+def _scored_candidates(
+    vectors: DataFrame,
+    queries: DataFrame,
+    v_keys,
+    q_keys,
+    *,
+    id_col: str,
+    vec_col: str,
+    exclude_self: bool,
+    rerank: str,
+    pair_rate: float | None = None,
+    one_key: bool = False,
+    max_query_rows: int = 65536,
+) -> DataFrame:
+    """THE candidate stage of every key-blocked top-k operator: explode
+    the vector-side key array ``v_keys`` and the query-side key array
+    ``q_keys`` (Columns over each side's rows), equi-join on the key,
+    score each surviving pair with the exact cosine — ``(query_id,
+    neighbor_id, cosine)``. LSH keys both sides with the same band
+    keys; IVF keys a vector by its list and a query by its probed
+    lists.
+
+    Null vectors are dropped on BOTH sides here, for every caller: a
+    null vector has no signature and no cosine.
+
+    A pair that shares several keys is scored once per shared key and
+    deduplicated after. ``one_key=True`` states that each vector
+    carries exactly ONE key and each query's keys are distinct, so
+    ``(query_id, neighbor_id)`` is already unique and the dedup
+    exchange is skipped.
+
+    ``rerank`` is validated and ``"auto"`` resolved by
+    :func:`_resolve_rerank` (``pair_rate`` feeds the estimate).
+    ``"expr"`` scores in the join projection; ``"arrow"`` joins slim
+    key rows and scores the candidates in the Arrow fold scorer
+    (:func:`_arrow_scores`, which needs a collectable query side).
+    Both routes return bit-identical rows."""
+    vectors = vectors.where(F.col(vec_col).isNotNull())
+    queries = queries.where(F.col(vec_col).isNotNull())
+    rerank = _resolve_rerank(rerank, vectors, queries, pair_rate, max_query_rows)
+    pair = ["query_id", "neighbor_id"]
+    if rerank == "arrow":
+        cands = (
+            vectors.select(
+                F.col(id_col).alias("neighbor_id"),
+                F.explode(v_keys).alias("__key"),
+            )
+            .join(
+                queries.select(
+                    F.col(id_col).alias("query_id"),
+                    F.explode(q_keys).alias("__key"),
+                ),
+                "__key",
+            )
+            .select(*pair)
+        )
+        if not one_key:
+            cands = cands.dropDuplicates(pair)
+        if exclude_self:
+            cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
+        return _arrow_scores(
+            vectors,
+            queries,
+            id_col=id_col,
+            vec_col=vec_col,
+            max_query_rows=max_query_rows,
+            what="arrow re-rank query",
+            cands=cands,
+        )
+    v = with_l2_normalized(vectors, vec_col, "__vvec").select(
+        F.col(id_col).alias("neighbor_id"),
+        "__vvec",
+        F.explode(v_keys).alias("__key"),
+    )
+    q = with_l2_normalized(queries, vec_col, "__qvec").select(
+        F.col(id_col).alias("query_id"),
+        "__qvec",
+        F.explode(q_keys).alias("__key"),
+    )
+    # Score in the JOIN PROJECTION, dedup the slim frame after: a pair
+    # colliding under several keys recomputes its (cheap, codegen'd)
+    # dot per collision, but the dropDuplicates exchange then moves 3
+    # scalars per row instead of two dim-sized vectors — at corpus
+    # scale the vector-carrying dedup shuffle is ~dim*16/24 x heavier
+    # and was the OOM in the sf0.1 full-corpus self-joins (contrastive
+    # / bitext). Duplicate rows agree exactly (the dot is a
+    # deterministic expression of the pair), so keeping any one is
+    # sound.
+    cands = v.join(q, "__key")
+    if exclude_self:
+        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = cands.select(
+        *pair, dot(F.col("__qvec"), F.col("__vvec")).alias("cosine")
+    )
+    return scored if one_key else scored.dropDuplicates(pair)
 
 
 def banded_scored_candidates(
@@ -1335,101 +1365,64 @@ def banded_scored_candidates(
     rerank: str = "expr",
     max_query_rows: int = 65536,
 ) -> DataFrame:
-    """Shared banding-OR-construction candidate stage: explode band
-    keys on both sides (``keys_fn(vec Column) -> array<string>``),
-    equi-join on the key, dedup, exact cosine per surviving pair —
-    ``(query_id, neighbor_id, cosine)``. Null vectors are dropped on
-    BOTH sides (a null vector has no meaningful signature and its
-    cosine is null). Consumed by the ANN top-k tail
-    (:func:`rank_topk`) and by the contrastive-triplet miner, which
-    derives positives AND hard negatives from ONE candidate shuffle.
-
-    ``rerank="arrow"`` routes the per-candidate scoring through the
-    Arrow fold scorer (:func:`_arrow_candidate_scores`): the band join
-    then carries NO vector payload and each candidate vector scores
-    once, vectorized — the high-fan-out shape (collapsed bands, large
-    query sets; A/B in SCALING.md round-12). It requires a
-    collectable query side (``max_query_rows`` + the byte budget);
-    outputs are bit-identical to the default expression path."""
-    if rerank not in ("expr", "arrow"):
-        raise ValueError(f"rerank must be 'expr' or 'arrow', got {rerank!r}")
-    if rerank == "arrow":
-        vnn = vectors.where(F.col(vec_col).isNotNull())
-        qnn = queries.where(F.col(vec_col).isNotNull())
-        v_keys = vnn.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.explode(keys_fn(F.col(vec_col))).alias("band_key"),
-        )
-        q_keys = qnn.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(keys_fn(F.col(vec_col))).alias("band_key"),
-        )
-        cands = (
-            v_keys.join(q_keys, "band_key")
-            .select("query_id", "neighbor_id")
-            .dropDuplicates(["query_id", "neighbor_id"])
-        )
-        if exclude_self:
-            cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-        return _arrow_candidate_scores(
-            vnn, qnn, cands,
-            id_col=id_col, vec_col=vec_col, max_query_rows=max_query_rows,
-        )
-    v = with_l2_normalized(
-        vectors.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("neighbor_id"), vec_col
-        ),
-        vec_col,
-        "__vvec",
-    ).select("neighbor_id", "__vvec", F.explode(keys_fn(F.col(vec_col))).alias("band_key"))
-    q = with_l2_normalized(
-        queries.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("query_id"), vec_col
-        ),
-        vec_col,
-        "__qvec",
-    ).select("query_id", "__qvec", F.explode(keys_fn(F.col(vec_col))).alias("band_key"))
-    # Score in the JOIN PROJECTION, dedup the slim frame after: a pair
-    # colliding in several bands recomputes its (cheap, codegen'd) dot
-    # per collision, but the dropDuplicates exchange then moves 3
-    # scalars per row instead of two dim-sized vectors — at corpus
-    # scale the vector-carrying dedup shuffle is ~dim*16/24 x heavier
-    # and was the OOM in the sf0.1 full-corpus self-joins (contrastive
-    # / bitext). Duplicate rows agree exactly (the dot is a
-    # deterministic expression of the pair), so keeping any one is
-    # sound.
-    cands = v.join(q, "band_key")
-    if exclude_self:
-        cands = cands.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        dot(F.col("__qvec"), F.col("__vvec")).alias("cosine"),
-    )
-    return scored.dropDuplicates(["query_id", "neighbor_id"])
-
-
-def _banded_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    keys_fn,
-    *,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    exclude_self: bool,
-    rerank: str = "expr",
-) -> DataFrame:
-    """Banding-OR-construction ANN: the shared candidate stage plus
-    the exact-cosine re-rank tail."""
-    scored = banded_scored_candidates(
+    """Banding-OR-construction candidates: the shared candidate stage
+    (:func:`_scored_candidates`) with ``keys_fn(vec Column) ->
+    array<string>`` keying both sides — ``(query_id, neighbor_id,
+    cosine)``, null vectors dropped on both sides. Consumed by the LSH
+    top-k operators (through :func:`rank_topk`), the bitext miner and
+    the contrastive-triplet miner, which derives positives AND hard
+    negatives from ONE candidate shuffle. ``rerank`` is ``"expr"`` or
+    ``"arrow"`` (bit-identical rows; see :func:`_arrow_scores`)."""
+    keys = keys_fn(F.col(vec_col))
+    return _scored_candidates(
         vectors,
         queries,
-        keys_fn,
+        keys,
+        keys,
         id_col=id_col,
         vec_col=vec_col,
         exclude_self=exclude_self,
         rerank=rerank,
+        max_query_rows=max_query_rows,
+    )
+
+
+def _lsh_topk(
+    vectors: DataFrame,
+    queries: DataFrame,
+    keys,
+    *,
+    k: int,
+    num_planes: int,
+    bands: int,
+    id_col: str,
+    vec_col: str,
+    exclude_self: bool,
+    rerank: str,
+) -> DataFrame:
+    """Banded ANN top-k: the band-key Column ``keys`` on both sides,
+    exact re-rank, :func:`rank_topk`.
+
+    ``rerank="auto"`` estimates the per-pair collision probability as
+    ``1 - (1 - 2^-r)^bands`` with ``r`` bits per band: exact under
+    UNIFORM bucket occupancy and a LOWER bound otherwise (clustering
+    only concentrates buckets), so auto errs toward the expression
+    route. The structural degenerate regime — bands too narrow for the
+    corpus (see the :func:`lsh_band_keys` sizing note) — is captured by
+    the parameters alone; data-driven skew on top of adequate bands is
+    not, which is what :func:`lsh_band_stats` audits (pass
+    ``rerank="arrow"`` explicitly when it reports hot buckets)."""
+    r = num_planes // bands
+    scored = _scored_candidates(
+        vectors,
+        queries,
+        keys,
+        keys,
+        id_col=id_col,
+        vec_col=vec_col,
+        exclude_self=exclude_self,
+        rerank=rerank,
+        pair_rate=1.0 - (1.0 - 2.0 ** -r) ** bands,
     )
     return rank_topk(scored, k)
 
@@ -1450,23 +1443,21 @@ def cosine_topk_lsh(
 ) -> DataFrame:
     """Approximate top-k: candidates from LSH band-bucket collisions,
     exact cosine re-rank. A vector colliding with a query in ANY band
-    is a candidate (standard banding OR-construction).
-    ``rerank="arrow"`` scores candidates in the Arrow fold scorer —
-    bit-identical output, the high-fan-out shape (see
-    :func:`banded_scored_candidates`); ``"auto"`` resolves the route
-    from the counts-only fan-out estimate
-    (:func:`_auto_banded_rerank`)."""
-    if rerank == "auto":
-        rerank = _auto_banded_rerank(
-            vectors, queries, vec_col, num_planes=num_planes, bands=bands
-        )
-    return _banded_topk(
+    is a candidate (standard banding OR-construction). Null vectors
+    are dropped on both sides. ``rerank="arrow"`` scores candidates in
+    the Arrow fold scorer — bit-identical output, the high-fan-out
+    shape (see :func:`_arrow_scores`); ``"auto"`` resolves the route
+    from the counts-only fan-out estimate (:func:`_lsh_topk`)."""
+    return _lsh_topk(
         vectors,
         queries,
-        lambda c: lsh_band_keys(
-            c, dim=dim, num_planes=num_planes, bands=bands, seed=seed
+        lsh_band_keys(
+            F.col(vec_col), dim=dim, num_planes=num_planes, bands=bands,
+            seed=seed,
         ),
         k=k,
+        num_planes=num_planes,
+        bands=bands,
         id_col=id_col,
         vec_col=vec_col,
         exclude_self=exclude_self,
@@ -1514,31 +1505,8 @@ def sha_band_keys(vec_col, *, dim: int, num_planes: int = 16, bands: int = 4):
             ),
         )
     )
-    bits = []
-    for j in range(num_planes):
-        # one parsed DOUBLE array literal per plane, not dim F.lit
-        # calls: those were dim x num_planes Py4J round-trips per build
-        signs = F.expr(
-            "array("
-            + ", ".join("1.0D" if _sha_sign(j, p) > 0 else "-1.0D" for p in range(dim))
-            + ")"
-        )
-        dotv = F.aggregate(
-            F.zip_with(v, signs, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dotv >= 0, F.lit(1)).otherwise(F.lit(0)))
-    rows_per_band = num_planes // bands
-    keys = []
-    for b in range(bands):
-        chunk = bits[b * rows_per_band : (b + 1) * rows_per_band]
-        keys.append(
-            F.concat_ws(
-                "", F.lit(str(b)), F.lit(":"), *[c.cast("string") for c in chunk]
-            )
-        )
-    return F.when(dim_ok, F.array(*keys)).otherwise(
+    planes = [[_sha_sign(j, p) for p in range(dim)] for j in range(num_planes)]
+    return F.when(dim_ok, _band_keys(vec_col, planes, bands)).otherwise(
         dim_err.cast("array<string>")
     )
 
@@ -1566,16 +1534,16 @@ def cosine_topk_lsh_sha(
     both sides (matching :func:`polars_text_spark.operators.ann_store.
     topk_from_store`, which is value-identical over the same corpus).
     ``rerank="auto"`` resolves the route from the counts-only fan-out
-    estimate (:func:`_auto_banded_rerank`)."""
-    if rerank == "auto":
-        rerank = _auto_banded_rerank(
-            vectors, queries, vec_col, num_planes=num_planes, bands=bands
-        )
-    return _banded_topk(
+    estimate (:func:`_lsh_topk`)."""
+    return _lsh_topk(
         vectors,
         queries,
-        lambda c: sha_band_keys(c, dim=dim, num_planes=num_planes, bands=bands),
+        sha_band_keys(
+            F.col(vec_col), dim=dim, num_planes=num_planes, bands=bands
+        ),
         k=k,
+        num_planes=num_planes,
+        bands=bands,
         id_col=id_col,
         vec_col=vec_col,
         exclude_self=exclude_self,

@@ -205,9 +205,7 @@ def q_bloom_store_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     words, drifted meta parameters, or a broken merge produce false
     negatives, which skip the confirm join and flip `in_reference`
     to false — the oracle's plain IN-subquery replay catches it."""
-    import atexit
     import os
-    import shutil
 
     from polars_text_spark.operators.bloom import (
         append_bloom_shard,
@@ -222,13 +220,7 @@ def q_bloom_store_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ref = docs.filter(F.col("doc_id") % 3 == 0)
     name = f"bloomgate_{os.getpid()}"
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for suffix in ("_words", "_meta"):
-        atexit.register(
-            shutil.rmtree, os.path.join(warehouse, name + suffix), True
-        )
+    _register_store_cleanup(spark, name)
     m_bits, n_hashes = bloom_params(ref.count(), 0.01)
     write_bloom_store(
         docs.filter(F.col("doc_id") % 6 == 0),
@@ -1691,7 +1683,7 @@ QUERIES["similarity_ann_recall"] = q_similarity_ann_recall
 )
 def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs within label blocks (exact,
-    SQL-checkable twin of the LSH-bucketed embedding_dup_pairs op).
+    SQL-checkable; label blocks stand in for LSH band keys).
     Vectors are L2-normalized per ROW before the join so the per-pair
     work is a single dot product."""
     from polars_text_spark.operators.similarity import dot, with_l2_normalized

@@ -109,23 +109,58 @@ def probe_id_clash(
     *,
     id_col: str,
 ):
-    """First shard id already present in ``standing`` (a bucketed
-    store's id column) or in the tombstone set ``ts``, else None.
+    """Why ``shard`` cannot be appended, as ``(id, where)`` for its
+    first offending id, else None: ``where`` is ``"shard"`` for an id
+    the shard repeats, ``"store"`` for one already present in
+    ``standing`` (a bucketed store's id column) and ``"tombstones"``
+    for one in the tombstone set ``ts``. Null ids are left to the
+    append's in-plan null guard.
 
-    Join direction matters at scale: the SHARD is the probe side
-    (semi-joined against the store), never broadcast — a web-scale
-    daily shard would blow the broadcast limit — and the standing
-    side is the id-bucketed store table, so its side of the join
-    reads co-located buckets without a shuffle; only the shard (the
-    O(shard) bound appends document) moves. The tombstone set is
-    checked with a broadcast build (deletion batches are small)."""
+    One pass answers both the repeat and the store question: the shard
+    left-joins the store's ids and groups on id, and a group with two
+    rows or a store hit clashes. Join direction matters at scale: the
+    SHARD is the probe side, never broadcast — a web-scale daily shard
+    would blow the broadcast limit — and the join is a sort-merge join
+    against the id-bucketed store table, so the store side reads
+    co-located buckets without a shuffle, only the shard (the O(shard)
+    bound appends document) moves, and the group-by reuses that id
+    partitioning instead of adding an exchange. The answer (the
+    smallest offender, store hits first) is read off a
+    ``DataFrame.observe`` metric of one pass over all partitions, not
+    a ``limit(1)`` collect, whose incremental take runs one job per
+    batch of post-shuffle partitions: on a landed shard the probe
+    stays at two jobs. The tombstone set is checked with a broadcast
+    build (deletion batches are small)."""
+    from pyspark.sql import Observation
+
     shard_ids = shard.select(F.col(id_col).alias("id"))
-    clash = (
-        shard_ids.join(standing.select("id"), "id", "left_semi")
-        .limit(1)
-        .collect()
+    stored = standing.select("id", F.lit(True).alias("__stored"))
+    seen = Observation()
+    (
+        shard_ids.join(stored.hint("shuffle_merge"), "id", "left")
+        .groupBy("id")
+        .agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.max("__stored").alias("__stored"),
+        )
+        .where(
+            F.col("id").isNotNull()
+            & ((F.col("__n") > 1) | F.col("__stored").isNotNull())
+        )
+        .observe(
+            seen,
+            F.min(
+                F.struct(F.col("__stored").isNull().alias("repeat"), "id")
+            ).alias("first"),
+        )
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
     )
-    if not clash and ts is not None:
+    first = seen.get["first"]
+    if first is not None:
+        return first["id"], ("shard" if first["repeat"] else "store")
+    if ts is not None:
         # a tombstoned id is still physically present (or about to be
         # anti-joined away at read time) — re-appending it before
         # purge_deleted would be silently swallowed by the read-time
@@ -135,7 +170,9 @@ def probe_id_clash(
             .limit(1)
             .collect()
         )
-    return clash[0]["id"] if clash else None
+        if clash:
+            return clash[0]["id"], "tombstones"
+    return None
 
 
 def novel_rows(
@@ -796,12 +833,14 @@ class IdKeyedStore:
         self, shard: DataFrame, name: str, *, id_col: str, payload_col: str
     ) -> None:
         """THE batch append gate: read the meta, probe the shard's ids
-        against the id table at the meta's generation and the pending
-        tombstones (:func:`probe_id_clash`), refuse, then append.
+        for repeats and against the id table at the meta's generation
+        and the pending tombstones (:func:`probe_id_clash`), refuse,
+        then append.
 
-        A duplicate id would double its rows in both tables, a
-        tombstoned one would be swallowed by the read-time anti-join
-        until purge. A null id never matches the probe, so it reads as
+        An id the shard repeats or the store already holds would
+        double its rows in both tables (a duplicate MinHash shingle row
+        double-counts every verified pair of that id), a tombstoned one
+        would be swallowed by the read-time anti-join until purge. A null id never matches the probe, so it reads as
         "no clash" and every retry would append it again. It is refused
         in-plan, like ``sha_band_keys``' dimension guard: the guard
         runs as the pinned stage fills, inside the bands write's first
@@ -818,11 +857,17 @@ class IdKeyedStore:
             id_col=id_col,
         )
         if clash is not None:
+            cid, where = clash
+            found = {
+                "shard": "appears more than once in the shard",
+                "store": f"already exists in {self.kind} store '{name}'",
+                "tombstones": f"already exists in {self.kind} store "
+                f"'{name}' (tombstoned awaiting purge)",
+            }[where]
             raise ValueError(
-                f"shard id {clash!r} already exists in {self.kind} store "
-                f"'{name}' (or is tombstoned awaiting purge); appending "
-                f"would duplicate its rows in the {'/'.join(self.suffixes)} "
-                "tables and corrupt every later answer over them"
+                f"shard id {cid!r} {found}; appending would duplicate its "
+                f"rows in the {'/'.join(self.suffixes)} tables and corrupt "
+                "every later answer over them"
             )
         ids = F.col(id_col)
         null_id = F.raise_error(F.lit(

@@ -492,6 +492,24 @@ def test_append_refuses_null_id(spark, corpus, sf_dir, tmp_path, store):
     assert _table_state(spark, tables) == before
 
 
+@pytest.mark.parametrize("store", ["minhash", "ann"])
+def test_append_refuses_repeated_id(spark, corpus, sf_dir, tmp_path, store):
+    """A shard that repeats an id within itself clashes like one that
+    repeats a stored id: a duplicate id-table row double-counts every
+    pair (MinHash) or neighbor (ANN) of that id. The gate refuses it
+    before either table changes."""
+    name = f"{store}_append_repeat"
+    rows, key, tables, _, append = _id_keyed_store(
+        spark, corpus, sf_dir, store, name
+    )
+    odd = rows.filter(F.col(key) % 2 == 1)
+    shard = _landed(spark, odd.unionByName(odd.limit(1)), str(tmp_path / "shard"))
+    before = _table_state(spark, tables)
+    with pytest.raises(ValueError, match="more than once in the shard"):
+        append(shard)
+    assert _table_state(spark, tables) == before
+
+
 # Spark jobs per call. The first call after a fresh store write reads
 # the meta log once ("sink"); later calls find the log unchanged and
 # run only the two table writes ("warm", "append").
