@@ -55,6 +55,7 @@ def write_bucketed(
     buckets: int,
     sort_by: str | list[str] | None = None,
     mode: str = "overwrite",
+    _prepartitioned: bool = False,
 ) -> None:
     """Persist ``df`` as a bucketed (and optionally sorted) table.
 
@@ -74,11 +75,18 @@ def write_bucketed(
     (appends land as one fragment per bucket instead of one per input
     partition). Skew note: a hot bucket serializes into one task — at
     production scale pick ``buckets`` >> cores so hash spreading, not
-    this repartition, bounds task size."""
+    this repartition, bounds task size.
+
+    ``_prepartitioned`` skips the repartition. Its one caller is
+    :meth:`IdKeyedStore.append_rows`' id-table write: that frame is
+    the append's pinned stage, already hash-partitioned by id into
+    ``buckets`` partitions, but the lazy local checkpoint hides the
+    layout from the planner, which would shuffle it again."""
     keys = [bucket_by] if isinstance(bucket_by, str) else list(bucket_by)
     if mode == "overwrite":
         clear_table(df.sparkSession, table)
-    df = df.repartition(buckets, *[F.col(k) for k in keys])
+    if not _prepartitioned:
+        df = df.repartition(buckets, *[F.col(k) for k in keys])
     writer = df.write.format("parquet").mode(mode).bucketBy(buckets, *keys)
     if sort_by is not None:
         sort_keys = [sort_by] if isinstance(sort_by, str) else list(sort_by)
@@ -189,8 +197,13 @@ def novel_rows(
     append raises on a clash, a redelivered micro-batch drops its
     already-stored ids instead. A tombstoned id is not novel until
     purged: the read-time anti-join would swallow it. Same join
-    directions: the batch probes the id-bucketed store shuffle-free,
-    the tombstones are broadcast.
+    directions: the store side is a sort-merge join (hinted, so the
+    planner never broadcasts the whole id column, at any store size)
+    that reads the id-bucketed store's buckets in place, with no
+    Exchange; the batch side is shuffled onto the store's buckets
+    unless the caller already hash-partitioned it by id into the
+    bucket count (:meth:`IdKeyedStore.sink` does). The tombstones are
+    broadcast.
 
     The append that follows writes into the table this plan
     anti-joined, so the filter must run exactly once, before its own
@@ -202,7 +215,9 @@ def novel_rows(
     it reads as novel on every delivery: callers drop null ids first
     (:meth:`IdKeyedStore.sink` does)."""
     novel = batch.join(
-        standing.select(F.col("id").alias(id_col)), id_col, "left_anti"
+        standing.select(F.col("id").alias(id_col)).hint("shuffle_merge"),
+        id_col,
+        "left_anti",
     )
     if ts is not None:
         novel = novel.join(
@@ -773,6 +788,14 @@ def check_generation_unchanged(
 # ---------------------------------------------------------------------------
 
 
+def _by_id(rows: DataFrame, meta, id_col: str) -> DataFrame:
+    """``rows`` hash-partitioned by ``id_col`` into the store's bucket
+    count: the input contract of :meth:`IdKeyedStore.append_rows`.
+    ``repartition``'s hash is bucketing's hash, so partition ``i``
+    holds exactly the rows of bucket ``i``."""
+    return rows.repartition(int(meta["buckets"]), F.col(id_col))
+
+
 @dataclass(frozen=True)
 class IdKeyedStore:
     """One kind of id-keyed store: the hooks it supplies, and the
@@ -847,7 +870,12 @@ class IdKeyedStore:
         job, which fails before any file is committed. So the refusal
         costs no job and leaves the probe's plan (and its pushed-down
         filters) alone; it surfaces as a Spark error carrying the
-        message."""
+        message.
+
+        The shard reaches the append body hash-partitioned by id into
+        the store's bucket count, like the sink's batch
+        (:func:`_by_id`): the body's one input contract. The id-table
+        write reuses that exchange instead of repartitioning."""
         spark = shard.sparkSession
         meta = self.append_meta(spark, name)
         clash = probe_id_clash(
@@ -876,7 +904,7 @@ class IdKeyedStore:
             "matched by the clash probe, so every retry would append it "
             "again. Drop or assign null ids before appending"
         ))
-        guarded = shard.withColumn(
+        guarded = _by_id(shard, meta, id_col).withColumn(
             id_col, F.when(ids.isNull(), null_id).otherwise(ids)
         )
         self.append_rows(guarded, name, meta, id_col=id_col, payload_col=payload_col)
@@ -886,6 +914,9 @@ class IdKeyedStore:
     ) -> None:
         """THE append body behind the batch gate and the stream sink:
         append ``rows``, whose ids are proven new, under ``meta``.
+        Both callers hand it ``rows`` hash-partitioned by id into the
+        store's bucket count (:func:`_by_id`), so partition ``i`` holds
+        exactly bucket ``i``'s rows.
 
         Write order is BANDS FIRST, the id table last, and both callers
         decide an id's presence on the id table. A crash between the
@@ -909,15 +940,20 @@ class IdKeyedStore:
         rows are the small side by contract, so the pin is bounded.
         The pinned stage holds one row per id, so ``project`` may
         derive each row's band keys row-wise (MinHash does: no
-        ``groupBy(id)`` exchange in the bands write).
+        ``groupBy(id)`` exchange in the bands write). Its partitions
+        are the input's, i.e. the buckets, so the id table, projected
+        row-wise from the pin, is written without
+        :func:`write_bucketed`'s repartition: one file per bucket,
+        and no second shuffle of the batch.
 
-        Jobs: the two table writes (each its AQE shuffle-map stages
-        plus the write) and nothing else while the meta log is
-        unchanged — neither the caller's meta read nor the post-write
-        generation check collects the log on a memo hit
-        (:func:`read_meta`). A MinHash stream micro-batch runs 6 jobs
-        in that steady state; the first read after a meta write
-        collects once more."""
+        Jobs: the input's id exchange, the bands exchange (which fills
+        the pin), the bands write and the id-table write, and nothing
+        else while the meta log is unchanged — neither the caller's
+        meta read nor the post-write generation check collects the log
+        on a memo hit (:func:`read_meta`). A MinHash or ANN stream
+        micro-batch runs 4 jobs in that steady state, 5 on the first
+        read after a meta write; the batch gate adds its clash probe's
+        two."""
         gen, buckets = meta_gen(meta), int(meta["buckets"])
         bands_tbl, ids_tbl = (phys_table(name, s, gen) for s in self.suffixes)
         staged = self.stage(rows, meta, id_col, payload_col)
@@ -927,7 +963,7 @@ class IdKeyedStore:
         write_bucketed(bands, bands_tbl, bucket_by=keys, buckets=buckets,
                        sort_by=keys, mode="append")
         write_bucketed(ids, ids_tbl, bucket_by="id", buckets=buckets,
-                       sort_by="id", mode="append")
+                       sort_by="id", mode="append", _prepartitioned=True)
         check_generation_unchanged(rows.sparkSession, name, gen)
 
     def sink(self, name: str, *, id_col: str, payload_col: str, bootstrap):
@@ -940,7 +976,7 @@ class IdKeyedStore:
         Data tables without meta are generation 0 (generations
         postdate the meta table), and the append gate refuses them: a
         bootstrap would sweep their standing rows. Otherwise the batch
-        passes the append's meta gate, and :func:`novel_rows` drops ids
+        passes the append's meta gate, and :meth:`_novel` drops ids
         already stored or tombstoned, lazily, inside
         :meth:`append_rows`: the sink is idempotent under at-least-once
         delivery."""
@@ -950,20 +986,31 @@ class IdKeyedStore:
             spark = batch_df.sparkSession
             batch = batch_df.filter(
                 F.col(payload_col).isNotNull() & F.col(id_col).isNotNull()
-            ).dropDuplicates([id_col])
+            )
             if not any(spark.catalog.tableExists(t) for t in tables):
-                bootstrap(batch)
+                bootstrap(batch.dropDuplicates([id_col]))
                 return
             meta = self.append_meta(spark, name)
-            novel = novel_rows(
-                batch,
-                spark.table(phys_table(name, self.suffixes[1], meta_gen(meta))),
-                read_tombstones(spark, name),
-                id_col=id_col,
-            )
+            novel = self._novel(batch, name, meta, id_col=id_col)
             self.append_rows(novel, name, meta, id_col=id_col, payload_col=payload_col)
 
         return ingest
+
+    def _novel(self, batch: DataFrame, name: str, meta, *, id_col: str) -> DataFrame:
+        """The sink's novelty frame: one row per id of ``batch`` whose
+        id is new to the store at ``meta``'s generation, lazily. ONE
+        exchange moves the batch: the hash partitioning by id into the
+        store's bucket count (:func:`_by_id`). The dedup reuses it, the
+        :func:`novel_rows` anti-join reads the id table's buckets
+        against it with no exchange on either side, and
+        :meth:`append_rows` writes the id table from it."""
+        spark = batch.sparkSession
+        return novel_rows(
+            _by_id(batch, meta, id_col).dropDuplicates([id_col]),
+            spark.table(phys_table(name, self.suffixes[1], meta_gen(meta))),
+            read_tombstones(spark, name),
+            id_col=id_col,
+        )
 
     def purge(self, spark: SparkSession, name: str) -> None:
         """Rewrite both tables with the tombstones anti-joined away

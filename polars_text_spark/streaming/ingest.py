@@ -19,24 +19,27 @@ redelivery becomes a no-op, not a poison pill.
 
 Both sinks run ONE body, ``IdKeyedStore.sink`` in
 ``sources/bucketing.py``, which hands that LAZY anti-joined frame
-straight to the same append body the batch ``append_*_shard`` uses:
-no separate novelty job runs. The append body pins its input with a
-lazy local checkpoint that fills during the bands write, so the
-filter runs once, against the store as it stood before the batch; a
-redelivered batch appends zero rows and writes no files. The store's
-meta log is read through a file-set-stamped memo
-(``bucketing.read_meta``), so the append gate and the post-write
-generation check run no job while no maintenance op has written it,
-and the MinHash bands are derived row-wise from the one-row-per-id
-stage: a novel MinHash micro-batch runs 6 Spark jobs, all of them the
-two table writes (one more when the meta log changed since the last
-read). The write order that makes a crash between the two table
-writes safe to redeliver is defined once, on that append body. Rows
-with a null id are dropped like rows with a null payload: the
-anti-join never matches a null id, so it would append again on every
-delivery. A store whose tables exist without a meta table (a crashed
-bootstrap, or a pre-meta store) is refused like the batch append
-refuses it, never re-bootstrapped over its standing rows.
+straight to the same append body the batch ``append_*_shard`` uses: no
+separate novelty job runs. The batch is exchanged once, by id into the
+store's bucket count; the dedup, the sort-merge anti-join against the
+id-bucketed store and the id-table write all reuse that partitioning.
+The append body pins its input with a lazy local checkpoint that fills
+during the bands write, so the filter runs once, against the store as
+it stood before the batch; a redelivered batch appends zero rows and
+writes no files. The store's meta log is read through a
+file-set-stamped memo (``bucketing.read_meta``), so the append gate
+and the post-write generation check run no job while no maintenance op
+has written it, and the MinHash bands are derived row-wise from the
+one-row-per-id stage: a novel MinHash or ANN micro-batch runs 4 Spark
+jobs, the id exchange, the bands exchange and the two table writes
+(one more when the meta log changed since the last read). The write
+order that makes a crash between the two table writes safe to
+redeliver is defined once, on that append body. Rows with a null id
+are dropped like rows with a null payload: the anti-join never matches
+a null id, so it would append again on every delivery. A store whose
+tables exist without a meta table (a crashed bootstrap, or a pre-meta
+store) is refused like the batch append refuses it, never
+re-bootstrapped over its standing rows.
 """
 
 from __future__ import annotations

@@ -5,6 +5,7 @@ and respect pending tombstones."""
 
 from __future__ import annotations
 
+import re
 from functools import partial
 
 import pytest
@@ -106,10 +107,11 @@ def _table_state(spark, tables):
 @pytest.mark.parametrize("store", ["minhash", "ann"])
 def test_sink_batch_budget_and_redelivery(spark, corpus, sf_dir, tmp_path, store):
     """One micro-batch through the sink body itself, on a static
-    batch read from parquet like a file-stream batch. A novel MinHash
-    batch stays on its job budget (the novelty filter is folded into
-    the append, no separate probe job); redelivering the same batch to
-    either store adds no row and no data file to either table."""
+    batch read from parquet like a file-stream batch. A novel batch
+    into either store stays on its job budget (the novelty filter is
+    folded into the append, no separate probe job); redelivering the
+    same batch to either store adds no row and no data file to either
+    table."""
     from polars_text_spark.operators.ann_store import write_ann_store
     from polars_text_spark.streaming.ingest import (
         ann_ingest_batch,
@@ -139,8 +141,7 @@ def test_sink_batch_budget_and_redelivery(spark, corpus, sf_dir, tmp_path, store
     batch = spark.read.parquet(src)
 
     jobs = _job_count(spark, lambda: sink(batch, 0), f"{name}-novel")
-    if store == "minhash":
-        assert jobs <= 7, f"novel micro-batch ran {jobs} jobs"
+    assert jobs <= 5, f"novel micro-batch ran {jobs} jobs"
     grown = _table_state(spark, tables)
     assert grown[tables[1]][0] == rows.count()
 
@@ -511,11 +512,12 @@ def test_append_refuses_repeated_id(spark, corpus, sf_dir, tmp_path, store):
 
 
 # Spark jobs per call. The first call after a fresh store write reads
-# the meta log once ("sink"); later calls find the log unchanged and
-# run only the two table writes ("warm", "append").
+# the meta log once ("sink"); later calls find the log unchanged. A
+# sink batch then runs the id exchange and the two table writes
+# ("warm"); a batch append adds its clash probe ("append").
 _JOB_BUDGETS = {
-    "minhash": {"sink": 7, "warm": 6, "append": 6},
-    "ann": {"sink": 7, "warm": 6, "append": 6},
+    "minhash": {"sink": 5, "warm": 4, "append": 6},
+    "ann": {"sink": 5, "warm": 4, "append": 6},
 }
 
 
@@ -539,3 +541,70 @@ def test_sink_and_append_job_budgets(spark, corpus, sf_dir, tmp_path, store):
     jobs = _job_count(spark, lambda: append(shard), f"{name}-append")
     assert jobs <= budget["append"], f"append ran {jobs} jobs"
     assert _table_state(spark, tables)[tables[1]][0] == rows.count()
+
+
+@pytest.mark.parametrize("store", ["minhash", "ann"])
+def test_sink_moves_a_batch_once(spark, corpus, sf_dir, tmp_path, store):
+    """A sink micro-batch is exchanged ONCE, by id into the store's
+    bucket count: the dedup and the novelty anti-join reuse that
+    partitioning, the store's id table reads its buckets in place (no
+    Exchange above its scan, and no broadcast of it at any size), and
+    the id-table write reuses it too, so each table gains at most one
+    data file per bucket."""
+    from polars_text_spark.operators.ann_store import ANN_STORE
+    from polars_text_spark.operators.dedup_store import MINHASH_STORE
+    from polars_text_spark.plans import explain_str
+    from polars_text_spark.sources.bucketing import read_meta
+
+    name = f"{store}_one_exchange"
+    rows, key, tables, sink, _ = _id_keyed_store(
+        spark, corpus, sf_dir, store, name
+    )
+    batch = _landed(spark, rows.filter(F.col(key) % 2 == 1), str(tmp_path / "b"))
+    kind = MINHASH_STORE if store == "minhash" else ANN_STORE
+    novel = kind._novel(batch, name, read_meta(spark, name), id_col=key)
+    plan = explain_str(novel, "simple")
+    assert "BroadcastExchange" not in plan, plan
+    lines = plan.splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(exchanges) == 1, plan
+    assert re.search(
+        rf"Exchange hashpartitioning\({key}#\d+L?, 4\)", lines[exchanges[0]]
+    ), plan
+    # the one exchange moves the batch; the id table is scanned bucketed
+    below = lines[exchanges[0] + 1]
+    assert "FileScan" in below and tables[1] not in below, plan
+    assert re.search(rf"{tables[1]}\[.*Bucketed: true", plan), plan
+
+    before = _table_state(spark, tables)
+    sink(batch, 0)
+    after = _table_state(spark, tables)
+    assert after[tables[1]][0] == rows.count()
+    for t in tables:
+        assert 0 < after[t][1] - before[t][1] <= 4, (t, before, after)
+
+
+def test_minhash_sink_batches_match_batch_store(spark, corpus):
+    """Two sink micro-batches, the first bootstrapping the store and
+    the second redelivering some of its ids, build the same store as
+    one batch write over their union: the same pairs and one shingle
+    row per id."""
+    from polars_text_spark.sources.bucketing import clear_table
+    from polars_text_spark.streaming.ingest import minhash_ingest_batch
+
+    name = "mh_sink_parity"
+    for t in ("meta", "bands", "shingles", "tombstones"):
+        clear_table(spark, f"{name}_{t}")
+    base = corpus.select("doc_id", "text").limit(32).localCheckpoint()
+    # exact copies under new ids: the pair set is never empty
+    docs = base.unionByName(
+        base.limit(8).withColumn("doc_id", F.col("doc_id") + 100_000)
+    )
+    sink = minhash_ingest_batch(name, buckets=4)
+    sink(docs.filter(F.col("doc_id") % 2 == 0), 0)
+    sink(docs.filter((F.col("doc_id") % 2 == 1) | (F.col("doc_id") % 4 == 0)), 1)
+
+    write_minhash_store(docs, f"{name}_ref", buckets=4)
+    got = _pairs(spark, name)
+    assert got and got == _pairs(spark, f"{name}_ref")
+    assert spark.table(f"{name}_shingles").count() == docs.count() == 40
