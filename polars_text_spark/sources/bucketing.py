@@ -20,7 +20,8 @@ from dataclasses import dataclass
 from functools import partial
 from typing import Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
@@ -108,124 +109,6 @@ def clear_table(spark: SparkSession, table: str) -> None:
 
 def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
-
-
-def probe_id_clash(
-    shard: DataFrame,
-    standing: DataFrame,
-    ts: DataFrame | None,
-    *,
-    id_col: str,
-):
-    """Why ``shard`` cannot be appended, as ``(id, where)`` for its
-    first offending id, else None: ``where`` is ``"shard"`` for an id
-    the shard repeats, ``"store"`` for one already present in
-    ``standing`` (a bucketed store's id column) and ``"tombstones"``
-    for one in the tombstone set ``ts``. Null ids are left to the
-    append's in-plan null guard.
-
-    One pass answers both the repeat and the store question: the shard
-    left-joins the store's ids and groups on id, and a group with two
-    rows or a store hit clashes. Join direction matters at scale: the
-    SHARD is the probe side, never broadcast — a web-scale daily shard
-    would blow the broadcast limit — and the join is a sort-merge join
-    against the id-bucketed store table, so the store side reads
-    co-located buckets without a shuffle, only the shard (the O(shard)
-    bound appends document) moves, and the group-by reuses that id
-    partitioning instead of adding an exchange. The answer (the
-    smallest offender, store hits first) is read off a
-    ``DataFrame.observe`` metric of one pass over all partitions, not
-    a ``limit(1)`` collect, whose incremental take runs one job per
-    batch of post-shuffle partitions: on a landed shard the probe
-    stays at two jobs. The tombstone set is checked with a broadcast
-    build (deletion batches are small)."""
-    from pyspark.sql import Observation
-
-    shard_ids = shard.select(F.col(id_col).alias("id"))
-    stored = standing.select("id", F.lit(True).alias("__stored"))
-    seen = Observation()
-    (
-        shard_ids.join(stored.hint("shuffle_merge"), "id", "left")
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.max("__stored").alias("__stored"),
-        )
-        .where(
-            F.col("id").isNotNull()
-            & ((F.col("__n") > 1) | F.col("__stored").isNotNull())
-        )
-        .observe(
-            seen,
-            F.min(
-                F.struct(F.col("__stored").isNull().alias("repeat"), "id")
-            ).alias("first"),
-        )
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-    first = seen.get["first"]
-    if first is not None:
-        return first["id"], ("shard" if first["repeat"] else "store")
-    if ts is not None:
-        # a tombstoned id is still physically present (or about to be
-        # anti-joined away at read time) — re-appending it before
-        # purge_deleted would be silently swallowed by the read-time
-        # anti-join, so it clashes too
-        clash = (
-            shard_ids.join(F.broadcast(ts), "id", "left_semi")
-            .limit(1)
-            .collect()
-        )
-        if clash:
-            return clash[0]["id"], "tombstones"
-    return None
-
-
-def novel_rows(
-    batch: DataFrame,
-    standing: DataFrame,
-    ts: DataFrame | None,
-    *,
-    id_col: str,
-) -> DataFrame:
-    """The rows of ``batch`` whose ids are in neither ``standing`` (a
-    bucketed store's id column) nor the tombstone set ``ts``, as a
-    LAZY frame: no job runs here. The at-least-once twin of
-    :func:`probe_id_clash` for the streaming sinks: where a batch
-    append raises on a clash, a redelivered micro-batch drops its
-    already-stored ids instead. A tombstoned id is not novel until
-    purged: the read-time anti-join would swallow it. Same join
-    directions: the store side is a sort-merge join (hinted, so the
-    planner never broadcasts the whole id column, at any store size)
-    that reads the id-bucketed store's buckets in place, with no
-    Exchange; the batch side is shuffled onto the store's buckets
-    unless the caller already hash-partitioned it by id into the
-    bucket count (:meth:`IdKeyedStore.sink` does). The tombstones are
-    broadcast.
-
-    The append that follows writes into the table this plan
-    anti-joined, so the filter must run exactly once, before its own
-    rows land. The append body (:meth:`IdKeyedStore.append_rows`)
-    guarantees it: it pins its input with a lazy local checkpoint
-    that fills during the bands write, before the id-keyed table is
-    touched. A redelivered batch is an append of zero rows, which
-    writes no files. A null id is never matched by the anti-join, so
-    it reads as novel on every delivery: callers drop null ids first
-    (:meth:`IdKeyedStore.sink` does)."""
-    novel = batch.join(
-        standing.select(F.col("id").alias(id_col)).hint("shuffle_merge"),
-        id_col,
-        "left_anti",
-    )
-    if ts is not None:
-        novel = novel.join(
-            F.broadcast(ts.select(F.col("id").alias(id_col))),
-            id_col,
-            "left_anti",
-        )
-    return novel
 
 
 def tombstone_ids(ids: DataFrame, name: str, *, id_col: str) -> None:
@@ -598,7 +481,7 @@ def rewrite_generation(
     the append's own post-write generation check
     (:func:`check_generation_unchanged`: the append raises
     conservatively) or step 6. Re-running a raced append is always
-    safe: id-keyed appends re-probe the clash check, Bloom appends
+    safe: id-keyed appends pass their id gate again, Bloom appends
     re-OR idempotently. A writer-free maintenance window remains the
     operationally clean choice, but a violation is always loud, never
     a silent loss."""
@@ -644,7 +527,7 @@ def rewrite_generation(
             "old generation is preserved (until the next maintenance "
             "sweep) for recovery; re-run the racing appends against "
             "the new generation (re-running is safe: id appends "
-            "re-probe the clash check, Bloom appends re-OR "
+            "pass their id gate again, Bloom appends re-OR "
             "idempotently)"
         )
     # the old generation's names are known exactly — a catalog-wide
@@ -754,9 +637,9 @@ def check_generation_unchanged(
     the new generation (the rewrite's file snapshot ran after the
     writes) or DROPPED with the old one (snapshot before). The append
     cannot tell which, so it raises conservatively; re-running it is
-    safe in both worlds — the id-clash probe reports already-exists
-    when the rows were carried, and re-ingests them when they were
-    lost (the bands-first write order plus candidate-pair dedup make
+    safe in both worlds — the append's id gate refuses the rows as
+    already existing when they were carried, and re-ingests them when
+    they were lost (the bands-first write order plus candidate-pair dedup make
     even a partially-carried shard re-appendable). The maintenance
     side independently aborts when files appear under its snapshot,
     so between the two checks a racing append is aborted-against,
@@ -772,7 +655,7 @@ def check_generation_unchanged(
             f"store '{name}': a maintenance cutover (generation "
             f"{gen_at_start} -> {now}) raced this append; the appended "
             "rows were carried or dropped with the old generation. "
-            "Re-run the append — an 'already exists' id-clash means "
+            "Re-run the append — an 'already exists' refusal means "
             "the rows were carried and no action is needed. Schedule "
             "maintenance in a writer-free window"
         )
@@ -855,59 +738,114 @@ class IdKeyedStore:
     def append(
         self, shard: DataFrame, name: str, *, id_col: str, payload_col: str
     ) -> None:
-        """THE batch append gate: read the meta, probe the shard's ids
-        for repeats and against the id table at the meta's generation
-        and the pending tombstones (:func:`probe_id_clash`), refuse,
-        then append.
+        """THE batch append gate: read the meta, then append the shard
+        through its id gate (:meth:`_guarded`), which refuses it if any
+        id is null, repeated within the shard, already in the id table
+        at the meta's generation or among the pending tombstones.
 
         An id the shard repeats or the store already holds would
         double its rows in both tables (a duplicate MinHash shingle row
         double-counts every verified pair of that id), a tombstoned one
-        would be swallowed by the read-time anti-join until purge. A null id never matches the probe, so it reads as
-        "no clash" and every retry would append it again. It is refused
-        in-plan, like ``sha_band_keys``' dimension guard: the guard
-        runs as the pinned stage fills, inside the bands write's first
-        job, which fails before any file is committed. So the refusal
-        costs no job and leaves the probe's plan (and its pushed-down
-        filters) alone; it surfaces as a Spark error carrying the
-        message.
+        would be swallowed by the read-time anti-join until purge, and
+        a null id never matches a stored one, so every retry would
+        append it again.
 
-        The shard reaches the append body hash-partitioned by id into
-        the store's bucket count, like the sink's batch
-        (:func:`_by_id`): the body's one input contract. The id-table
-        write reuses that exchange instead of repartitioning."""
+        The gate is in-plan, like ``sha_band_keys``' dimension guard: it
+        runs as the append's pinned stage fills, inside the bands
+        write's first job, which fails before any file is committed. So
+        the refusal costs no job of its own and moves the shard no
+        second time; its Spark error is re-raised here as a
+        ``ValueError`` carrying the message, which names AN offending
+        id (whichever row failed first), not a chosen one."""
         spark = shard.sparkSession
         meta = self.append_meta(spark, name)
-        clash = probe_id_clash(
-            shard,
-            spark.table(phys_table(name, self.suffixes[1], meta_gen(meta))),
-            read_tombstones(spark, name),
-            id_col=id_col,
-        )
-        if clash is not None:
-            cid, where = clash
-            found = {
-                "shard": "appears more than once in the shard",
-                "store": f"already exists in {self.kind} store '{name}'",
-                "tombstones": f"already exists in {self.kind} store "
-                f"'{name}' (tombstoned awaiting purge)",
-            }[where]
-            raise ValueError(
-                f"shard id {cid!r} {found}; appending would duplicate its "
-                f"rows in the {'/'.join(self.suffixes)} tables and corrupt "
-                "every later answer over them"
+        rows = self._guarded(shard, name, meta, id_col=id_col)
+        try:
+            self.append_rows(rows, name, meta, id_col=id_col, payload_col=payload_col)
+        except PySparkException as e:
+            msg = (e.getMessageParameters() or {}).get("errorMessage", "")
+            if (e.getCondition() != "USER_RAISED_EXCEPTION"
+                    or not msg.startswith(self._refusal_prefix(name))):
+                raise
+            raise ValueError(msg) from e
+
+    def _refusal_prefix(self, name: str) -> str:
+        return f"{self.kind} store '{name}': "
+
+    def _verdict(
+        self, rows: DataFrame, name: str, meta, *, id_col: str, repeats: bool
+    ) -> DataFrame:
+        """``rows`` (hash-partitioned by id, :func:`_by_id`) plus a
+        ``__why`` column saying why each row cannot be appended, lazily:
+        ``"null"`` for a null id, ``"tombstoned"`` for an id pending
+        purge, ``"stored"`` for one in the id table at ``meta``'s
+        generation and, with ``repeats``, ``"repeat"`` for an id
+        ``rows`` holds more than once. A null ``__why`` means novel.
+
+        The id table joins as a sort-merge join (hinted, so the planner
+        never broadcasts the store's id column, at any store size) that
+        reads its buckets in place against ``rows``' id partitioning: no
+        Exchange on either side. The repeat count is a window over that
+        same partitioning, and the tombstones (small by contract) are
+        broadcast. Only rows that are refused anyway can be duplicated
+        by the joins (a tombstone set may list an id twice)."""
+        spark = rows.sparkSession
+        cols, ids = rows.columns, F.col(id_col)
+        if repeats:
+            rows = rows.withColumn(
+                "__n", F.count(F.lit(1)).over(Window.partitionBy(id_col))
             )
-        ids = F.col(id_col)
-        null_id = F.raise_error(F.lit(
-            f"{self.kind} store '{name}': shard column '{id_col}' holds a "
-            "null id; store rows are keyed by id, and a null id is never "
-            "matched by the clash probe, so every retry would append it "
-            "again. Drop or assign null ids before appending"
-        ))
-        guarded = _by_id(shard, meta, id_col).withColumn(
-            id_col, F.when(ids.isNull(), null_id).otherwise(ids)
+        stored = spark.table(phys_table(name, self.suffixes[1], meta_gen(meta)))
+        rows = rows.join(
+            stored.select(F.col("id").alias(id_col), F.lit(True).alias("__stored"))
+            .hint("shuffle_merge"),
+            id_col, "left",
         )
-        self.append_rows(guarded, name, meta, id_col=id_col, payload_col=payload_col)
+        why = F.when(ids.isNull(), "null")
+        ts = read_tombstones(spark, name)
+        if ts is not None:
+            rows = rows.join(
+                F.broadcast(ts.select(F.col("id").alias(id_col),
+                                      F.lit(True).alias("__dead"))),
+                id_col, "left",
+            )
+            why = why.when(F.col("__dead"), "tombstoned")
+        why = why.when(F.col("__stored"), "stored")
+        if repeats:
+            why = why.when(F.col("__n") > 1, "repeat")
+        return rows.select(*cols, why.alias("__why"))
+
+    def _guarded(self, shard: DataFrame, name: str, meta, *, id_col: str) -> DataFrame:
+        """The batch gate's frame: ``shard`` hash-partitioned by id
+        (:func:`_by_id`, the one exchange that moves it), with the id of
+        every row :meth:`_verdict` refuses replaced by a ``raise_error``
+        carrying the refusal, lazily. The error fires when
+        :meth:`append_rows` evaluates the row, which is as its pin
+        fills, before either table is written."""
+        ids, why = F.col(id_col), F.col("__why")
+        where = self._refusal_prefix(name)
+        refusal = F.when(why == "null", F.lit(
+            f"{where}shard column '{id_col}' holds a null id; store rows "
+            "are keyed by id, and a null id never matches a stored one, so "
+            "every retry would append it again. Drop or assign null ids "
+            "before appending"
+        )).otherwise(F.concat(
+            F.lit(f"{where}shard id "),
+            ids.cast("string"),
+            F.when(why == "repeat", " appears more than once in the shard")
+            .when(why == "stored", " already exists in the store")
+            .otherwise(" already exists in the store (tombstoned awaiting "
+                       "purge)"),
+            F.lit(f"; appending would duplicate its rows in the "
+                  f"{'/'.join(self.suffixes)} tables and corrupt every "
+                  "later answer over them"),
+        ))
+        verdict = self._verdict(
+            _by_id(shard, meta, id_col), name, meta, id_col=id_col, repeats=True
+        )
+        return verdict.withColumn(
+            id_col, F.when(why.isNull(), ids).otherwise(F.raise_error(refusal))
+        ).drop("__why")
 
     def append_rows(
         self, rows: DataFrame, name: str, meta, *, id_col: str, payload_col: str
@@ -935,8 +873,9 @@ class IdKeyedStore:
         fills during the bands write's own job (``persist()`` would
         cost AQE a separate cache-building job) and feeds the id-table
         write: the stage (MinHash's tokenize pass) runs once, and so
-        does the sink's lazy novelty filter (:func:`novel_rows`),
-        against the id table as it stood before this append. Appended
+        does either caller's lazy id verdict (:meth:`_verdict`: the
+        sink's novelty filter, the batch gate's refusal), against the
+        id table as it stood before this append. Appended
         rows are the small side by contract, so the pin is bounded.
         The pinned stage holds one row per id, so ``project`` may
         derive each row's band keys row-wise (MinHash does: no
@@ -952,8 +891,8 @@ class IdKeyedStore:
         meta read nor the post-write generation check collects the log
         on a memo hit (:func:`read_meta`). A MinHash or ANN stream
         micro-batch runs 4 jobs in that steady state, 5 on the first
-        read after a meta write; the batch gate adds its clash probe's
-        two."""
+        read after a meta write. A batch append of a landed shard runs
+        the same 4: its id gate rides the input's id exchange."""
         gen, buckets = meta_gen(meta), int(meta["buckets"])
         bands_tbl, ids_tbl = (phys_table(name, s, gen) for s in self.suffixes)
         staged = self.stage(rows, meta, id_col, payload_col)
@@ -1001,16 +940,12 @@ class IdKeyedStore:
         id is new to the store at ``meta``'s generation, lazily. ONE
         exchange moves the batch: the hash partitioning by id into the
         store's bucket count (:func:`_by_id`). The dedup reuses it, the
-        :func:`novel_rows` anti-join reads the id table's buckets
-        against it with no exchange on either side, and
-        :meth:`append_rows` writes the id table from it."""
-        spark = batch.sparkSession
-        return novel_rows(
-            _by_id(batch, meta, id_col).dropDuplicates([id_col]),
-            spark.table(phys_table(name, self.suffixes[1], meta_gen(meta))),
-            read_tombstones(spark, name),
-            id_col=id_col,
-        )
+        :meth:`_verdict` joins read the id table's buckets against it
+        with no exchange on either side, and :meth:`append_rows` writes
+        the id table from it."""
+        deduped = _by_id(batch, meta, id_col).dropDuplicates([id_col])
+        verdict = self._verdict(deduped, name, meta, id_col=id_col, repeats=False)
+        return verdict.where(F.col("__why").isNull()).drop("__why")
 
     def purge(self, spark: SparkSession, name: str) -> None:
         """Rewrite both tables with the tombstones anti-joined away

@@ -14,15 +14,18 @@ be REDELIVERED after a driver restart, and a crawl stream can also
 redeliver the same document in two different batches. The batch-raise
 contract of ``append_minhash_shard`` (duplicate id = caller bug) is
 therefore wrong here; instead every batch is filtered to its NOVEL
-ids (anti-join against the store) and only the remainder appends —
-redelivery becomes a no-op, not a poison pill.
+ids and only the remainder appends — redelivery becomes a no-op, not
+a poison pill. Both faces read one id verdict
+(``IdKeyedStore._verdict``): the batch gate raises on a row it tags,
+the sink drops it.
 
 Both sinks run ONE body, ``IdKeyedStore.sink`` in
-``sources/bucketing.py``, which hands that LAZY anti-joined frame
+``sources/bucketing.py``, which hands that LAZY filtered frame
 straight to the same append body the batch ``append_*_shard`` uses: no
 separate novelty job runs. The batch is exchanged once, by id into the
-store's bucket count; the dedup, the sort-merge anti-join against the
-id-bucketed store and the id-table write all reuse that partitioning.
+store's bucket count; the dedup, the verdict's sort-merge join against
+the id-bucketed store and the id-table write all reuse that
+partitioning.
 The append body pins its input with a lazy local checkpoint that fills
 during the bands write, so the filter runs once, against the store as
 it stood before the batch; a redelivered batch appends zero rows and
@@ -35,8 +38,8 @@ jobs, the id exchange, the bands exchange and the two table writes
 (one more when the meta log changed since the last read). The write
 order that makes a crash between the two table writes safe to
 redeliver is defined once, on that append body. Rows with a null id
-are dropped like rows with a null payload: the anti-join never matches
-a null id, so it would append again on every delivery. A store whose
+are dropped like rows with a null payload: a null id never matches a
+stored one, so it would append again on every delivery. A store whose
 tables exist without a meta table (a crashed bootstrap, or a pre-meta
 store) is refused like the batch append refuses it, never
 re-bootstrapped over its standing rows.
@@ -483,8 +486,8 @@ def bloom_ingest_batch(
     later batch appends under the RECORDED meta (parameters cannot
     drift mid-stream). Idempotence under at-least-once delivery is
     structural here, stronger than the id-keyed stores' dedup logic:
-    re-delivering a batch re-ORs exactly the same bits, so no clash
-    probe is needed at all.
+    re-delivering a batch re-ORs exactly the same bits, so no id gate
+    is needed at all.
 
     A ``rebuild_bloom_store`` cutover racing a trigger is detected in
     EVERY interleaving (rounds 15-16, three checks): the rebuild's

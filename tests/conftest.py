@@ -37,17 +37,25 @@ def pytest_collection_modifyitems(config, items):
         return
     with open(manifest) as fh:
         slow = {line.strip() for line in fh if line.strip()}
+    # files selected by node id (``file.py::test``) were not collected
+    # whole: their unselected entries are not stale
+    here = config.invocation_params.dir
+    partial = {
+        os.path.realpath(os.path.join(here, arg.split("::")[0]))
+        for arg in config.args if "::" in arg
+    }
     seen, files = set(), set()
     for item in items:
         nodeid = item.nodeid
         if nodeid.startswith("tests/"):
             nodeid = nodeid[len("tests/"):]
-        files.add(nodeid.split("::")[0])
+        if os.path.realpath(item.path) not in partial:
+            files.add(nodeid.split("::")[0])
         if nodeid in slow:
             item.add_marker(pytest.mark.slow)
             seen.add(nodeid)
-    # an entry naming a test of a collected file that matches no item
-    # (renamed, deleted, or listed without its parameters) would
+    # an entry naming a test of a file collected whole that matches no
+    # item (renamed, deleted, or listed without its parameters) would
     # silently move that test between tiers
     stale = sorted(
         e for e in slow - seen if e.split("::")[0] in files

@@ -102,10 +102,11 @@ def test_append_racing_a_cutover_raises_loudly(spark, corpus, monkeypatch):
     writes must raise CONSERVATIVELY — it cannot know whether the
     cutover's snapshot carried its rows (snapshot after the writes,
     as injected here) or dropped them (snapshot before). The raise's
-    re-run instruction is safe in both worlds: the id-clash probe
-    reports already-exists when the rows were carried, and re-ingests
-    them when they were lost (bands-first write order + candidate
-    dedup make a partially-carried shard re-appendable too)."""
+    re-run instruction is safe in both worlds: the append's id gate
+    refuses the rows as already existing when they were carried, and
+    re-ingests them when they were lost (bands-first write order +
+    candidate dedup make a partially-carried shard re-appendable
+    too)."""
     base = corpus.filter(F.col("doc_id") % 4 != 0)
     shard = corpus.filter(F.col("doc_id") % 4 == 0).limit(10)
     write_minhash_store(base, "mh_race2", buckets=4)
@@ -140,7 +141,7 @@ def test_append_racing_a_cutover_raises_loudly(spark, corpus, monkeypatch):
         ).collect()
     }
     assert _pairs(spark, "mh_race2") == grown
-    # the re-run instruction is safe: the id-clash probe reports the
+    # the re-run instruction is safe: the append's id gate refuses the
     # carried rows instead of double-ingesting them
     with pytest.raises(ValueError, match="already exists"):
         append_minhash_shard(shard, "mh_race2")
@@ -486,7 +487,7 @@ def test_postflip_audit_catches_gap_append(spark, corpus, monkeypatch):
     # audit made loud): the store answers only over base
     assert _pairs(spark, "mh_gap") == before
     # re-running the raced append against the new generation is safe
-    # (the shard's rows are genuinely absent, so the clash probe
+    # (the shard's rows are genuinely absent, so the id gate
     # passes) and restores the full answer
     append_minhash_shard(shard, "mh_gap")
     direct = {

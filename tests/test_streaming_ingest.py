@@ -474,39 +474,53 @@ def test_sink_redelivery_drops_null_ids(spark, corpus, sf_dir, tmp_path, store):
     assert spark.table(tables[1]).filter(F.col("id").isNull()).count() == 0
 
 
+def _offending_shard(spark, rows, key, name, offender):
+    """The store's novel (odd) rows plus one offender of the kind
+    ``offender``: a second copy of a shard row, a stored row, a stored
+    row tombstoned awaiting purge, or a row under a null id."""
+    from polars_text_spark.sources.bucketing import tombstone_ids
+
+    odd, even = rows.filter(F.col(key) % 2 == 1), rows.filter(F.col(key) % 2 == 0)
+    if offender == "shard":
+        return odd.unionByName(odd.limit(1))
+    if offender == "null":
+        return _with_null_id(odd, key)
+    if offender == "tombstoned":
+        tombstone_ids(even.limit(1), name, id_col=key)
+    return odd.unionByName(even.limit(1))
+
+
+_REFUSALS = {
+    "shard": "appears more than once in the shard",
+    "stored": "already exists",
+    "tombstoned": "already exists.*tombstoned awaiting purge",
+    "null": "holds a\\s+null id",
+}
+
+
+@pytest.mark.parametrize("offender", list(_REFUSALS))
 @pytest.mark.parametrize("store", ["minhash", "ann"])
-def test_append_refuses_null_id(spark, corpus, sf_dir, tmp_path, store):
-    """The batch append gate refuses a shard carrying a null id with its
-    own message (the clash probe alone reads a null id as "no clash"),
-    and neither table changes."""
-    name = f"{store}_append_null_id"
+def test_append_refuses_repeated_id(
+    spark, corpus, sf_dir, tmp_path, store, offender
+):
+    """The batch append gate refuses a shard holding an id it repeats,
+    an id the store holds, an id tombstoned awaiting purge, or a null
+    id, each with its own message: a duplicate id-table row
+    double-counts every pair (MinHash) or neighbor (ANN) of that id, a
+    tombstoned one is swallowed at read time, and a null id never
+    matches a stored one, so every retry would append it again. The
+    refusal fires inside the append's first write job, and neither
+    table gains a row or a data file."""
+    name = f"{store}_append_{offender}"
     rows, key, tables, _, append = _id_keyed_store(
         spark, corpus, sf_dir, store, name
     )
     shard = _landed(
-        spark, _with_null_id(rows.filter(F.col(key) % 2 == 1), key),
+        spark, _offending_shard(spark, rows, key, name, offender),
         str(tmp_path / "shard"),
     )
     before = _table_state(spark, tables)
-    with pytest.raises(Exception, match="holds a\\s+null id"):
-        append(shard)
-    assert _table_state(spark, tables) == before
-
-
-@pytest.mark.parametrize("store", ["minhash", "ann"])
-def test_append_refuses_repeated_id(spark, corpus, sf_dir, tmp_path, store):
-    """A shard that repeats an id within itself clashes like one that
-    repeats a stored id: a duplicate id-table row double-counts every
-    pair (MinHash) or neighbor (ANN) of that id. The gate refuses it
-    before either table changes."""
-    name = f"{store}_append_repeat"
-    rows, key, tables, _, append = _id_keyed_store(
-        spark, corpus, sf_dir, store, name
-    )
-    odd = rows.filter(F.col(key) % 2 == 1)
-    shard = _landed(spark, odd.unionByName(odd.limit(1)), str(tmp_path / "shard"))
-    before = _table_state(spark, tables)
-    with pytest.raises(ValueError, match="more than once in the shard"):
+    with pytest.raises(ValueError, match=_REFUSALS[offender]):
         append(shard)
     assert _table_state(spark, tables) == before
 
@@ -514,10 +528,11 @@ def test_append_refuses_repeated_id(spark, corpus, sf_dir, tmp_path, store):
 # Spark jobs per call. The first call after a fresh store write reads
 # the meta log once ("sink"); later calls find the log unchanged. A
 # sink batch then runs the id exchange and the two table writes
-# ("warm"); a batch append adds its clash probe ("append").
+# ("warm"). A batch append of a landed shard runs the same jobs as a
+# warm batch: its id gate rides the id exchange ("append").
 _JOB_BUDGETS = {
-    "minhash": {"sink": 5, "warm": 4, "append": 6},
-    "ann": {"sink": 5, "warm": 4, "append": 6},
+    "minhash": {"sink": 5, "warm": 4, "append": 4},
+    "ann": {"sink": 5, "warm": 4, "append": 4},
 }
 
 
@@ -546,11 +561,13 @@ def test_sink_and_append_job_budgets(spark, corpus, sf_dir, tmp_path, store):
 @pytest.mark.parametrize("store", ["minhash", "ann"])
 def test_sink_moves_a_batch_once(spark, corpus, sf_dir, tmp_path, store):
     """A sink micro-batch is exchanged ONCE, by id into the store's
-    bucket count: the dedup and the novelty anti-join reuse that
+    bucket count: the dedup and the novelty verdict's joins reuse that
     partitioning, the store's id table reads its buckets in place (no
     Exchange above its scan, and no broadcast of it at any size), and
     the id-table write reuses it too, so each table gains at most one
-    data file per bucket."""
+    data file per bucket. The batch gate's guarded frame, the second
+    face of the same verdict, moves a shard the same single time: its
+    repeat count and store join add no exchange."""
     from polars_text_spark.operators.ann_store import ANN_STORE
     from polars_text_spark.operators.dedup_store import MINHASH_STORE
     from polars_text_spark.plans import explain_str
@@ -562,19 +579,20 @@ def test_sink_moves_a_batch_once(spark, corpus, sf_dir, tmp_path, store):
     )
     batch = _landed(spark, rows.filter(F.col(key) % 2 == 1), str(tmp_path / "b"))
     kind = MINHASH_STORE if store == "minhash" else ANN_STORE
-    novel = kind._novel(batch, name, read_meta(spark, name), id_col=key)
-    plan = explain_str(novel, "simple")
-    assert "BroadcastExchange" not in plan, plan
-    lines = plan.splitlines()
-    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
-    assert len(exchanges) == 1, plan
-    assert re.search(
-        rf"Exchange hashpartitioning\({key}#\d+L?, 4\)", lines[exchanges[0]]
-    ), plan
-    # the one exchange moves the batch; the id table is scanned bucketed
-    below = lines[exchanges[0] + 1]
-    assert "FileScan" in below and tables[1] not in below, plan
-    assert re.search(rf"{tables[1]}\[.*Bucketed: true", plan), plan
+    meta = read_meta(spark, name)
+    for face in (kind._novel, kind._guarded):
+        plan = explain_str(face(batch, name, meta, id_col=key), "simple")
+        assert "BroadcastExchange" not in plan, plan
+        lines = plan.splitlines()
+        exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+        assert len(exchanges) == 1, plan
+        assert re.search(
+            rf"Exchange hashpartitioning\({key}#\d+L?, 4\)", lines[exchanges[0]]
+        ), plan
+        # the one exchange moves the batch; the id table is scanned bucketed
+        below = lines[exchanges[0] + 1]
+        assert "FileScan" in below and tables[1] not in below, plan
+        assert re.search(rf"{tables[1]}\[.*Bucketed: true", plan), plan
 
     before = _table_state(spark, tables)
     sink(batch, 0)
